@@ -36,6 +36,7 @@ object GraftExtensions {
     functions.Md5Hash32.injection,
     functions.Md5NibbleMsbs.injection,
     functions.QuantizeInt8.injection,
+    functions.SortedIntersectCount.injection,
     functions.VectorDotLong.injection,
     functions.VectorDotRaw.injection,
   )

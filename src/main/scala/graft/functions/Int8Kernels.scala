@@ -13,10 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * [[QuantizeInt8]] maps a float/double vector to its symmetric int8
   * code vector round(xᵢ/‖x‖·127) in ONE pass: the exact-decimal norm²
-  * (the same BigDecimal path as [[VectorDotExact]]) is computed once per
-  * row inside the kernel, then every element is scaled and
-  * half-away-from-zero rounded — identical semantics to the previous
-  * `transform(e, x => round(x/nrm*127, 0))` formulation, with two
+  * (the same allocation-free [[Exact16]] sum as [[VectorDotExact]]) is
+  * computed once per row inside the kernel, then every element is
+  * scaled and half-away-from-zero rounded — identical semantics to the
+  * previous `transform(e, x => round(x/nrm*127, 0))` formulation, with two
   * differences that only matter for speed: the loop is a compiled java
   * loop instead of an interpreted lambda, and the norm CANNOT be
   * re-inlined per element. (The lambda version had exactly that trap:
@@ -56,14 +56,14 @@ object QuantizeInt8 {
   /** One-pass norm + quantize; see class doc for the exact semantics. */
   def quantize(a: ArrayData, aFloat: Boolean): ArrayData = {
     val n = a.numElements()
-    var acc = JBigDecimal.ZERO
+    val acc = new Exact16.Sum(FnName)
     var i = 0
     while (i < n) {
       val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      acc = acc.add(JBigDecimal.valueOf(x * x).setScale(16, RoundingMode.HALF_UP))
+      acc.add(x * x, i)
       i += 1
     }
-    val nrm = math.sqrt(acc.doubleValue())
+    val nrm = math.sqrt(acc.toDouble)
     val out = new Array[Long](n)
     // all-zero vector: x/nrm would be NaN and BigDecimal.valueOf(NaN)
     // throws — emit the all-zero code vector instead (the Column
@@ -84,7 +84,7 @@ object QuantizeInt8 {
   private val FnName = "graft_quantize_int8"
 
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => QuantizeInt8(exprs.head))
+    (FnName, exprs => QuantizeInt8(KernelArgs.exactly(FnName, 1, exprs).head))
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -123,7 +123,10 @@ object VectorDotLong {
   private val FnName = "graft_vector_dot_long"
 
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => VectorDotLong(exprs.head, exprs(1)))
+    (FnName, exprs => {
+      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
+      VectorDotLong(a, b)
+    })
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -26,11 +24,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Exactness contract (the d3/s2 oracle hash-match property): per
   * element the product is an IEEE double multiply quantized to DECIMAL
-  * scale 16 via BigDecimal.valueOf + HALF_UP — the same path Spark's
-  * `Cast(double→decimal)` and the oracle's
+  * scale 16 exactly as BigDecimal.valueOf + HALF_UP would — the path
+  * Spark's `Cast(double→decimal)` and the oracle's
   * `SUM(CAST(x*w AS DECIMAL(32,16)))` take — summed exactly; the sign
   * test is on the exact decimal (`proj >= 0` in the oracle). Identical
   * bucket values to the literal-plane formulation by construction.
+  * [[Exact16]] does the quantize-and-sum in a long, so only elements
+  * near a rounding boundary allocate; a NaN or infinite product raises
+  * an IllegalArgumentException naming the function and element index.
+  *
+  * `l`, `p` and `dims` are checked at analysis to be foldable positive
+  * ints with `p ≤ 63` (the bucket is a `p`-bit long; `1L << 64` would
+  * silently wrap).
   */
 case class LshBucketsExact(child: Expression, l: Int, p: Int, dims: Int)
   extends UnaryExpression {
@@ -59,21 +64,22 @@ object LshBucketsExact {
   def buckets(a: ArrayData, aFloat: Boolean, l: Int, p: Int, dims: Int): ArrayData = {
     val n = math.min(dims, a.numElements())
     val out = new Array[Long](l)
+    val acc = new Exact16.Sum(FnName)
     var t = 0
     while (t < l) {
       var bucket = 0L
       var pp = 0
       while (pp < p) {
         val base = (t.toLong * p + pp) * dims
-        var acc = JBigDecimal.ZERO
+        acc.reset()
         var d = 0
         while (d < n) {
           val x = if (aFloat) a.getFloat(d).toDouble else a.getDouble(d)
           val w = (((base + d) * 1103515245L + 12345L) % 2097152L).toDouble / 2097152.0 - 0.5
-          acc = acc.add(JBigDecimal.valueOf(x * w).setScale(16, RoundingMode.HALF_UP))
+          acc.add(x * w, d)
           d += 1
         }
-        if (acc.signum() >= 0) bucket |= 1L << pp
+        if (acc.signum >= 0) bucket |= 1L << pp
         pp += 1
       }
       out(t) = bucket
@@ -84,14 +90,16 @@ object LshBucketsExact {
 
   private val FnName = "graft_lsh_buckets_exact"
 
-  private def litInt(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue()
-
   /** (name, builder) for session-registry or
     * [[graft.GraftExtensions]] injection. */
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => LshBucketsExact(
-      exprs.head, litInt(exprs(1)), litInt(exprs(2)), litInt(exprs(3))))
+    (FnName, exprs => {
+      val Seq(a, l, p, dims) = KernelArgs.exactly(FnName, 4, exprs)
+      LshBucketsExact(a,
+        KernelArgs.positiveInt(FnName, "l", l, Int.MaxValue),
+        KernelArgs.positiveInt(FnName, "p", p, 63),
+        KernelArgs.positiveInt(FnName, "dims", dims, Int.MaxValue))
+    })
 
   /** Register in the session's function registry (idempotent) — same
     * injection seam as [[VectorDotExact.register]]. */

@@ -64,7 +64,7 @@ object Md5Hash32 {
   /** (name, builder) for session-registry or
     * [[graft.GraftExtensions]] injection. */
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => Md5Hash32(exprs.head))
+    (FnName, exprs => Md5Hash32(KernelArgs.exactly(FnName, 1, exprs).head))
 
   /** Register in the session's function registry (idempotent) — same
     * injection seam as [[VectorDotExact.register]]. */
@@ -128,7 +128,7 @@ object Md5NibbleMsbs {
   private val FnName = "graft_md5_nibble_msbs"
 
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => Md5NibbleMsbs(exprs.head))
+    (FnName, exprs => Md5NibbleMsbs(KernelArgs.exactly(FnName, 1, exprs).head))
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -71,7 +71,10 @@ object SortedIntersectCount {
   private val FnName = "graft_sorted_intersect_count"
 
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => SortedIntersectCount(exprs.head, exprs(1)))
+    (FnName, exprs => {
+      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
+      SortedIntersectCount(a, b)
+    })
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -15,19 +13,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Semantics: per element, multiply in double (float→double widening is
   * exact, the multiply is IEEE-deterministic), quantize the product to
-  * DECIMAL scale 16 via the same BigDecimal.valueOf + HALF_UP path
-  * Spark's `Cast(double→decimal)` uses, then sum EXACTLY and convert the
-  * final decimal to double. This is the order-independent exact sum the
-  * DuckDB oracles compute with `SUM(CAST(x*y AS DECIMAL(32,16)))` — note
-  * it is *more* faithful to that oracle than a per-row
+  * DECIMAL scale 16 exactly as BigDecimal.valueOf + HALF_UP (the path
+  * Spark's `Cast(double→decimal)` uses) would, then sum EXACTLY and
+  * convert the final decimal to double. This is the order-independent
+  * exact sum the DuckDB oracles compute with
+  * `SUM(CAST(x*y AS DECIMAL(32,16)))` — note it is *more* faithful to
+  * that oracle than a per-row
   * `aggregate(zip_with(...), +)` fold, whose decimal Add chain is
   * precision-capped at 38 and silently drops to scale 15 each step.
   *
   * Why a custom Expression (the brief's extension path b): the built-in
   * formulation evaluates interpreted lambda closures and allocates a
   * BigDecimal pair per element; this compiles to one static call inside
-  * whole-stage codegen. Preferred over a Scala UDF: no encoder ser/deser,
-  * framework null-safety, participates in codegen.
+  * whole-stage codegen, and [[Exact16]] quantizes and sums in a long,
+  * so only the few elements near a rounding boundary allocate. A NaN or
+  * infinite product raises an IllegalArgumentException naming the
+  * function and the element index. Preferred over a Scala UDF: no
+  * encoder ser/deser, framework null-safety, participates in codegen.
   */
 case class VectorDotExact(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -55,29 +57,32 @@ case class VectorDotExact(left: Expression, right: Expression)
 object VectorDotExact {
   /** Exact decimal-quantized sum of element products; see class doc. */
   def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    var acc = JBigDecimal.ZERO
+    val acc = new Exact16.Sum(FnName)
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
       val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
       val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      acc = acc.add(JBigDecimal.valueOf(x * y).setScale(16, RoundingMode.HALF_UP))
+      acc.add(x * y, i)
       i += 1
     }
-    acc.doubleValue()
+    acc.toDouble
   }
 
   private val FnName = "graft_vector_dot_exact"
+
+  /** (name, builder) for session-registry or
+    * [[graft.GraftExtensions]] injection. */
+  def injection: (String, Seq[Expression] => Expression) =
+    (FnName, exprs => {
+      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
+      VectorDotExact(a, b)
+    })
 
   /** Register in the session's function registry (idempotent) — the
     * public seam for injecting a custom Expression without touching
     * `private[sql]` Column internals; production deployments would use
     * `SparkSessionExtensions.injectFunction` at session build instead. */
-  /** (name, builder) for session-registry or
-    * [[graft.GraftExtensions]] injection. */
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => VectorDotExact(exprs.head, exprs(1)))
-
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       FnName, injection._2, "built-in")

@@ -23,9 +23,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * (see `Similarity.assignDelta`'s near-dup probe).
   *
   * Why it is fast: one static call inside whole-stage codegen, zero
-  * allocations — versus a BigDecimal.valueOf + setScale pair PER ELEMENT
-  * in the exact kernel (measured: the s20 serve path is dominated by
-  * exactly those allocations).
+  * allocations, one multiply-add per element. The exact kernel is now
+  * allocation-free too ([[Exact16]]'s long fixed point), but still does a
+  * 128-bit multiply and a boundary test per element and takes BigDecimal
+  * for the 2–5% of elements near a rounding boundary — several times
+  * this kernel's cost per row, so the band pre-filter still pays.
   */
 case class VectorDotRaw(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -70,7 +72,10 @@ object VectorDotRaw {
   /** (name, builder) for session-registry or
     * [[graft.GraftExtensions]] injection. */
   def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => VectorDotRaw(exprs.head, exprs(1)))
+    (FnName, exprs => {
+      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
+      VectorDotRaw(a, b)
+    })
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

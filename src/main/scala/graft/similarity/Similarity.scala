@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.VectorDotExact
+import graft.functions.{Exact16, VectorDotExact}
 import graft.sources.Tables
 
 /** Similarity search over embedding columns (builder brief: ANN over
@@ -56,12 +56,14 @@ object Similarity {
   private def norm2Col(e: Column): Column = dotCol(e, e)
 
   /** Spread a vector frame across the session's full parallelism before
-    * a BigDecimal-dot-heavy stage. The gate-scale parquet files are
+    * an exact-dot-heavy stage. The gate-scale parquet files are
     * single-row-group (scan = 1 task), which serializes exact-decimal
     * kernels onto one thread; this tiny shuffle (the corpus frames are
     * sub-MB at gate SFs, and at production scale the scan is already
     * many-partition so the no-op cost is one hash exchange) unlocks the
-    * full compute width — measured 8× on the s20 fit. Only for decimal-
+    * full compute width — measured 8× on the s20 fit while the exact dot
+    * still allocated BigDecimals per element, and not re-measured since
+    * [[Exact16]] made it allocation-free. Only for decimal-
     * kernel stages: NOTES round-11 records the negative result for
     * cheap text expressions. Results are partitioning-independent
     * throughout the engine. Width-gated (ADVICE r11): when the scan is
@@ -1324,8 +1326,9 @@ object Similarity {
       muArr(r.getInt(0)) = r.getAs[java.math.BigDecimal](1).doubleValue)
     // ONE-PASS upper-triangle covariance (round 11): each partition
     // folds its vectors into dims·(dims+1)/2 exact decimal sums —
-    // per product, double multiply then BigDecimal.valueOf +
-    // setScale(16, HALF_UP), the SAME quantization the old
+    // per product, double multiply then the Exact16 quantization
+    // (BigDecimal.valueOf + setScale(16, HALF_UP), in a long), the SAME
+    // quantization the old
     // explode→self-join→`(xc·xc).cast(DECIMAL(32,16))`→sum plan and the
     // oracle's SUM(CAST(x AS DECIMAL(32,16))) apply, and exact adds are
     // order-independent, so the totals are bit-identical to that plan
@@ -1333,7 +1336,7 @@ object Similarity {
     // the corpus-sized n·dims² row explosion, its shuffle, and two
     // checkpoints all disappear. ≤ numShufflePartitions partial rows of
     // triangle strings reach the driver — metadata, like cMat itself.
-    // The spread widens the BigDecimal-heavy fold (NOTES round-11
+    // The spread widens the exact-decimal fold (NOTES round-11
     // rule: repartition before exact-decimal kernels — measured 8× on
     // s20; never before cheap text expressions; width-gated no-op once
     // the scan is already at session parallelism).
@@ -1343,22 +1346,20 @@ object Similarity {
       .as[Array[Double]]
       .mapPartitions { it =>
         val m = dims * (dims + 1) / 2
-        val acc = Array.fill(m)(java.math.BigDecimal.ZERO)
+        val acc = Array.fill(m)(new Exact16.Sum("pcaPower"))
         it.foreach { v =>
           var idx = 0
           var i = 0
           while (i < dims) {
             var j = i
             while (j < dims) {
-              acc(idx) = acc(idx).add(
-                java.math.BigDecimal.valueOf(v(i) * v(j))
-                  .setScale(16, java.math.RoundingMode.HALF_UP))
+              acc(idx).add(v(i) * v(j), j)
               idx += 1; j += 1
             }
             i += 1
           }
         }
-        Iterator.single(acc.map(_.toPlainString))
+        Iterator.single(acc.map(_.toBigDecimal.toPlainString))
       }.collect()
     // C is a dims×dims METADATA matrix (4096 doubles) — the iterations
     // run driver-side on the merged triangle (the clusterCenters
@@ -1384,29 +1385,28 @@ object Similarity {
         i += 1
       }
     }
-    // valueOf (shortest-string repr) vs `new BigDecimal(x)` (exact binary
-    // expansion): DuckDB's CAST(x AS DECIMAL(32,16)) rounds the exact
-    // value, so a double whose 17th significant digit straddles a
-    // rounding boundary could differ by 1 ulp at scale 16 (ADVICE r7 —
-    // accepted). valueOf is kept deliberately: it matches SPARK's own
-    // double→decimal cast (Decimal.apply goes through the string repr),
-    // so the driver-checked engine/oracle pair (s18 vs its SQL) is the
-    // one place the discrepancy could surface — and it is hash-green at
-    // both SFs; covariance entries are sums of ≤1e4 products, far from
-    // the 17-digit boundary in practice.
-    def dec16(x: Double): java.math.BigDecimal =
-      java.math.BigDecimal.valueOf(x).setScale(16, java.math.RoundingMode.HALF_UP)
+    // Exact16 rounds valueOf's shortest-string repr, not the exact binary
+    // expansion (`new BigDecimal(x)`): DuckDB's CAST(x AS DECIMAL(32,16))
+    // rounds the exact value, so a double whose 17th significant digit
+    // straddles a rounding boundary could differ by 1 ulp at scale 16
+    // (ADVICE r7 — accepted). valueOf is kept deliberately: it matches
+    // SPARK's own double→decimal cast (Decimal.apply goes through the
+    // string repr), so the driver-checked engine/oracle pair (s18 vs its
+    // SQL) is the one place the discrepancy could surface — and it is
+    // hash-green at both SFs; covariance entries are sums of ≤1e4
+    // products, far from the 17-digit boundary in practice.
     var v = Array.fill(dims)(1.0 / dims)
     for (_ <- 1 to iters) {
       val w = Array.tabulate(dims) { i =>
-        var acc = java.math.BigDecimal.ZERO
+        val acc = new Exact16.Sum("pcaPower")
         var j = 0
-        while (j < dims) { acc = acc.add(dec16(cMat(i)(j) * v(j))); j += 1 }
-        acc.doubleValue()
+        while (j < dims) { acc.add(cMat(i)(j) * v(j), j); j += 1 }
+        acc.toDouble
       }
-      var nAcc = java.math.BigDecimal.ZERO
-      w.foreach(x => nAcc = nAcc.add(dec16(math.abs(x))))
-      val n = nAcc.doubleValue()
+      val nAcc = new Exact16.Sum("pcaPower")
+      var d = 0
+      while (d < dims) { nAcc.add(math.abs(w(d)), d); d += 1 }
+      val n = nAcc.toDouble
       v = w.map(_ / n)
     }
     import spark.implicits._

@@ -243,20 +243,37 @@ class SimilaritySpec extends SparkSpec {
     // reference: explode + decimal SUM aggregate — Spark's sum over
     // DECIMAL(32,16) keeps scale 16 exactly, matching the DuckDB oracles
     // (unlike a per-row fold, whose Add chain drops to scale 15)
-    val pairs = emb.as("a").crossJoin(emb.limit(3).select(
-      col("vec_id").as("bid"), col("embedding").as("be")))
-    val fast = pairs.select(col("a.vec_id"), col("bid"),
-        graft.functions.VectorDotExact(col("a.embedding"), col("be")).as("dot"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ref = pairs
-      .select(col("a.vec_id"), col("bid"),
-        posexplode(zip_with(col("a.embedding"), col("be"),
-          (x, y) => (x.cast("double") * y.cast("double")).cast(DecimalType(32, 16)))))
-      .groupBy("vec_id", "bid")
-      .agg(sum(col("col")).cast("double").as("dot"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(fast.nonEmpty && fast.keySet == ref.keySet)
-    fast.foreach { case (k, v) => assert(v == ref(k), s"$k: $v != ${ref(k)}") }
+    def assertExact(emb: org.apache.spark.sql.DataFrame): Unit = {
+      val pairs = emb.as("a").crossJoin(emb.limit(3).select(
+        col("vec_id").as("bid"), col("embedding").as("be")))
+      val fast = pairs.select(col("a.vec_id"), col("bid"),
+          graft.functions.VectorDotExact(col("a.embedding"), col("be")).as("dot"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val ref = pairs
+        .select(col("a.vec_id"), col("bid"),
+          posexplode(zip_with(col("a.embedding"), col("be"),
+            (x, y) => (x.cast("double") * y.cast("double")).cast(DecimalType(32, 16)))))
+        .groupBy("vec_id", "bid")
+        .agg(sum(col("col")).cast("double").as("dot"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(fast.nonEmpty && fast.keySet == ref.keySet)
+      fast.foreach { case (k, v) => assert(v == ref(k), s"$k: $v != ${ref(k)}") }
+    }
+    assertExact(emb)
+    assertExact(emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")))
+    // 0.02065591301277825 (also the double product of the floats
+    // -0.16808848f and -0.12288714f) prints as an exact half unit at
+    // scale 16 while its binary value lies just below it: HALF_UP on the
+    // printed decimal (Spark's cast, and the kernel's BigDecimal
+    // fallback) rounds up where rounding the binary value would round down
+    import spark.implicits._
+    val half = 0.02065591301277825
+    assert(graft.functions.Exact16.units(half) == 206559130127783L)
+    assertExact(Seq(
+      (0L, Array(half, 0.25, -0.125)),
+      (1L, Array(1.0, 1.0, 1.0)),
+      (2L, Array(-0.16808848f.toDouble, half, 0.5)),
+      (3L, Array(-0.12288714f.toDouble, 0.75, 3.0))).toDF("vec_id", "embedding"))
   }
 
   test("annIvf recall: probes the right clusters, overlaps brute-force top-5") {
