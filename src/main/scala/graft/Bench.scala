@@ -38,10 +38,7 @@ object Bench {
     * build, so a k≥3 median reads warm-memo state). */
   private def runIsolated(chunk: Int): Unit = {
     import scala.jdk.CollectionConverters._
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.selected().map(_.name).sorted
     val javaBin = System.getProperty("java.home") + "/bin/java"
     // replicate this JVM's own flags (add-opens, -Xmx, -D...) verbatim
     val jvmArgs = java.lang.management.ManagementFactory
@@ -361,26 +358,11 @@ object Bench {
 
   private def runInProcess(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // some SF dirs store events.ts as TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The default 100-entry codegen class cache thrashes under a
-      // 266-query pass (hundreds of distinct generated classes): every
-      // eviction re-pays Janino compilation AND the C2 JIT warmup, and
-      // the storms land on whole queries (measured: s25 at 19.4 s wall
-      // / 208 CPU-s / 0.1 s GC in one full pass vs 1.6 s in a 20-query
-      // pass — recompilation across 32 threads, not query work; the
-      // regime probe's own mid-pass 0.14→0.5 s eviction signature
-      // confirmed the mechanism). Static conf — must be set before the
-      // first session. 2000 entries ≈ the registry's distinct-plan
-      // count with headroom; metaspace cost is tens of MB.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    // dev-only subset filter (SPARK_GRAFT_ONLY), shared with Verify —
+    // the driver never sets it, so the gate benches everything
+    val only = SparkEntry.only()
+    def selected(name: String) = only.forall(_.contains(name))
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup of EVERY query on the tiny SF: absorbs one-time
     // JIT/whole-stage-codegen cost (several seconds for the plans with
@@ -388,11 +370,6 @@ object Bench {
     // first. The subplan memo keys on the sf-dir, so the timed pass below
     // still pays its own shared builds at full scale — only compilation
     // is absorbed, never work.
-    // dev-only subset filter (comma-separated query names), mirroring
-    // Verify's — the driver never sets it, so the gate benches everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    def selected(name: String) = only.forall(_.contains(name))
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
       SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (_, fn) =>

@@ -15,12 +15,14 @@ import graft.sources.Tables
 import graft.streaming.EventStream
 import graft.text.TextStats
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 is registered here as a
-  * named query over the sf-dir parquet tables, with matching DuckDB oracle
-  * SQL in [[oracleSql]]. Column names are aliased identically on both
-  * sides (the driver sorts columns by name before hashing).
+  * named query over the sf-dir parquet tables: one [[QuerySpec]] row per
+  * query carrying its engine dataflow and its DuckDB oracle SQL
+  * ([[specs]]; [[queries]] and [[oracleSql]] are views of it). Column
+  * names are aliased identically on both sides (the driver sorts columns
+  * by name before hashing).
   */
 object SparkEntry {
   /** Flagship: multi-term TF-IDF cosine search over `documents`
@@ -67,124 +69,26 @@ object SparkEntry {
   // the oracle side. Integer columns have hashed green in all five
   // rounds. The library functions themselves still return DECIMAL(18,6)
   // (the friendly API, spec-tested); only this registry projection and
-  // the oracle twins convert.
+  // the oracle twins convert. Each QuerySpec row lists its own decimal
+  // columns (`microCols`), the single source of truth for both sides.
   // ------------------------------------------------------------------
-
-  /** Decimal output columns per query — the single source of truth for
-    * both [[microize]] (engine side, drift-guarded against the actual
-    * schema) and [[microizeSql]] (oracle side). */
-  private[graft] val microCols: Map[String, Seq[String]] = Map(
-    "d3_lsh_near_dups" -> Seq("jaccard"),
-    "d4_ngram_jaccard" -> Seq("jaccard"),
-    "d9_decontaminate" -> Seq("overlap_frac"),
-    "d10_minhash_estimate" -> Seq("jaccard", "jaccard_est"),
-    "d12_repeated_spans" -> Seq("shared_frac"),
-    "d13_span_novelty" -> Seq("novel_frac"),
-    "d15_source_contamination" -> Seq("jaccard"),
-    "d16_lsh_tuning" -> Seq("s", "p_candidate"),
-    "d17_prefix_join" -> Seq("jaccard"),
-    "d18_dup_rate_by_source" -> Seq("exact_rate", "near_rate"),
-    "d19_containment" -> Seq("containment"),
-    "d20_threshold_curve" -> Seq("t"),
-    "g10_clustering_coeff" -> Seq("coeff"),
-    "g13_item_jaccard" -> Seq("jaccard"),
-    "g15_assortativity" -> Seq("r"),
-    "g16_reciprocity" -> Seq("reciprocity"),
-    "g17_adamic_adar" -> Seq("aa"),
-    "g18_degree_powerlaw" -> Seq("slope", "intercept"),
-    "m3_label_metrics" -> Seq("precision", "recall", "fpr", "f1"),
-    "m4_weighted_metrics" -> Seq("accuracy", "weighted_precision",
-      "weighted_recall", "weighted_f1", "weighted_fpr"),
-    "m8_w2v_knn" -> Seq("cos"),
-    "m9_cv_metrics" -> Seq("accuracy", "weighted_precision",
-      "weighted_recall", "weighted_f1", "weighted_fpr"),
-    "m12_logreg_gd" -> Seq("p"),
-    "m22_model_weights" -> Seq("w1", "w2", "b"),
-    "m24_temp_scaling" -> Seq("avg_nll", "avg_brier"),
-    "m25_target_encoding" -> Seq("enc_oof", "prior_oof"),
-    "m26_group_metrics" -> Seq("acc", "tpr", "fpr", "ppr"),
-    "m27_assoc_rules" -> Seq("support", "confidence", "lift"),
-    "s26_nprobe_recall" -> Seq("recall"),
-    "q88_user_ewma" -> Seq("ewma", "decay_sum"),
-    "s24_sq8_recall" -> Seq("recall"),
-    "s25_mrl_recall" -> Seq("recall"),
-    "x27_weighted_sample" -> Seq("key"),
-    "m13_calibration" -> Seq("mean_p", "pos_rate"),
-    "m29_decile_lift" -> Seq("resp_rate", "cum_lift", "cum_gain"),
-    "m30_ks_drift" -> Seq("ks"),
-    "m14_pr_curve" -> Seq("precision", "recall"),
-    "m15_auc" -> Seq("auc"),
-    "m16_chi2_features" -> Seq("chi2"),
-    "m17_ndcg" -> Seq("dcg", "idcg", "ndcg"),
-    "m18_mcc" -> Seq("mcc"),
-    "q37_kmv_distinct" -> Seq("kmv_est"),
-    "q40_grouped_corr" -> Seq("corr"),
-    "q100_grouped_ols" -> Seq("slope", "intercept", "r2"),
-    "q49_histogram" -> Seq("cdf"),
-    "q53_hist_quantiles" -> Seq("q"),
-    "q56_ab_lift" -> Seq("rate_a", "rate_b", "lift", "z"),
-    "q57_volume_drift" -> Seq("cum_dev", "drawdown"),
-    "q59_markov_transitions" -> Seq("p"),
-    "q64_hll_distinct" -> Seq("hll_est", "rel_err"),
-    "q66_kmv_setops" -> Seq("jaccard", "jaccard_est", "union_est"),
-    "q67_ntile" -> Seq("pct_rank", "cume"),
-    "q69_hll_windows" -> Seq("hll_est", "rel_err"),
-    "s1_knn_brute" -> Seq("cos"),
-    "s2_ann_lsh" -> Seq("cos"),
-    "s3_near_dup_pairs" -> Seq("cos"),
-    "s4_ann_ivf" -> Seq("cos"),
-    "s6_label_centroids" -> Seq("centroid"),
-    "s7_ann_batch" -> Seq("cos"),
-    "s11_knn_graph" -> Seq("cos"),
-    "s13_hard_negatives" -> Seq("cos"),
-    "s14_ann_recall" -> Seq("recall"),
-    "s15_ann_pq" -> Seq("adc"),
-    "s19_ann_twostage" -> Seq("adc", "cos"),
-    "s23_mmr_rerank" -> Seq("mmr"),
-    "s16_mips" -> Seq("ip"),
-    "s17_filtered_ann" -> Seq("cos"),
-    "s18_pca_power" -> Seq("loading"),
-    "t4_bm25" -> Seq("score"),
-    "t6_more_like_this" -> Seq("score"),
-    "t8_bm25_batch" -> Seq("score"),
-    "t9_hybrid_rrf" -> Seq("rrf"),
-    "t10_ql_search" -> Seq("score"),
-    "t11_rm3_search" -> Seq("score"),
-    "x14_unigram_logprob" -> Seq("sum_logp", "avg_logp"),
-    "x15_ppl_buckets" -> Seq("lo", "hi"),
-    "x16_bigram_logprob" -> Seq("sum_logp", "avg_logp"),
-    "x17_source_profile" -> Seq("en_frac"),
-    "x18_vocab_coverage" -> Seq("coverage"),
-    "x20_source_kl" -> Seq("kl"),
-    "x22_zipf_slope" -> Seq("slope", "intercept"),
-    "x23_heaps_law" -> Seq("beta", "log_k"),
-    "x25_js_divergence" -> Seq("js"),
-    "x29_dsir_weights" -> Seq("logw"),
-    "t14_ndcg_eval" -> Seq("dcg", "idcg", "ndcg", "rr"),
-    "s27_silhouette" -> Seq("mean_s"),
-    "m28_w2v_analogy" -> Seq("cos"),
-    "g24_modularity" -> Seq("q_contrib"),
-    "g27_betweenness" -> Seq("btw"),
-    "x31_bpe_encode" -> Seq("chars_per_token"),
-  )
 
   /** Engine-side projection: every DECIMAL output column → BIGINT
     * micro-units (×1e6, exact — all such columns are 6-dp-quantized at
     * birth, scale ≤ 6). Fails LOUDLY if the actual decimal column set
-    * drifts from [[microCols]] (which the oracle wrapper consumes), so a
-    * drift can never surface as a silent hash mismatch. */
-  private def microize(name: String, df: DataFrame): DataFrame = {
+    * drifts from the row's `microCols` (which the oracle wrapper
+    * consumes), so a drift can never surface as a silent hash mismatch. */
+  private def microize(q: QuerySpec, df: DataFrame): DataFrame = {
     val dec = df.schema.fields.collect {
       case f if f.dataType.isInstanceOf[DecimalType] =>
         val d = f.dataType.asInstanceOf[DecimalType]
         require(d.scale <= 6,
-          s"$name.${f.name}: decimal scale ${d.scale} > 6 — ×1e6 would not be exact")
+          s"${q.name}.${f.name}: decimal scale ${d.scale} > 6 — ×1e6 would not be exact")
         f.name
     }.toSeq
-    val expected = microCols.getOrElse(name, Nil)
-    require(dec.sorted == expected.sorted,
-      s"$name: decimal output columns $dec drifted from SparkEntry.microCols " +
-        s"$expected — update the map and the oracle wrapper together")
+    require(dec.sorted == q.microCols.sorted,
+      s"${q.name}: decimal output columns $dec drifted from its QuerySpec " +
+        s"microCols ${q.microCols} — update the row")
     if (dec.isEmpty) df
     else df.select(df.schema.fields.map { f =>
       f.dataType match {
@@ -198,61 +102,84 @@ object SparkEntry {
   /** Oracle-side twin of [[microize]]: wrap the SQL so the same columns
     * come back as BIGINT micro-units (DuckDB decimal×int is exact; the
     * cast of an integral decimal to BIGINT is exact). */
-  private def microizeSql(name: String, sql: String): String =
-    microCols.get(name).filter(_.nonEmpty).fold(sql) { cols =>
+  private def microizeSql(cols: Seq[String], sql: String): String =
+    if (cols.isEmpty) sql
+    else {
       val rep = cols.map(c => s"""CAST("$c" * 1000000 AS BIGINT) AS "$c"""")
         .mkString(", ")
       s"SELECT * REPLACE ($rep) FROM (\n$sql\n) graft_micro"
     }
 
+  /** A row's engine side as the driver hashes it. */
+  def run(q: QuerySpec)(s: SparkSession, dir: String): DataFrame =
+    microize(q, q.run(s, dir))
+
+  /** A row's oracle SQL as the driver runs it. Renders the SQL, so call it
+    * only after the row's query has run. */
+  def oracle(q: QuerySpec): String = microizeSql(q.microCols, q.oracle())
+
+  /** Every registered query, one row each. Building it renders no SQL;
+    * a name registered twice fails here, naming it. */
+  def specs: Seq[QuerySpec] = QuerySpec.unique(
+    Relational.specs ++ AsofJoin.specs ++ SkewJoin.specs ++ Upsert.specs ++
+      Layout.specs ++ Sketch.specs ++ Graph.specs ++ TextStats.specs ++
+      Dedup.specs ++ Similarity.specs ++ EventStream.specs ++ Classify.specs ++
+      Embed.specs ++ LogRegGd.specs ++ AssocRules.specs ++ Multimodal.specs ++
+      Rank.specs ++ tfidfSpecs)
+
+  /** Driver contract: query name → engine dataflow. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (n, fn) =>
-      n -> ((s: SparkSession, d: String) => microize(n, fn(s, d)))
+    specs.map(q => q.name -> (run(q) _)).toMap
+
+  /** Driver contract: query name → oracle SQL. Renders every oracle, so
+    * read it after the queries run. */
+  def oracleSql: Map[String, String] =
+    specs.map(q => q.name -> oracle(q)).toMap
+
+  /** The dev-only `SPARK_GRAFT_ONLY` subset: comma-separated query names,
+    * None for the full registry (the driver never sets it). A name that
+    * is not registered fails loudly, so a typo cannot turn into an empty
+    * run that "passes". */
+  def only(raw: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Option[Set[String]] =
+    raw.map { r =>
+      val names = r.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$r' selects no query")
+      val unknown = names -- specs.map(_.name)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unregistered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
     }
 
-  def oracleSql: Map[String, String] =
-    rawOracleSql.map { case (n, sql) => n -> microizeSql(n, sql) }
+  /** The registry rows `only` selects, in registry order. */
+  def selected(names: Option[Set[String]] = only()): Seq[QuerySpec] =
+    specs.filter(q => names.forall(_.contains(q.name)))
 
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ AsofJoin.queries ++ SkewJoin.queries ++ Upsert.queries ++ Layout.queries ++ Sketch.queries ++ Graph.queries ++ TextStats.queries ++ Dedup.queries ++
-      Similarity.queries ++ EventStream.queries ++ Classify.queries ++
-      Embed.queries ++ LogRegGd.queries ++ AssocRules.queries ++ Multimodal.queries ++ Rank.queries ++
-      Map[String, (SparkSession, String) => DataFrame](
-      "t1_tfidf_single" -> ((s: SparkSession, dir: String) =>
-        TfIdf.searchSingle(cachedPostings(s, dir), "spark")),
-      "t2_tfidf_multi" -> ((s: SparkSession, dir: String) => {
-        val p = cachedPostings(s, dir)
-        TfIdf.searchMulti(p, TfIdf.docNorms(p), searchTerms)
-      }),
-      // same oracle as t1, but served from the engine-written parquet
-      // index (term-range-partitioned; the point lookup prunes row
-      // groups) — covers the persisted-index read path end to end
-      "t3_tfidf_persisted" -> ((s: SparkSession, dir: String) => {
-        val path = graft.sources.Artifacts.path(s"tfidf_idx_${Tables.norm(dir)}")
-        // index write amortized once per (session, sf-dir) — the
-        // persisted-read path is the operator (q61's discipline)
-        graft.plans.Materialized(s, s"tfidf_idx_layout:${Tables.norm(dir)}") {
-          TfIdf.writeIndex(cachedPostings(s, dir), path)
-          s.range(1).toDF("ok")
-        }
-        TfIdf.searchSingle(TfIdf.readIndex(s, path), "spark")
-      }),
-      // single-term search over the STEMMED index: the query literal is
-      // stemmed by the same shared rule set at plan-build time
-      // ("tables" → "table"), so index and query can never drift
-      "t15_stemmed_search" -> ((s: SparkSession, dir: String) =>
-        TfIdf.searchSingle(cachedStemmedPostings(s, dir),
-          graft.text.Tokenize.stemString("tables"))),
-    )
-
-  private def rawOracleSql: Map[String, String] =
-    Relational.oracles ++ AsofJoin.oracles ++ SkewJoin.oracles ++ Upsert.oracles ++ Layout.oracles ++ Sketch.oracles ++ Graph.oracles ++ TextStats.oracles ++ Dedup.oracles ++
-      Similarity.oracles ++ EventStream.oracles ++ Classify.oracles ++
-      Embed.oracles ++ LogRegGd.oracles ++ AssocRules.oracles ++ Multimodal.oracles ++ Rank.oracles ++ Map(
-      "t1_tfidf_single" -> TfIdf.searchSingleSql("spark"),
-      "t2_tfidf_multi" -> TfIdf.searchMultiSql(searchTerms),
-      "t3_tfidf_persisted" -> TfIdf.searchSingleSql("spark"),
-      "t15_stemmed_search" ->
-        TfIdf.stemmedSearchSingleSql(graft.text.Tokenize.stemString("tables")),
-    )
+  private def tfidfSpecs: Seq[QuerySpec] = Seq(
+    QuerySpec("t1_tfidf_single", (s, dir) => TfIdf.searchSingle(cachedPostings(s, dir), "spark"),
+      () => TfIdf.searchSingleSql("spark")),
+    QuerySpec("t2_tfidf_multi", (s, dir) => {
+      val p = cachedPostings(s, dir)
+      TfIdf.searchMulti(p, TfIdf.docNorms(p), searchTerms)
+    }, () => TfIdf.searchMultiSql(searchTerms)),
+    // same oracle as t1, but served from the engine-written parquet
+    // index (term-range-partitioned; the point lookup prunes row
+    // groups) — covers the persisted-index read path end to end
+    QuerySpec("t3_tfidf_persisted", (s, dir) => {
+      val path = graft.sources.Artifacts.path(s"tfidf_idx_${Tables.norm(dir)}")
+      // index write amortized once per (session, sf-dir) — the
+      // persisted-read path is the operator (q61's discipline)
+      graft.plans.Materialized(s, s"tfidf_idx_layout:${Tables.norm(dir)}") {
+        TfIdf.writeIndex(cachedPostings(s, dir), path)
+        s.range(1).toDF("ok")
+      }
+      TfIdf.searchSingle(TfIdf.readIndex(s, path), "spark")
+    }, () => TfIdf.searchSingleSql("spark")),
+    // single-term search over the STEMMED index: the query literal is
+    // stemmed by the same shared rule set at plan-build time
+    // ("tables" → "table"), so index and query can never drift
+    QuerySpec("t15_stemmed_search", (s, dir) =>
+      TfIdf.searchSingle(cachedStemmedPostings(s, dir),
+        graft.text.Tokenize.stemString("tables")),
+      () => TfIdf.stemmedSearchSingleSql(graft.text.Tokenize.stemString("tables"))),
+  )
 }

@@ -1,49 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // some SF dirs store events.ts as TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 100-entry default codegen cache thrashes under a full-registry
-      // pass — see the measured storm note in Bench.scala
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    // dev-only subset (SPARK_GRAFT_ONLY); the driver never sets it, so
+    // the gate always runs the full registry. Parsed before the session
+    // starts, so an unregistered name fails fast.
+    val rows = SparkEntry.selected()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Self-contained dump: persisted-fit artifacts (and the oracle SQL
-    // paths that reference them) live NEXT TO the out dir — same parent,
-    // so the gate still survives any concurrent graft JVM's /tmp sweep
-    // (VERDICT r15 #1) — but OUTSIDE the tree the driver's oracle scans
-    // as query dumps: in round 16 `<outDir>/_artifacts` was picked up as
-    // a 268th "query" and recorded as a pyarrow error in
-    // CORRECTNESS_r16.json (VERDICT r16 #2).
-    graft.sources.Artifacts.setRoot(s"${outDir.stripSuffix("/")}_artifacts")
-    // dev-only subset filter (comma-separated query names); the driver
-    // never sets it, so the gate always runs the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    def selected(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    graft.sources.Artifacts.setRoot(artifactsDir(outDir))
+    rows.foreach { q =>
+      try SparkEntry.run(q)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
+    def js(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
@@ -52,19 +32,23 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Subset mode renders the FULL oracle map before filtering, so
-    // cache-resolved oracles (LSH autoP family) for UNSELECTED queries
-    // would trip the render-after-run guard; relax it scoped — selected
-    // LSH oracles still read the cache their own run just seeded, and
-    // the driver's full run (no SPARK_GRAFT_ONLY) keeps the fail-loud
-    // contract untouched.
-    val oracles =
-      if (only.isDefined)
-        graft.similarity.Similarity.withUnseededOracleRender(SparkEntry.oracleSql)
-      else SparkEntry.oracleSql
-    val json = oracles.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // rendered after every selected query ran, and only for those rows:
+    // the render-after-run guard stays fail-loud in subset mode too
+    val json = rows.map(q => s"${js(q.name)}: ${js(SparkEntry.oracle(q))}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Self-contained dump: persisted-fit artifacts (and the oracle SQL
+    * paths that reference them) live NEXT TO the out dir, in the sibling
+    * `<outDir>_artifacts` — same parent, so the gate survives any
+    * concurrent graft JVM's /tmp sweep (VERDICT r15 #1), but OUTSIDE the
+    * tree the driver's oracle scans as query dumps: in round 16
+    * `<outDir>/_artifacts` was picked up as a 268th "query" and recorded
+    * as a pyarrow error in CORRECTNESS_r16.json (VERDICT r16 #2). The
+    * path is normalized first, so a trailing `/` or `//` cannot put the
+    * sibling back inside the tree. */
+  def artifactsDir(outDir: String): String =
+    s"${Paths.get(outDir).toAbsolutePath.normalize}_artifacts"
 }

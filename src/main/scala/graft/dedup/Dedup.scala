@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1618,92 +1619,71 @@ object Dedup {
        |  CAST(round(CAST(SUM(is_near) AS DOUBLE) / count(*), 6) AS DECIMAL(18,6)) AS near_rate
        |FROM flags GROUP BY source ORDER BY source""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d1_exact_dedup" -> ((s: SparkSession, dir: String) =>
-      dupHistogram(Tables.documents(s, dir)).orderBy("n_copies")),
-    "d2_minhash_sig" -> ((s: SparkSession, dir: String) =>
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("d1_exact_dedup", (s, dir) =>
+      dupHistogram(Tables.documents(s, dir)).orderBy("n_copies"), () =>
+      """WITH g AS (SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
+        |           FROM documents GROUP BY md5(text))
+        |SELECT n_copies, count(*) AS n_groups FROM g GROUP BY n_copies ORDER BY n_copies""".stripMargin),
+    QuerySpec("d2_minhash_sig", (s, dir) =>
       cachedLanes(s, dir)
         .select(col("doc_id"),
           concat_ws(",", (0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
-        .orderBy("doc_id")),
-    "d3_lsh_near_dups" -> ((s: SparkSession, dir: String) =>
-      cachedLshPairs(s, dir)),
-    "d4_ngram_jaccard" -> ((s: SparkSession, dir: String) =>
-      ngramJaccardTopFromBase(shingleBase(s, dir))),
-    "d5_simhash" -> ((s: SparkSession, dir: String) =>
-      cachedSimhash(s, dir).orderBy("doc_id")),
-    "d6_simhash_pairs" -> ((s: SparkSession, dir: String) =>
-      simhashPairsFromSig(cachedSimhash(s, dir))),
-    "d7_curation_pipeline" -> ((s: SparkSession, dir: String) =>
-      curationPipelineFromPairs(Tables.documents(s, dir), cachedLshPairs(s, dir))),
-    "d8_dup_clusters" -> ((s: SparkSession, dir: String) =>
-      cachedClusters(s, dir).orderBy("doc_id")),
-    "d11_canonical_docs" -> ((s: SparkSession, dir: String) =>
-      canonicalDocs(Tables.documents(s, dir), cachedClusters(s, dir))),
-    "d9_decontaminate" -> ((s: SparkSession, dir: String) =>
-      decontaminateFromBase(Tables.documents(s, dir),
-        shingleBase(s, dir).select("doc_id", "shh"))),
-    "d10_minhash_estimate" -> minhashJaccardEstimate _,
-    "d12_repeated_spans" -> ((s: SparkSession, dir: String) =>
-      repeatedSpansFromSpans(cachedSpans(s, dir))),
-    "d13_span_novelty" -> ((s: SparkSession, dir: String) =>
-      spanNoveltyFromSpans(cachedSpans(s, dir))),
-    "d14_incremental_ingest" -> ((s: SparkSession, dir: String) =>
-      incrementalIngest(Tables.documents(s, dir))),
-    "d21_near_dup_ingest" -> ((s: SparkSession, dir: String) =>
-      nearDupIngest(s, dir)),
-    "d22_fuzzy_match" -> ((s: SparkSession, dir: String) =>
-      fuzzyNameMatch(Tables.customer(s, dir))),
-    "d15_source_contamination" -> ((s: SparkSession, dir: String) =>
-      crossSourceContamination(Tables.documents(s, dir), cachedSpans(s, dir))),
-    "d16_lsh_tuning" -> ((s: SparkSession, _: String) => lshTuning(s)),
-    "d17_prefix_join" -> ((s: SparkSession, dir: String) =>
-      prefixFilterPairs(shingleBase(s, dir))),
-    "d18_dup_rate_by_source" -> ((s: SparkSession, dir: String) =>
-      dupRateBySource(Tables.documents(s, dir), cachedLshPairs(s, dir))),
-    "d19_containment" -> ((s: SparkSession, dir: String) =>
-      containmentTopFromBase(shingleBase(s, dir))),
-    "d20_threshold_curve" -> ((s: SparkSession, dir: String) =>
-      thresholdCurve(cachedLshPairs(s, dir))),
-    "d23_leakage_split" -> ((s: SparkSession, dir: String) =>
-      leakageSplit(Tables.documents(s, dir), cachedClusters(s, dir),
-        cachedLshPairs(s, dir))),
-    "d24_entity_resolution" -> ((s: SparkSession, dir: String) =>
-      entityResolution(Tables.customer(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "d1_exact_dedup" ->
-      """WITH g AS (SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
-        |           FROM documents GROUP BY md5(text))
-        |SELECT n_copies, count(*) AS n_groups FROM g GROUP BY n_copies ORDER BY n_copies""".stripMargin,
-    "d2_minhash_sig" ->
+        .orderBy("doc_id"), () =>
       s"""WITH sigs AS (
          |  ${minhashLanesSql.replace("\n", "\n  ")}
          |)
          |SELECT doc_id, ${(0 until 8).map(i => s"mh$i").mkString(" || ',' || ")} AS sig
-         |FROM sigs ORDER BY doc_id""".stripMargin,
-    "d3_lsh_near_dups" -> lshNearDupsSql(),
-    "d4_ngram_jaccard" -> ngramJaccardTopSql(),
-    "d5_simhash" -> simhashSql,
-    "d6_simhash_pairs" -> simhashPairsSql(),
-    "d7_curation_pipeline" -> curationPipelineSql(),
-    "d8_dup_clusters" -> nearDupClustersSql(),
-    "d9_decontaminate" -> decontaminateSql(),
-    "d10_minhash_estimate" -> minhashJaccardEstimateSql(),
-    "d11_canonical_docs" -> canonicalDocsSql(),
-    "d12_repeated_spans" -> repeatedSpansSql(),
-    "d13_span_novelty" -> spanNoveltySql(),
-    "d14_incremental_ingest" -> incrementalIngestSql,
-    "d21_near_dup_ingest" -> nearDupIngestSql(),
-    "d22_fuzzy_match" -> fuzzyNameMatchSql(),
-    "d15_source_contamination" -> crossSourceContaminationSql(),
-    "d16_lsh_tuning" -> lshTuningSql,
-    "d17_prefix_join" -> prefixFilterPairsSql,
-    "d18_dup_rate_by_source" -> dupRateBySourceSql(),
-    "d19_containment" -> containmentTopSql(),
-    "d20_threshold_curve" -> thresholdCurveSql(),
-    "d23_leakage_split" -> leakageSplitSql(),
-    "d24_entity_resolution" -> entityResolutionSql(),
+         |FROM sigs ORDER BY doc_id""".stripMargin),
+    QuerySpec("d3_lsh_near_dups", (s, dir) => cachedLshPairs(s, dir),
+      () => lshNearDupsSql(), Seq("jaccard")),
+    QuerySpec("d4_ngram_jaccard", (s, dir) => ngramJaccardTopFromBase(shingleBase(s, dir)),
+      () => ngramJaccardTopSql(), Seq("jaccard")),
+    QuerySpec("d5_simhash", (s, dir) => cachedSimhash(s, dir).orderBy("doc_id"), () => simhashSql),
+    QuerySpec("d6_simhash_pairs", (s, dir) => simhashPairsFromSig(cachedSimhash(s, dir)),
+      () => simhashPairsSql()),
+    QuerySpec("d7_curation_pipeline", (s, dir) =>
+      curationPipelineFromPairs(Tables.documents(s, dir), cachedLshPairs(s, dir)),
+      () => curationPipelineSql()),
+    QuerySpec("d8_dup_clusters", (s, dir) => cachedClusters(s, dir).orderBy("doc_id"),
+      () => nearDupClustersSql()),
+    QuerySpec("d11_canonical_docs", (s, dir) =>
+      canonicalDocs(Tables.documents(s, dir), cachedClusters(s, dir)),
+      () => canonicalDocsSql()),
+    QuerySpec("d9_decontaminate", (s, dir) =>
+      decontaminateFromBase(Tables.documents(s, dir),
+        shingleBase(s, dir).select("doc_id", "shh")),
+      () => decontaminateSql(), Seq("overlap_frac")),
+    QuerySpec("d10_minhash_estimate", minhashJaccardEstimate _,
+      () => minhashJaccardEstimateSql(), Seq("jaccard", "jaccard_est")),
+    QuerySpec("d12_repeated_spans", (s, dir) => repeatedSpansFromSpans(cachedSpans(s, dir)),
+      () => repeatedSpansSql(), Seq("shared_frac")),
+    QuerySpec("d13_span_novelty", (s, dir) => spanNoveltyFromSpans(cachedSpans(s, dir)),
+      () => spanNoveltySql(), Seq("novel_frac")),
+    QuerySpec("d14_incremental_ingest", (s, dir) => incrementalIngest(Tables.documents(s, dir)),
+      () => incrementalIngestSql),
+    QuerySpec("d21_near_dup_ingest", (s, dir) => nearDupIngest(s, dir), () => nearDupIngestSql()),
+    QuerySpec("d22_fuzzy_match", (s, dir) => fuzzyNameMatch(Tables.customer(s, dir)),
+      () => fuzzyNameMatchSql()),
+    QuerySpec("d15_source_contamination", (s, dir) =>
+      crossSourceContamination(Tables.documents(s, dir), cachedSpans(s, dir)),
+      () => crossSourceContaminationSql(), Seq("jaccard")),
+    QuerySpec("d16_lsh_tuning", (s, _) => lshTuning(s),
+      () => lshTuningSql, Seq("s", "p_candidate")),
+    QuerySpec("d17_prefix_join", (s, dir) => prefixFilterPairs(shingleBase(s, dir)),
+      () => prefixFilterPairsSql, Seq("jaccard")),
+    QuerySpec("d18_dup_rate_by_source", (s, dir) =>
+      dupRateBySource(Tables.documents(s, dir), cachedLshPairs(s, dir)),
+      () => dupRateBySourceSql(), Seq("exact_rate", "near_rate")),
+    QuerySpec("d19_containment", (s, dir) => containmentTopFromBase(shingleBase(s, dir)),
+      () => containmentTopSql(), Seq("containment")),
+    QuerySpec("d20_threshold_curve", (s, dir) => thresholdCurve(cachedLshPairs(s, dir)),
+      () => thresholdCurveSql(), Seq("t")),
+    QuerySpec("d23_leakage_split", (s, dir) =>
+      leakageSplit(Tables.documents(s, dir), cachedClusters(s, dir),
+        cachedLshPairs(s, dir)),
+      () => leakageSplitSql()),
+    QuerySpec("d24_entity_resolution", (s, dir) => entityResolution(Tables.customer(s, dir)),
+      () => entityResolutionSql()),
   )
 }

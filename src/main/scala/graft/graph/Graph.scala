@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -770,10 +771,10 @@ object Graph {
       labels = next.select("id", "component")
       // (A Borůvka-style per-round edge contraction was probed here on
       // the 30× dense match graph and measured SLOWER — 52 s vs 35 s
-      // for the plain loop, tools/D24StageProbe stage 2b — because the
-      // relabel joins re-shuffle the full edge mass exactly once more
-      // than the few rounds the pointer-jumping needs on low-diameter
-      // graphs. Kept plain.)
+      // for the plain loop, SCALE.md "30× spot probes of the two heaviest
+      // linear-wall queries" — because the relabel joins re-shuffle the
+      // full edge mass exactly once more than the few rounds the
+      // pointer-jumping needs on low-diameter graphs. Kept plain.)
     }
     labels
   }
@@ -2691,117 +2692,91 @@ object Graph {
        |    ELSE 0.0 END AS DECIMAL(18,6)) AS reciprocity
        |FROM t, r""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g1_degrees" -> ((s: SparkSession, dir: String) =>
-      degrees(cachedEdges(s, dir)).orderBy("id")),
-    "g2_pagerank" -> ((s: SparkSession, dir: String) =>
-      pageRank(cachedEdges(s, dir), iterations = 3).orderBy("id")),
-    "g3_connected_components" -> ((s: SparkSession, dir: String) =>
-      cachedComponents(s, dir).orderBy("id")),
-    "g4_triangle_counts" -> ((s: SparkSession, dir: String) =>
-      cachedTriangles(s, dir).orderBy("id")),
-    "g5_pagerank_tol" -> ((s: SparkSession, dir: String) =>
-      pageRankTol(cachedEdges(s, dir),
-        recordKey = Some(Tables.norm(dir))).orderBy("id")),
-    "g6_community_sizes" -> ((s: SparkSession, dir: String) =>
-      communitySizesFromLabels(cachedComponents(s, dir))),
-    "g7_shortest_paths" -> ((s: SparkSession, dir: String) =>
-      cachedPaths(s, dir).orderBy("landmark", "id")),
-    "g20_distance_histogram" -> ((s: SparkSession, dir: String) =>
-      distanceHistogram(cachedPaths(s, dir))),
-    "g21_harmonic_centrality" -> ((s: SparkSession, dir: String) =>
-      harmonicCentrality(cachedPaths(s, dir))),
-    "g8_label_propagation" -> ((s: SparkSession, dir: String) =>
-      labelPropagation(cachedEdges(s, dir))),
-    "g9_kcore" -> ((s: SparkSession, dir: String) =>
-      kCore(cachedEdges(s, dir), recordKey = Some(Tables.norm(dir)))),
-    "g10_clustering_coeff" -> ((s: SparkSession, dir: String) =>
-      clusteringCoeff(cachedEdges(s, dir), cachedTriangles(s, dir))),
-    "g11_personalized_pagerank" -> ((s: SparkSession, dir: String) =>
-      personalizedPageRank(cachedEdges(s, dir), sources = Seq(0L, 1L, 2L))),
-    "g12_covisitation" -> ((s: SparkSession, dir: String) =>
-      covisitation(s, dir)),
-    "g13_item_jaccard" -> ((s: SparkSession, dir: String) =>
-      itemJaccard(s, dir)),
-    "g14_hits" -> ((s: SparkSession, dir: String) =>
-      hits(cachedEdges(s, dir))),
-    "g15_assortativity" -> ((s: SparkSession, dir: String) =>
-      assortativity(cachedEdges(s, dir))),
-    "g16_reciprocity" -> ((s: SparkSession, dir: String) =>
-      reciprocity(cachedEdges(s, dir))),
-    "g17_adamic_adar" -> ((s: SparkSession, dir: String) =>
-      adamicAdar(cachedEdges(s, dir))),
-    "g18_degree_powerlaw" -> ((s: SparkSession, dir: String) =>
-      degreePowerlaw(cachedEdges(s, dir))),
-    "g22_scc" -> ((s: SparkSession, dir: String) =>
-      cachedScc(s, dir).orderBy("id")),
-    "g23_condensation_levels" -> ((s: SparkSession, dir: String) =>
-      condensationLevels(cachedEdges(s, dir), cachedScc(s, dir))),
-    "g24_modularity" -> ((s: SparkSession, dir: String) =>
-      modularity(cachedEdges(s, dir), cachedComponents(s, dir))),
-    "g19_pagerank_dangling" -> ((s: SparkSession, dir: String) =>
-      pageRankDangling(cachedEdges(s, dir), iterations = 3).orderBy("id")),
-    // denser mod-500 projection: the mod-2000 gate graph is too
-    // triangle-sparse to cascade (its 3-truss converges in one peel);
-    // m=500 at sf0.01 peels 6 rounds with a 13k-edge surviving truss
-    "g25_ktruss" -> ((s: SparkSession, dir: String) =>
-      kTruss(edgesFromOrders(s, dir, m = TrussProjMod), k = 5,
-        recordKey = Some(Tables.norm(dir)))),
-    "g26_weighted_sssp" -> ((s: SparkSession, dir: String) =>
-      weightedSssp(weightedEdges(cachedEdges(s, dir)),
-        landmarks = Seq(0L, 1L, 2L, 3L, 4L),
-        recordKey = Some(Tables.norm(dir)))),
-    "g27_betweenness" -> ((s: SparkSession, dir: String) =>
-      betweenness(cachedEdges(s, dir), pivots = Seq(0L, 1L, 2L, 3L, 4L),
-        recordKey = Some(Tables.norm(dir)))),
-    "g28_random_walks" -> ((s: SparkSession, dir: String) =>
-      randomWalks(cachedEdges(s, dir))),
-    "g29_louvain" -> ((s: SparkSession, dir: String) =>
-      louvain(cachedEdges(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "g1_degrees" ->
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("g1_degrees", (s, dir) => degrees(cachedEdges(s, dir)).orderBy("id"), () =>
       s"""WITH edges_g AS (${edgesSql()}),
          |outd AS (SELECT src AS id, count(*) AS out_deg FROM edges_g GROUP BY src),
          |ind AS (SELECT dst AS id, count(*) AS in_deg FROM edges_g GROUP BY dst)
          |SELECT id, COALESCE(out_deg, 0) AS out_deg, COALESCE(in_deg, 0) AS in_deg
-         |FROM outd FULL OUTER JOIN ind USING (id) ORDER BY id""".stripMargin,
-    "g2_pagerank" -> pageRankSql(iterations = 3),
-    "g3_connected_components" -> connectedComponentsSql(),
-    "g4_triangle_counts" -> triangleCountsSql(),
-    // built after the queries run (oracles is a def): unrolls the
+         |FROM outd FULL OUTER JOIN ind USING (id) ORDER BY id""".stripMargin),
+    QuerySpec("g2_pagerank", (s, dir) =>
+      pageRank(cachedEdges(s, dir), iterations = 3).orderBy("id"),
+      () => pageRankSql(iterations = 3)),
+    QuerySpec("g3_connected_components", (s, dir) => cachedComponents(s, dir).orderBy("id"),
+      () => connectedComponentsSql()),
+    QuerySpec("g4_triangle_counts", (s, dir) => cachedTriangles(s, dir).orderBy("id"),
+      () => triangleCountsSql()),
+    // oracle built after the query runs: unrolls the
     // converged iteration count recorded by pageRankTol
-    "g5_pagerank_tol" -> pageRankTolSql(),
-    "g6_community_sizes" -> communitySizesSql(),
-    // built after the queries run (oracles is a def): caps the recursive
+    QuerySpec("g5_pagerank_tol", (s, dir) =>
+      pageRankTol(cachedEdges(s, dir),
+        recordKey = Some(Tables.norm(dir))).orderBy("id"),
+      () => pageRankTolSql()),
+    QuerySpec("g6_community_sizes", (s, dir) => communitySizesFromLabels(cachedComponents(s, dir)),
+      () => communitySizesSql()),
+    // oracle built after the query runs: caps the recursive
     // walk at the round count recorded by shortestPaths
-    "g7_shortest_paths" -> shortestPathsSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "g20_distance_histogram" -> distanceHistogramSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "g21_harmonic_centrality" -> harmonicCentralitySql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "g8_label_propagation" -> labelPropagationSql(),
+    QuerySpec("g7_shortest_paths", (s, dir) => cachedPaths(s, dir).orderBy("landmark", "id"),
+      () => shortestPathsSql(Seq(0L, 1L, 2L, 3L, 4L))),
+    QuerySpec("g20_distance_histogram", (s, dir) => distanceHistogram(cachedPaths(s, dir)),
+      () => distanceHistogramSql(Seq(0L, 1L, 2L, 3L, 4L))),
+    QuerySpec("g21_harmonic_centrality", (s, dir) => harmonicCentrality(cachedPaths(s, dir)),
+      () => harmonicCentralitySql(Seq(0L, 1L, 2L, 3L, 4L))),
+    QuerySpec("g8_label_propagation", (s, dir) => labelPropagation(cachedEdges(s, dir)),
+      () => labelPropagationSql()),
     // built after the queries run: unrolls the recorded peel count
-    "g9_kcore" -> kCoreSql(),
-    "g10_clustering_coeff" -> clusteringCoeffSql(),
-    "g11_personalized_pagerank" -> personalizedPageRankSql(Seq(0L, 1L, 2L)),
-    "g12_covisitation" -> covisitationSql(),
-    "g13_item_jaccard" -> itemJaccardSql(),
-    "g14_hits" -> hitsSql(),
-    "g15_assortativity" -> assortativitySql(),
-    "g16_reciprocity" -> reciprocitySql(),
-    "g17_adamic_adar" -> adamicAdarSql(),
-    "g18_degree_powerlaw" -> degreePowerlawSql(),
-    "g19_pagerank_dangling" -> pageRankDanglingSql(iterations = 3),
-    "g22_scc" -> sccSql(),
-    "g23_condensation_levels" -> condensationLevelsSql(),
-    "g24_modularity" -> modularitySql(),
-    // built after the queries run: unrolls the recorded peel count
-    "g25_ktruss" -> kTrussSql(k = 5, m = TrussProjMod),
+    QuerySpec("g9_kcore", (s, dir) =>
+      kCore(cachedEdges(s, dir), recordKey = Some(Tables.norm(dir))),
+      () => kCoreSql()),
+    QuerySpec("g10_clustering_coeff", (s, dir) =>
+      clusteringCoeff(cachedEdges(s, dir), cachedTriangles(s, dir)),
+      () => clusteringCoeffSql(), Seq("coeff")),
+    QuerySpec("g11_personalized_pagerank", (s, dir) =>
+      personalizedPageRank(cachedEdges(s, dir), sources = Seq(0L, 1L, 2L)),
+      () => personalizedPageRankSql(Seq(0L, 1L, 2L))),
+    QuerySpec("g12_covisitation", (s, dir) => covisitation(s, dir), () => covisitationSql()),
+    QuerySpec("g13_item_jaccard", (s, dir) => itemJaccard(s, dir),
+      () => itemJaccardSql(), Seq("jaccard")),
+    QuerySpec("g14_hits", (s, dir) => hits(cachedEdges(s, dir)), () => hitsSql()),
+    QuerySpec("g15_assortativity", (s, dir) => assortativity(cachedEdges(s, dir)),
+      () => assortativitySql(), Seq("r")),
+    QuerySpec("g16_reciprocity", (s, dir) => reciprocity(cachedEdges(s, dir)),
+      () => reciprocitySql(), Seq("reciprocity")),
+    QuerySpec("g17_adamic_adar", (s, dir) => adamicAdar(cachedEdges(s, dir)),
+      () => adamicAdarSql(), Seq("aa")),
+    QuerySpec("g18_degree_powerlaw", (s, dir) => degreePowerlaw(cachedEdges(s, dir)),
+      () => degreePowerlawSql(), Seq("slope", "intercept")),
+    QuerySpec("g22_scc", (s, dir) => cachedScc(s, dir).orderBy("id"), () => sccSql()),
+    QuerySpec("g23_condensation_levels", (s, dir) =>
+      condensationLevels(cachedEdges(s, dir), cachedScc(s, dir)),
+      () => condensationLevelsSql()),
+    QuerySpec("g24_modularity", (s, dir) =>
+      modularity(cachedEdges(s, dir), cachedComponents(s, dir)),
+      () => modularitySql(), Seq("q_contrib")),
+    QuerySpec("g19_pagerank_dangling", (s, dir) =>
+      pageRankDangling(cachedEdges(s, dir), iterations = 3).orderBy("id"),
+      () => pageRankDanglingSql(iterations = 3)),
+    // denser mod-500 projection: the mod-2000 gate graph is too
+    // triangle-sparse to cascade (its 3-truss converges in one peel);
+    // m=500 at sf0.01 peels 6 rounds with a 13k-edge surviving truss;
+    // the oracle, built after the query runs, unrolls the recorded peel count
+    QuerySpec("g25_ktruss", (s, dir) =>
+      kTruss(edgesFromOrders(s, dir, m = TrussProjMod), k = 5,
+        recordKey = Some(Tables.norm(dir))),
+      () => kTrussSql(k = 5, m = TrussProjMod)),
     // built after the queries run: unrolls the recorded wave count
-    "g26_weighted_sssp" -> weightedSsspSql(Seq(0L, 1L, 2L, 3L, 4L)),
+    QuerySpec("g26_weighted_sssp", (s, dir) =>
+      weightedSssp(weightedEdges(cachedEdges(s, dir)),
+        landmarks = Seq(0L, 1L, 2L, 3L, 4L),
+        recordKey = Some(Tables.norm(dir))),
+      () => weightedSsspSql(Seq(0L, 1L, 2L, 3L, 4L))),
     // built after the queries run: unrolls the recorded level count
-    "g27_betweenness" -> betweennessSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "g28_random_walks" -> randomWalksSql(),
-    "g29_louvain" -> louvainSql(),
+    QuerySpec("g27_betweenness", (s, dir) =>
+      betweenness(cachedEdges(s, dir), pivots = Seq(0L, 1L, 2L, 3L, 4L),
+        recordKey = Some(Tables.norm(dir))),
+      () => betweennessSql(Seq(0L, 1L, 2L, 3L, 4L)), Seq("btw")),
+    QuerySpec("g28_random_walks", (s, dir) => randomWalks(cachedEdges(s, dir)),
+      () => randomWalksSql()),
+    QuerySpec("g29_louvain", (s, dir) => louvain(cachedEdges(s, dir)), () => louvainSql()),
   )
 }

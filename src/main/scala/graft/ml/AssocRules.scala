@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -143,11 +144,8 @@ object AssocRules {
        |JOIN supp sc ON sc.item = r.consequent, n
        |ORDER BY lift DESC, antecedent ASC, consequent ASC LIMIT $topK""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m27_assoc_rules" -> ((s: SparkSession, dir: String) => m27AssocRules(s, dir)),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "m27_assoc_rules" -> m27AssocRulesSql(),
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("m27_assoc_rules", (s, dir) => m27AssocRules(s, dir),
+      () => m27AssocRulesSql(), Seq("support", "confidence", "lift")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.LogisticRegression
@@ -577,35 +578,28 @@ object Classify {
        |ORDER BY chi2 DESC, lang ASC, word ASC LIMIT $topK""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m1_confusion" -> ((s: SparkSession, dir: String) =>
-      confusionMatrix(scoreAndPersist(s, dir, "m1"))),
-    "m3_label_metrics" -> ((s: SparkSession, dir: String) =>
-      metrics(scoreAndPersist(s, dir, "m3"))),
-    "m4_weighted_metrics" -> ((s: SparkSession, dir: String) =>
-      weightedMetrics(scoreAndPersist(s, dir, "m4"))),
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("m1_confusion", (s, dir) => confusionMatrix(scoreAndPersist(s, dir, "m1")),
+      () => confusionSql("m1")),
+    QuerySpec("m3_label_metrics", (s, dir) => metrics(scoreAndPersist(s, dir, "m3")),
+      () => labelMetricsSql("m3"), Seq("precision", "recall", "fpr", "f1")),
+    QuerySpec("m4_weighted_metrics", (s, dir) => weightedMetrics(scoreAndPersist(s, dir, "m4")),
+      () => weightedMetricsSql("m4"), Seq("accuracy", "weighted_precision",
+        "weighted_recall", "weighted_f1", "weighted_fpr")),
     // the persisted pattern makes the metrics math oracle-checkable even
     // for models with nondeterministic internals: DuckDB re-aggregates the
     // persisted predictions, it never needs to reproduce the fit
-    "m5_cv_confusion" -> ((s: SparkSession, dir: String) =>
-      confusionMatrix(scoreAndPersist(s, dir, "m5", pipelineCountVectorizer()))),
+    QuerySpec("m5_cv_confusion", (s, dir) =>
+      confusionMatrix(scoreAndPersist(s, dir, "m5", pipelineCountVectorizer())),
+      () => confusionSql("m5")),
     // grid-search model selection (SURVEY M8, the reference's dominant
     // compute): best of the 16-combo reference-shaped grid → weighted metrics
-    "m9_cv_metrics" -> ((s: SparkSession, dir: String) =>
-      weightedMetrics(scoreAndPersistCv(s, dir, "m9"))),
-    "m10_naive_bayes" -> ((s: SparkSession, dir: String) =>
-      naiveBayesLang(Tables.documents(s, dir))),
-    "m16_chi2_features" -> ((s: SparkSession, dir: String) =>
-      chi2Features(Tables.documents(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "m1_confusion" -> confusionSql("m1"),
-    "m3_label_metrics" -> labelMetricsSql("m3"),
-    "m4_weighted_metrics" -> weightedMetricsSql("m4"),
-    "m5_cv_confusion" -> confusionSql("m5"),
-    "m9_cv_metrics" -> weightedMetricsSql("m9"),
-    "m10_naive_bayes" -> naiveBayesLangSql,
-    "m16_chi2_features" -> chi2FeaturesSql(),
+    QuerySpec("m9_cv_metrics", (s, dir) => weightedMetrics(scoreAndPersistCv(s, dir, "m9")),
+      () => weightedMetricsSql("m9"), Seq("accuracy", "weighted_precision",
+        "weighted_recall", "weighted_f1", "weighted_fpr")),
+    QuerySpec("m10_naive_bayes", (s, dir) => naiveBayesLang(Tables.documents(s, dir)),
+      () => naiveBayesLangSql),
+    QuerySpec("m16_chi2_features", (s, dir) => chi2Features(Tables.documents(s, dir)),
+      () => chi2FeaturesSql(), Seq("chi2")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.QuerySpec
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.feature.{Tokenizer, Word2Vec}
 import org.apache.spark.ml.functions.vector_to_array
@@ -213,15 +214,11 @@ object Embed {
     ("scan", "column", "window"), ("order", "sort", "part"),
     ("join", "merge", "key"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m8_w2v_knn" -> ((s: SparkSession, dir: String) =>
-      w2vKnn(word2vecPersist(s, dir, "m8"), queryId = 0L)),
-    "m28_w2v_analogy" -> ((s: SparkSession, dir: String) =>
-      analogies(wordVectorsPersist(s, dir, "m28"), analogyProbes)),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "m8_w2v_knn" -> w2vKnnSql("m8", 0L),
-    "m28_w2v_analogy" -> analogiesSql("m28", analogyProbes),
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("m8_w2v_knn", (s, dir) => w2vKnn(word2vecPersist(s, dir, "m8"), queryId = 0L),
+      () => w2vKnnSql("m8", 0L), Seq("cos")),
+    QuerySpec("m28_w2v_analogy", (s, dir) =>
+      analogies(wordVectorsPersist(s, dir, "m28"), analogyProbes),
+      () => analogiesSql("m28", analogyProbes), Seq("cos")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
@@ -932,68 +933,53 @@ object LogRegGd {
        |)${gdChainSql("", "f", lr, steps).replace("\n", "\n")}
        |SELECT w1, w2, b FROM w$steps""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m12_logreg_gd" -> ((s: SparkSession, dir: String) =>
-      cachedScores(s, dir).orderBy("doc_id")),
-    "m13_calibration" -> ((s: SparkSession, dir: String) => {
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("m12_logreg_gd", (s, dir) => cachedScores(s, dir).orderBy("doc_id"),
+      () => logregGdSql(), Seq("p")),
+    QuerySpec("m13_calibration", (s, dir) => {
       val f = features(Tables.documents(s, dir))
       calibration(cachedScores(s, dir)
         .join(f.select(col("doc_id"), col("y")), "doc_id")
         .select(col("doc_id"), col("p"), col("y")))
-    }),
-    "m14_pr_curve" -> ((s: SparkSession, dir: String) => {
+    }, () => calibrationSql(), Seq("mean_p", "pos_rate")),
+    QuerySpec("m14_pr_curve", (s, dir) => {
       val f = features(Tables.documents(s, dir))
       prCurve(cachedScores(s, dir)
         .join(f.select(col("doc_id"), col("y")), "doc_id")
         .select(col("doc_id"), col("p"), col("y")))
-    }),
-    "m15_auc" -> ((s: SparkSession, dir: String) => {
+    }, () => prCurveSql(), Seq("precision", "recall")),
+    QuerySpec("m15_auc", (s, dir) => {
       val f = features(Tables.documents(s, dir))
       auc(cachedScores(s, dir)
         .join(f.select(col("doc_id"), col("y")), "doc_id")
         .select(col("doc_id"), col("p"), col("y")))
-    }),
-    "m18_mcc" -> ((s: SparkSession, dir: String) => {
+    }, () => aucSql(), Seq("auc")),
+    QuerySpec("m18_mcc", (s, dir) => {
       val f = features(Tables.documents(s, dir))
       mcc(cachedScores(s, dir)
         .join(f.select(col("doc_id"), col("y")), "doc_id")
         .select(col("doc_id"), col("p"), col("y")))
-    }),
-    "m21_learning_curve" -> ((s: SparkSession, dir: String) =>
-      learningCurve(Tables.documents(s, dir))),
-    "m22_model_weights" -> ((s: SparkSession, dir: String) =>
-      modelWeights(Tables.documents(s, dir))),
-    "m23_learnable_curve" -> ((s: SparkSession, dir: String) =>
-      learnableCurve(Tables.documents(s, dir))),
-    "m24_temp_scaling" -> ((s: SparkSession, dir: String) =>
-      tempScaling(Tables.documents(s, dir))),
-    "m25_target_encoding" -> ((s: SparkSession, dir: String) =>
-      targetEncoding(Tables.documents(s, dir))),
-    "m26_group_metrics" -> ((s: SparkSession, dir: String) =>
-      groupMetrics(cachedScores(s, dir), Tables.documents(s, dir))),
-    "m29_decile_lift" -> ((s: SparkSession, dir: String) => {
+    }, () => mccSql(), Seq("mcc")),
+    QuerySpec("m21_learning_curve", (s, dir) => learningCurve(Tables.documents(s, dir)),
+      () => learningCurveSql()),
+    QuerySpec("m22_model_weights", (s, dir) => modelWeights(Tables.documents(s, dir)),
+      () => modelWeightsSql(), Seq("w1", "w2", "b")),
+    QuerySpec("m23_learnable_curve", (s, dir) => learnableCurve(Tables.documents(s, dir)),
+      () => learnableCurveSql()),
+    QuerySpec("m24_temp_scaling", (s, dir) => tempScaling(Tables.documents(s, dir)),
+      () => tempScalingSql(), Seq("avg_nll", "avg_brier")),
+    QuerySpec("m25_target_encoding", (s, dir) => targetEncoding(Tables.documents(s, dir)),
+      () => targetEncodingSql(), Seq("enc_oof", "prior_oof")),
+    QuerySpec("m26_group_metrics", (s, dir) =>
+      groupMetrics(cachedScores(s, dir), Tables.documents(s, dir)),
+      () => groupMetricsSql(), Seq("acc", "tpr", "fpr", "ppr")),
+    QuerySpec("m29_decile_lift", (s, dir) => {
       val f = features(Tables.documents(s, dir))
       decileLift(cachedScores(s, dir)
         .join(f.select(col("doc_id"), col("y")), "doc_id")
         .select(col("doc_id"), col("p"), col("y")))
-    }),
-    "m30_ks_drift" -> ((s: SparkSession, dir: String) =>
-      ksDrift(cachedScores(s, dir), Tables.documents(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "m12_logreg_gd" -> logregGdSql(),
-    "m13_calibration" -> calibrationSql(),
-    "m14_pr_curve" -> prCurveSql(),
-    "m15_auc" -> aucSql(),
-    "m18_mcc" -> mccSql(),
-    "m21_learning_curve" -> learningCurveSql(),
-    "m22_model_weights" -> modelWeightsSql(),
-    "m23_learnable_curve" -> learnableCurveSql(),
-    "m24_temp_scaling" -> tempScalingSql(),
-    "m25_target_encoding" -> targetEncodingSql(),
-    "m26_group_metrics" -> groupMetricsSql(),
-    "m29_decile_lift" -> decileLiftSql(),
-    "m30_ks_drift" -> ksDriftSql(),
+    }, () => decileLiftSql(), Seq("resp_rate", "cum_lift", "cum_gain")),
+    QuerySpec("m30_ks_drift", (s, dir) => ksDrift(cachedScores(s, dir), Tables.documents(s, dir)),
+      () => ksDriftSql(), Seq("ks")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -370,19 +371,11 @@ object Multimodal {
       |  CAST(SUM(1 - ok) AS BIGINT) AS n_bad
       |FROM f GROUP BY kind ORDER BY kind""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m2_multimodal_features" -> mFeatures _,
-    "m6_resize_features" -> mResizeFeatures _,
-    "m7_frame_sample" -> mFrameStats _,
-    "m19_wav_stats" -> mWavStats _,
-    "m20_decode_audit" -> mDecodeAudit _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "m2_multimodal_features" -> mFeaturesSql,
-    "m6_resize_features" -> mResizeFeaturesSql,
-    "m7_frame_sample" -> mFrameStatsSql,
-    "m19_wav_stats" -> mWavStatsSql,
-    "m20_decode_audit" -> mDecodeAuditSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("m2_multimodal_features", mFeatures _, () => mFeaturesSql),
+    QuerySpec("m6_resize_features", mResizeFeatures _, () => mResizeFeaturesSql),
+    QuerySpec("m7_frame_sample", mFrameStats _, () => mFrameStatsSql),
+    QuerySpec("m19_wav_stats", mWavStats _, () => mWavStatsSql),
+    QuerySpec("m20_decode_audit", mDecodeAudit _, () => mDecodeAuditSql),
   )
 }

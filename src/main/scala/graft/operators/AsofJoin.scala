@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -105,13 +106,8 @@ object AsofJoin {
       |  ON l_quantity >= band_lo AND l_quantity < band_hi
       |GROUP BY l_returnflag, b.band ORDER BY l_returnflag, b.band""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q24_asof_join" -> qAsof _,
-    "q25_range_join" -> qRange _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q24_asof_join" -> qAsofSql,
-    "q25_range_join" -> qRangeSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q24_asof_join", qAsof _, () => qAsofSql),
+    QuerySpec("q25_range_join", qRange _, () => qRangeSql),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -404,22 +405,12 @@ object Layout {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_zorder" -> q30Zorder _,
-    "q31_bloom_join" -> q31BloomJoin _,
-    "q34_dpp_join" -> q34DppJoin _,
-    "x12_shard_shuffle" -> ((s: SparkSession, dir: String) =>
-      x12ShardShuffle(s, dir)),
-    "q47_compaction_plan" -> q47CompactionPlan _,
-    "q61_bucketed_join" -> q61BucketedJoin _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q30_zorder" -> q30ZorderSql,
-    "q31_bloom_join" -> q31BloomJoinSql,
-    "q34_dpp_join" -> q34DppJoinSql,
-    "x12_shard_shuffle" -> x12ShardShuffleSql(),
-    "q47_compaction_plan" -> q47CompactionPlanSql(),
-    "q61_bucketed_join" -> q61BucketedJoinSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q30_zorder", q30Zorder _, () => q30ZorderSql),
+    QuerySpec("q31_bloom_join", q31BloomJoin _, () => q31BloomJoinSql),
+    QuerySpec("q34_dpp_join", q34DppJoin _, () => q34DppJoinSql),
+    QuerySpec("x12_shard_shuffle", (s, dir) => x12ShardShuffle(s, dir), () => x12ShardShuffleSql()),
+    QuerySpec("q47_compaction_plan", q47CompactionPlan _, () => q47CompactionPlanSql()),
+    QuerySpec("q61_bucketed_join", q61BucketedJoin _, () => q61BucketedJoinSql),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -3041,178 +3042,114 @@ object Relational {
        |JOIN region ON n_regionkey = r_regionkey
        |WHERE r_name = '$region' ORDER BY s_name""".stripMargin
 
-  /** All relational queries + oracles, for SparkEntry registration. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> q1Agg _,
-    "q2_topk" -> q2Topk _,
-    "q3_join_agg" -> q3JoinAgg _,
-    "q4_broadcast_join" -> q4BroadcastJoin _,
-    "q5_full_outer" -> q5FullOuter _,
-    "q6_filter" -> q6Filter _,
-    "q7_count_distinct" -> q7CountDistinct _,
-    "q8_collect_set" -> q8CollectSet _,
-    "q9_explode" -> q9Explode _,
-    "q10_window" -> q10Window _,
-    "q11_anti_join" -> q11Anti _,
-    "q12_semi_join" -> q12Semi _,
-    "q13_union" -> q13Union _,
-    "q14_case_when" -> q14CaseWhen _,
-    "q15_scalar_funcs" -> q15Scalar _,
-    "q16_datetime" -> q16DateTime _,
-    "q17_json" -> q17Json _,
-    "q18_set_ops" -> q18SetOps _,
-    "q19_rollup" -> q19Rollup _,
-    "q20_csv_roundtrip" -> q20CsvRoundtrip _,
-    "q21_pivot" -> q21Pivot _,
-    "q22_percentiles" -> q22Percentiles _,
-    "q23_profile" -> q23Profile _,
-    "q28_cube" -> q28Cube _,
-    "q29_partition_prune" -> q29PartitionPrune _,
-    "q32_group_topk" -> ((s: SparkSession, dir: String) => q32GroupTopk(s, dir)),
-    "q33_incremental_rollup" -> q33IncrementalRollup _,
-    "q35_grouping_sets" -> q35GroupingSets _,
-    "q36_scd2" -> q36Scd2 _,
-    "q39_rolling_window" -> q39Rolling _,
-    "q40_grouped_corr" -> q40GroupedCorr _,
-    "q41_correlated_subquery" -> q41Subquery _,
-    "q42_topk_agg" -> ((s: SparkSession, dir: String) => q42TopkAgg(s, dir)),
-    "q43_snapshot_diff" -> q43SnapshotDiff _,
-    "q44_json_roundtrip" -> q44JsonRoundtrip _,
-    "q45_orc_roundtrip" -> q45OrcRoundtrip _,
-    "q46_unpivot" -> q46Unpivot _,
-    "q48_interval_merge" -> q48IntervalMerge _,
-    "q49_histogram" -> ((s: SparkSession, dir: String) => q49Histogram(s, dir)),
-    "q50_event_gaps" -> q50EventGaps _,
-    "q51_funnel" -> q51Funnel _,
-    "q52_retention" -> q52Retention _,
-    "q59_markov_transitions" -> q59MarkovTransitions _,
-    "q60_event_paths" -> ((s: SparkSession, dir: String) => q60EventPaths(s, dir)),
-    "q62_scd2_compress" -> q62Scd2Compress _,
-    "q63_mad_outliers" -> q63MadOutliers _,
-    "q53_hist_quantiles" -> ((s: SparkSession, dir: String) => q53HistQuantiles(s, dir)),
-    "q54_missing_days" -> q54MissingDays _,
-    "q55_trending" -> ((s: SparkSession, dir: String) => q55Trending(s, dir)),
-    "q56_ab_lift" -> q56AbLift _,
-    "q57_volume_drift" -> q57VolumeDrift _,
-    "q58_fuzzy_join" -> q58FuzzyJoin _,
-    "q67_ntile" -> q67Ntile _,
-    "q68_forward_fill" -> q68ForwardFill _,
-    "q70_regional_revenue" -> ((s: SparkSession, dir: String) => q70RegionalRevenue(s, dir)),
-    "q71_shipping_priority" -> ((s: SparkSession, dir: String) => q71ShippingPriority(s, dir)),
-    "q72_dq_audit" -> q72DqAudit _,
-    "q73_big_orders" -> ((s: SparkSession, dir: String) => q73BigOrders(s, dir)),
-    "q74_returned_revenue" -> ((s: SparkSession, dir: String) => q74ReturnedRevenue(s, dir)),
-    "q75_volume_shipping" -> ((s: SparkSession, dir: String) => q75VolumeShipping(s, dir)),
-    "q76_promo_share" -> ((s: SparkSession, dir: String) => q76PromoShare(s, dir)),
-    "q77_market_share" -> ((s: SparkSession, dir: String) => q77MarketShare(s, dir)),
-    "q80_priority_class" -> ((s: SparkSession, dir: String) => q80PriorityClass(s, dir)),
-    "q81_custdist" -> ((s: SparkSession, dir: String) => q81CustDist(s, dir)),
-    "q82_small_qty_revenue" -> ((s: SparkSession, dir: String) => q82SmallQtyRevenue(s, dir)),
-    "q83_sole_late_supplier" -> ((s: SparkSession, dir: String) => q83SoleLateSupplier(s, dir)),
-    "q84_idle_rich_customers" -> ((s: SparkSession, dir: String) => q84IdleRichCustomers(s, dir)),
-    "q85_top_supplier" -> ((s: SparkSession, dir: String) => q85TopSupplier(s, dir)),
-    "q86_disjunctive_revenue" -> ((s: SparkSession, dir: String) => q86DisjunctiveRevenue(s, dir)),
-    "q87_nation_profit" -> ((s: SparkSession, dir: String) => q87NationProfit(s, dir)),
-    "q88_user_ewma" -> ((s: SparkSession, dir: String) => q88UserEwma(s, dir)),
-    "q89_big_qty_orders" -> ((s: SparkSession, dir: String) => q89BigQtyOrders(s, dir)),
-    "q90_returned_ranking" -> ((s: SparkSession, dir: String) => q90ReturnedRanking(s, dir)),
-    "q91_priority_check" -> ((s: SparkSession, dir: String) => q91PriorityCheck(s, dir)),
-    "q92_pricing_summary" -> ((s: SparkSession, dir: String) => q92PricingSummary(s, dir)),
-    "q93_revenue_change" -> ((s: SparkSession, dir: String) => q93RevenueChange(s, dir)),
-    "q78_bad_records" -> q78BadRecords _,
-    "q95_k_anonymity" -> ((s: SparkSession, dir: String) => q95KAnonymity(s, dir)),
-    "q79_dynamic_overwrite" -> q79DynamicOverwrite _,
-    "q96_min_cost_supplier" -> ((s: SparkSession, dir: String) => q96MinCostSupplier(s, dir)),
-    "q97_important_stock" -> ((s: SparkSession, dir: String) => q97ImportantStock(s, dir)),
-    "q98_supplier_cnt" -> ((s: SparkSession, dir: String) => q98SupplierCnt(s, dir)),
-    "q99_promotion_suppliers" -> ((s: SparkSession, dir: String) => q99PromotionSuppliers(s, dir)),
-    "q100_grouped_ols" -> ((s: SparkSession, dir: String) => q100GroupedOls(s, dir)),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q2_topk" -> q2TopkSql,
-    "q3_join_agg" -> q3JoinAggSql,
-    "q4_broadcast_join" -> q4BroadcastJoinSql,
-    "q5_full_outer" -> q5FullOuterSql,
-    "q6_filter" -> q6FilterSql,
-    "q7_count_distinct" -> q7CountDistinctSql,
-    "q8_collect_set" -> q8CollectSetSql,
-    "q9_explode" -> q9ExplodeSql,
-    "q10_window" -> q10WindowSql,
-    "q11_anti_join" -> q11AntiSql,
-    "q12_semi_join" -> q12SemiSql,
-    "q13_union" -> q13UnionSql,
-    "q14_case_when" -> q14CaseWhenSql,
-    "q15_scalar_funcs" -> q15ScalarSql,
-    "q16_datetime" -> q16DateTimeSql,
-    "q17_json" -> q17JsonSql,
-    "q18_set_ops" -> q18SetOpsSql,
-    "q19_rollup" -> q19RollupSql,
-    "q20_csv_roundtrip" -> q20CsvRoundtripSql,
-    "q21_pivot" -> q21PivotSql,
-    "q22_percentiles" -> q22PercentilesSql,
-    "q23_profile" -> q23ProfileSql,
-    "q28_cube" -> q28CubeSql,
-    "q29_partition_prune" -> q29PartitionPruneSql,
-    "q32_group_topk" -> q32GroupTopkSql(),
-    "q33_incremental_rollup" -> q33IncrementalRollupSql,
-    "q35_grouping_sets" -> q35GroupingSetsSql,
-    "q36_scd2" -> q36Scd2Sql,
-    "q39_rolling_window" -> q39RollingSql,
-    "q40_grouped_corr" -> q40GroupedCorrSql,
-    "q41_correlated_subquery" -> q41SubqueryOracle,
-    "q42_topk_agg" -> q42TopkAggSql(),
-    "q43_snapshot_diff" -> q43SnapshotDiffSql,
-    "q44_json_roundtrip" -> q44JsonRoundtripSql,
-    "q45_orc_roundtrip" -> q45OrcRoundtripSql,
-    "q46_unpivot" -> q46UnpivotSql,
-    "q48_interval_merge" -> q48IntervalMergeSql,
-    "q49_histogram" -> q49HistogramSql(),
-    "q50_event_gaps" -> q50EventGapsSql,
-    "q51_funnel" -> q51FunnelSql,
-    "q52_retention" -> q52RetentionSql,
-    "q59_markov_transitions" -> q59MarkovTransitionsSql,
-    "q60_event_paths" -> q60EventPathsSql(),
-    "q62_scd2_compress" -> q62Scd2CompressSql,
-    "q63_mad_outliers" -> q63MadOutliersSql,
-    "q53_hist_quantiles" -> q53HistQuantilesSql(),
-    "q54_missing_days" -> q54MissingDaysSql,
-    "q55_trending" -> q55TrendingSql(),
-    "q56_ab_lift" -> q56AbLiftSql,
-    "q57_volume_drift" -> q57VolumeDriftSql,
-    "q58_fuzzy_join" -> q58FuzzyJoinSql,
-    "q67_ntile" -> q67NtileSql,
-    "q68_forward_fill" -> q68ForwardFillSql,
-    "q70_regional_revenue" -> q70RegionalRevenueSql(),
-    "q71_shipping_priority" -> q71ShippingPrioritySql(),
-    "q72_dq_audit" -> q72DqAuditSql,
-    "q73_big_orders" -> q73BigOrdersSql(),
-    "q74_returned_revenue" -> q74ReturnedRevenueSql(),
-    "q75_volume_shipping" -> q75VolumeShippingSql(),
-    "q76_promo_share" -> q76PromoShareSql(),
-    "q77_market_share" -> q77MarketShareSql(),
-    "q80_priority_class" -> q80PriorityClassSql(),
-    "q81_custdist" -> q81CustDistSql,
-    "q82_small_qty_revenue" -> q82SmallQtyRevenueSql(),
-    "q83_sole_late_supplier" -> q83SoleLateSupplierSql(),
-    "q84_idle_rich_customers" -> q84IdleRichCustomersSql(),
-    "q85_top_supplier" -> q85TopSupplierSql(),
-    "q86_disjunctive_revenue" -> q86DisjunctiveRevenueSql,
-    "q87_nation_profit" -> q87NationProfitSql(),
-    "q88_user_ewma" -> q88UserEwmaSql,
-    "q89_big_qty_orders" -> q89BigQtyOrdersSql(),
-    "q90_returned_ranking" -> q90ReturnedRankingSql(),
-    "q91_priority_check" -> q91PriorityCheckSql(),
-    "q92_pricing_summary" -> q92PricingSummarySql(),
-    "q93_revenue_change" -> q93RevenueChangeSql(),
-    "q78_bad_records" -> q78BadRecordsSql,
-    "q95_k_anonymity" -> q95KAnonymitySql(),
-    "q96_min_cost_supplier" -> q96MinCostSupplierSql(),
-    "q97_important_stock" -> q97ImportantStockSql(),
-    "q98_supplier_cnt" -> q98SupplierCntSql(),
-    "q99_promotion_suppliers" -> q99PromotionSuppliersSql(),
-    "q100_grouped_ols" -> q100GroupedOlsSql,
-    "q79_dynamic_overwrite" -> q79DynamicOverwriteSql,
+  /** One registry row per relational query, for SparkEntry. */
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_agg", q1Agg _, () => q1AggSql),
+    QuerySpec("q2_topk", q2Topk _, () => q2TopkSql),
+    QuerySpec("q3_join_agg", q3JoinAgg _, () => q3JoinAggSql),
+    QuerySpec("q4_broadcast_join", q4BroadcastJoin _, () => q4BroadcastJoinSql),
+    QuerySpec("q5_full_outer", q5FullOuter _, () => q5FullOuterSql),
+    QuerySpec("q6_filter", q6Filter _, () => q6FilterSql),
+    QuerySpec("q7_count_distinct", q7CountDistinct _, () => q7CountDistinctSql),
+    QuerySpec("q8_collect_set", q8CollectSet _, () => q8CollectSetSql),
+    QuerySpec("q9_explode", q9Explode _, () => q9ExplodeSql),
+    QuerySpec("q10_window", q10Window _, () => q10WindowSql),
+    QuerySpec("q11_anti_join", q11Anti _, () => q11AntiSql),
+    QuerySpec("q12_semi_join", q12Semi _, () => q12SemiSql),
+    QuerySpec("q13_union", q13Union _, () => q13UnionSql),
+    QuerySpec("q14_case_when", q14CaseWhen _, () => q14CaseWhenSql),
+    QuerySpec("q15_scalar_funcs", q15Scalar _, () => q15ScalarSql),
+    QuerySpec("q16_datetime", q16DateTime _, () => q16DateTimeSql),
+    QuerySpec("q17_json", q17Json _, () => q17JsonSql),
+    QuerySpec("q18_set_ops", q18SetOps _, () => q18SetOpsSql),
+    QuerySpec("q19_rollup", q19Rollup _, () => q19RollupSql),
+    QuerySpec("q20_csv_roundtrip", q20CsvRoundtrip _, () => q20CsvRoundtripSql),
+    QuerySpec("q21_pivot", q21Pivot _, () => q21PivotSql),
+    QuerySpec("q22_percentiles", q22Percentiles _, () => q22PercentilesSql),
+    QuerySpec("q23_profile", q23Profile _, () => q23ProfileSql),
+    QuerySpec("q28_cube", q28Cube _, () => q28CubeSql),
+    QuerySpec("q29_partition_prune", q29PartitionPrune _, () => q29PartitionPruneSql),
+    QuerySpec("q32_group_topk", (s, dir) => q32GroupTopk(s, dir), () => q32GroupTopkSql()),
+    QuerySpec("q33_incremental_rollup", q33IncrementalRollup _, () => q33IncrementalRollupSql),
+    QuerySpec("q35_grouping_sets", q35GroupingSets _, () => q35GroupingSetsSql),
+    QuerySpec("q36_scd2", q36Scd2 _, () => q36Scd2Sql),
+    QuerySpec("q39_rolling_window", q39Rolling _, () => q39RollingSql),
+    QuerySpec("q40_grouped_corr", q40GroupedCorr _, () => q40GroupedCorrSql, Seq("corr")),
+    QuerySpec("q41_correlated_subquery", q41Subquery _, () => q41SubqueryOracle),
+    QuerySpec("q42_topk_agg", (s, dir) => q42TopkAgg(s, dir), () => q42TopkAggSql()),
+    QuerySpec("q43_snapshot_diff", q43SnapshotDiff _, () => q43SnapshotDiffSql),
+    QuerySpec("q44_json_roundtrip", q44JsonRoundtrip _, () => q44JsonRoundtripSql),
+    QuerySpec("q45_orc_roundtrip", q45OrcRoundtrip _, () => q45OrcRoundtripSql),
+    QuerySpec("q46_unpivot", q46Unpivot _, () => q46UnpivotSql),
+    QuerySpec("q48_interval_merge", q48IntervalMerge _, () => q48IntervalMergeSql),
+    QuerySpec("q49_histogram", (s, dir) => q49Histogram(s, dir),
+      () => q49HistogramSql(), Seq("cdf")),
+    QuerySpec("q50_event_gaps", q50EventGaps _, () => q50EventGapsSql),
+    QuerySpec("q51_funnel", q51Funnel _, () => q51FunnelSql),
+    QuerySpec("q52_retention", q52Retention _, () => q52RetentionSql),
+    QuerySpec("q59_markov_transitions", q59MarkovTransitions _,
+      () => q59MarkovTransitionsSql, Seq("p")),
+    QuerySpec("q60_event_paths", (s, dir) => q60EventPaths(s, dir), () => q60EventPathsSql()),
+    QuerySpec("q62_scd2_compress", q62Scd2Compress _, () => q62Scd2CompressSql),
+    QuerySpec("q63_mad_outliers", q63MadOutliers _, () => q63MadOutliersSql),
+    QuerySpec("q53_hist_quantiles", (s, dir) => q53HistQuantiles(s, dir),
+      () => q53HistQuantilesSql(), Seq("q")),
+    QuerySpec("q54_missing_days", q54MissingDays _, () => q54MissingDaysSql),
+    QuerySpec("q55_trending", (s, dir) => q55Trending(s, dir), () => q55TrendingSql()),
+    QuerySpec("q56_ab_lift", q56AbLift _, () => q56AbLiftSql, Seq("rate_a", "rate_b", "lift", "z")),
+    QuerySpec("q57_volume_drift", q57VolumeDrift _,
+      () => q57VolumeDriftSql, Seq("cum_dev", "drawdown")),
+    QuerySpec("q58_fuzzy_join", q58FuzzyJoin _, () => q58FuzzyJoinSql),
+    QuerySpec("q67_ntile", q67Ntile _, () => q67NtileSql, Seq("pct_rank", "cume")),
+    QuerySpec("q68_forward_fill", q68ForwardFill _, () => q68ForwardFillSql),
+    QuerySpec("q70_regional_revenue", (s, dir) => q70RegionalRevenue(s, dir),
+      () => q70RegionalRevenueSql()),
+    QuerySpec("q71_shipping_priority", (s, dir) => q71ShippingPriority(s, dir),
+      () => q71ShippingPrioritySql()),
+    QuerySpec("q72_dq_audit", q72DqAudit _, () => q72DqAuditSql),
+    QuerySpec("q73_big_orders", (s, dir) => q73BigOrders(s, dir), () => q73BigOrdersSql()),
+    QuerySpec("q74_returned_revenue", (s, dir) => q74ReturnedRevenue(s, dir),
+      () => q74ReturnedRevenueSql()),
+    QuerySpec("q75_volume_shipping", (s, dir) => q75VolumeShipping(s, dir),
+      () => q75VolumeShippingSql()),
+    QuerySpec("q76_promo_share", (s, dir) => q76PromoShare(s, dir), () => q76PromoShareSql()),
+    QuerySpec("q77_market_share", (s, dir) => q77MarketShare(s, dir), () => q77MarketShareSql()),
+    QuerySpec("q80_priority_class", (s, dir) => q80PriorityClass(s, dir),
+      () => q80PriorityClassSql()),
+    QuerySpec("q81_custdist", (s, dir) => q81CustDist(s, dir), () => q81CustDistSql),
+    QuerySpec("q82_small_qty_revenue", (s, dir) => q82SmallQtyRevenue(s, dir),
+      () => q82SmallQtyRevenueSql()),
+    QuerySpec("q83_sole_late_supplier", (s, dir) => q83SoleLateSupplier(s, dir),
+      () => q83SoleLateSupplierSql()),
+    QuerySpec("q84_idle_rich_customers", (s, dir) => q84IdleRichCustomers(s, dir),
+      () => q84IdleRichCustomersSql()),
+    QuerySpec("q85_top_supplier", (s, dir) => q85TopSupplier(s, dir), () => q85TopSupplierSql()),
+    QuerySpec("q86_disjunctive_revenue", (s, dir) => q86DisjunctiveRevenue(s, dir),
+      () => q86DisjunctiveRevenueSql),
+    QuerySpec("q87_nation_profit", (s, dir) => q87NationProfit(s, dir), () => q87NationProfitSql()),
+    QuerySpec("q88_user_ewma", (s, dir) => q88UserEwma(s, dir),
+      () => q88UserEwmaSql, Seq("ewma", "decay_sum")),
+    QuerySpec("q89_big_qty_orders", (s, dir) => q89BigQtyOrders(s, dir),
+      () => q89BigQtyOrdersSql()),
+    QuerySpec("q90_returned_ranking", (s, dir) => q90ReturnedRanking(s, dir),
+      () => q90ReturnedRankingSql()),
+    QuerySpec("q91_priority_check", (s, dir) => q91PriorityCheck(s, dir),
+      () => q91PriorityCheckSql()),
+    QuerySpec("q92_pricing_summary", (s, dir) => q92PricingSummary(s, dir),
+      () => q92PricingSummarySql()),
+    QuerySpec("q93_revenue_change", (s, dir) => q93RevenueChange(s, dir),
+      () => q93RevenueChangeSql()),
+    QuerySpec("q78_bad_records", q78BadRecords _, () => q78BadRecordsSql),
+    QuerySpec("q95_k_anonymity", (s, dir) => q95KAnonymity(s, dir), () => q95KAnonymitySql()),
+    QuerySpec("q79_dynamic_overwrite", q79DynamicOverwrite _, () => q79DynamicOverwriteSql),
+    QuerySpec("q96_min_cost_supplier", (s, dir) => q96MinCostSupplier(s, dir),
+      () => q96MinCostSupplierSql()),
+    QuerySpec("q97_important_stock", (s, dir) => q97ImportantStock(s, dir),
+      () => q97ImportantStockSql()),
+    QuerySpec("q98_supplier_cnt", (s, dir) => q98SupplierCnt(s, dir), () => q98SupplierCntSql()),
+    QuerySpec("q99_promotion_suppliers", (s, dir) => q99PromotionSuppliers(s, dir),
+      () => q99PromotionSuppliersSql()),
+    QuerySpec("q100_grouped_ols", (s, dir) => q100GroupedOls(s, dir),
+      () => q100GroupedOlsSql, Seq("slope", "intercept", "r2")),
   )
 }

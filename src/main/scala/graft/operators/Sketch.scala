@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -606,30 +607,19 @@ object Sketch {
        |GROUP BY q ORDER BY q""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q37_kmv_distinct" -> ((s: SparkSession, dir: String) =>
-      kmvDistinct(Tables.events(s, dir))),
-    "q38_heavy_hitters" -> ((s: SparkSession, dir: String) =>
-      heavyHitters(Tables.documents(s, dir))),
-    "q64_hll_distinct" -> ((s: SparkSession, dir: String) =>
-      hllDistinct(Tables.lineitem(s, dir))),
-    "q69_hll_windows" -> ((s: SparkSession, dir: String) =>
-      hllWindows(Tables.events(s, dir))),
-    "q65_cms_freq" -> ((s: SparkSession, dir: String) =>
-      cmsFreq(Tables.documents(s, dir))),
-    "q66_kmv_setops" -> ((s: SparkSession, dir: String) =>
-      kmvSetOps(Tables.documents(s, dir))),
-    "q94_hdr_quantiles" -> ((s: SparkSession, dir: String) =>
-      hdrQuantiles(Tables.orders(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q37_kmv_distinct" -> kmvDistinctSql(),
-    "q38_heavy_hitters" -> heavyHittersSql(),
-    "q64_hll_distinct" -> hllDistinctSql(),
-    "q69_hll_windows" -> hllWindowsSql(),
-    "q65_cms_freq" -> cmsFreqSql(),
-    "q66_kmv_setops" -> kmvSetOpsSql(),
-    "q94_hdr_quantiles" -> hdrQuantilesSql(),
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q37_kmv_distinct", (s, dir) => kmvDistinct(Tables.events(s, dir)),
+      () => kmvDistinctSql(), Seq("kmv_est")),
+    QuerySpec("q38_heavy_hitters", (s, dir) => heavyHitters(Tables.documents(s, dir)),
+      () => heavyHittersSql()),
+    QuerySpec("q64_hll_distinct", (s, dir) => hllDistinct(Tables.lineitem(s, dir)),
+      () => hllDistinctSql(), Seq("hll_est", "rel_err")),
+    QuerySpec("q69_hll_windows", (s, dir) => hllWindows(Tables.events(s, dir)),
+      () => hllWindowsSql(), Seq("hll_est", "rel_err")),
+    QuerySpec("q65_cms_freq", (s, dir) => cmsFreq(Tables.documents(s, dir)), () => cmsFreqSql()),
+    QuerySpec("q66_kmv_setops", (s, dir) => kmvSetOps(Tables.documents(s, dir)),
+      () => kmvSetOpsSql(), Seq("jaccard", "jaccard_est", "union_est")),
+    QuerySpec("q94_hdr_quantiles", (s, dir) => hdrQuantiles(Tables.orders(s, dir)),
+      () => hdrQuantilesSql()),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,12 +56,8 @@ object SkewJoin {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q26_salted_join" -> qSalted _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q26_salted_join" -> qSaltedSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q26_salted_join", qSalted _, () => qSaltedSql),
   )
 }
 
@@ -97,11 +94,7 @@ object Upsert {
       |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
       |ORDER BY o_orderkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q27_upsert" -> qUpsert _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q27_upsert" -> qUpsertSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q27_upsert", qUpsert _, () => qUpsertSql),
   )
 }

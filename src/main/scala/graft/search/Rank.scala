@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1059,43 +1060,48 @@ object Rank {
        |FROM dcg_t CROSS JOIN idcg_t""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t7_tfidf_batch" -> ((s: SparkSession, dir: String) => {
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t7_tfidf_batch", (s, dir) => {
       val p = cachedPostings(s, dir)
       searchBatch(p, TfIdf.docNorms(p), batchQueries)
-    }),
-    "t8_bm25_batch" -> ((s: SparkSession, dir: String) =>
+    }, () => searchBatchSql(batchQueries)),
+    QuerySpec("t8_bm25_batch", (s, dir) =>
       bm25Batch(cachedPostings(s, dir), batchQueries,
-        dlOpt = Some(cachedDl(s, dir)))),
-    "t4_bm25" -> ((s: SparkSession, dir: String) =>
-      bm25(cachedPostings(s, dir), bm25Terms, dlOpt = Some(cachedDl(s, dir)))),
-    "t5_phrase_search" -> ((s: SparkSession, dir: String) =>
-      phraseSearch(Tables.documents(s, dir), "table", "hash")),
-    "t6_more_like_this" -> ((s: SparkSession, dir: String) => {
+        dlOpt = Some(cachedDl(s, dir))),
+      () => bm25BatchSql(batchQueries), Seq("score")),
+    QuerySpec("t4_bm25", (s, dir) =>
+      bm25(cachedPostings(s, dir), bm25Terms, dlOpt = Some(cachedDl(s, dir))),
+      () => bm25Sql(bm25Terms), Seq("score")),
+    QuerySpec("t5_phrase_search", (s, dir) =>
+      phraseSearch(Tables.documents(s, dir), "table", "hash"),
+      () => phraseSearchSql("table", "hash")),
+    QuerySpec("t6_more_like_this", (s, dir) => {
       val p = cachedPostings(s, dir)
       moreLikeThis(p, TfIdf.docNorms(p), docId = 0L)
-    }),
-    "t9_hybrid_rrf" -> ((s: SparkSession, dir: String) => {
+    }, () => moreLikeThisSql(0L), Seq("score")),
+    QuerySpec("t9_hybrid_rrf", (s, dir) => {
       val p = cachedPostings(s, dir)
       hybridRrf(p, TfIdf.docNorms(p), Tables.embeddings(s, dir),
         bm25Terms, queryVec = 0L)
-    }),
-    "t10_ql_search" -> ((s: SparkSession, dir: String) =>
+    }, () => hybridRrfSql(bm25Terms, queryVec = 0L), Seq("rrf")),
+    QuerySpec("t10_ql_search", (s, dir) =>
       qlSearch(cachedPostings(s, dir), bm25Terms,
-        dlOpt = Some(cachedDl(s, dir)))),
-    "t11_rm3_search" -> ((s: SparkSession, dir: String) =>
+        dlOpt = Some(cachedDl(s, dir))),
+      () => qlSearchSql(bm25Terms), Seq("score")),
+    QuerySpec("t11_rm3_search", (s, dir) =>
       rm3Search(cachedPostings(s, dir), bm25Terms,
-        dlOpt = Some(cachedDl(s, dir)))),
-    "t12_textrank_keywords" -> ((s: SparkSession, dir: String) =>
-      textRank(Tables.documents(s, dir))),
-    "t13_fuzzy_search" -> ((s: SparkSession, dir: String) => {
+        dlOpt = Some(cachedDl(s, dir))),
+      () => rm3SearchSql(bm25Terms), Seq("score")),
+    QuerySpec("t12_textrank_keywords", (s, dir) => textRank(Tables.documents(s, dir)),
+      () => textRankSql()),
+    QuerySpec("t13_fuzzy_search", (s, dir) => {
       val p = cachedPostings(s, dir)
       fuzzySearch(p, TfIdf.docNorms(p), fuzzyTerms)
-    }),
-    "t14_ndcg_eval" -> ((s: SparkSession, dir: String) => {
+    }, () => fuzzySearchSql(fuzzyTerms)),
+    QuerySpec("t14_ndcg_eval", (s, dir) => {
       val p = cachedPostings(s, dir)
       ndcgEval(p, TfIdf.docNorms(p), evalTerms)
-    }),
+    }, () => ndcgEvalSql(evalTerms), Seq("dcg", "idcg", "ndcg", "rr")),
   )
 
   /** t2's query terms — t14 evaluates exactly the ranking t2 registers. */
@@ -1104,18 +1110,4 @@ object Rank {
   /** Two typos of corpus terms plus one exact term: the exact hit must
     * ride through at distance 0 / weight 1. */
   private val fuzzyTerms = Seq("sprak", "tabel", "query")
-
-  def oracles: Map[String, String] = Map(
-    "t7_tfidf_batch" -> searchBatchSql(batchQueries),
-    "t8_bm25_batch" -> bm25BatchSql(batchQueries),
-    "t4_bm25" -> bm25Sql(bm25Terms),
-    "t5_phrase_search" -> phraseSearchSql("table", "hash"),
-    "t6_more_like_this" -> moreLikeThisSql(0L),
-    "t9_hybrid_rrf" -> hybridRrfSql(bm25Terms, queryVec = 0L),
-    "t10_ql_search" -> qlSearchSql(bm25Terms),
-    "t11_rm3_search" -> rm3SearchSql(bm25Terms),
-    "t12_textrank_keywords" -> textRankSql(),
-    "t13_fuzzy_search" -> fuzzySearchSql(fuzzyTerms),
-    "t14_ndcg_eval" -> ndcgEvalSql(evalTerms),
-  )
 }

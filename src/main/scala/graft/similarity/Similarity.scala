@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -699,24 +700,25 @@ object Similarity {
     ps.headOption.getOrElse {
       require(allowUnseededOracleRender,
         "LSH oracle rendered before any query populated autoP — the " +
-          "render-after-run contract is broken (ADVICE r11). Keys-only " +
-          "consumers (RegistrySpec/QueryCount) must set " +
-          "allowUnseededOracleRender.")
+          "render-after-run contract is broken (ADVICE r11). Render a " +
+          "row's oracle only after its query ran.")
       6
     }
   }
 
-  /** Keys-only render escape hatch (ADVICE r11): registry-integrity
-    * consumers (RegistrySpec, tools.QueryCount) build the oracle map
-    * purely for its KEY SET, with no query run and hence empty planning
-    * caches — [[oracleP]]/[[oracleCells]]/[[oracleSweepBase]] would
-    * otherwise (correctly) refuse to render. Those consumers use
-    * [[withUnseededOracleRender]]; the full-registry comparison path
-    * (driver Verify) never does, so a render whose k or fact path could
-    * actually be WRONG fails loudly instead of silently defaulting.
+  /** Unseeded-render escape hatch (ADVICE r11). Registry readers never
+    * need it: `SparkEntry.specs` holds each oracle as a thunk, so names
+    * come without rendering, and Verify renders only the rows it ran.
+    * Its one remaining caller is the benchmark harness, which renders the
+    * whole `SparkEntry.oracleSql` map after running only its workload's
+    * queries — the unselected LSH/s20 oracles there would otherwise
+    * (correctly) refuse to render with empty planning caches
+    * ([[oracleP]]/[[oracleCells]]/[[oracleSweepBase]]). Every other render
+    * path keeps the fail-loud guard, so an oracle whose k or fact path
+    * could actually be WRONG fails instead of silently defaulting.
     * PRIVATE and scoped (ADVICE r12): the old public latched var let any
-    * suite that ran after RegistrySpec in the shared test JVM silently
-    * lose the fail-loud guard for the rest of the process. */
+    * suite that ran after the registry spec in the shared test JVM
+    * silently lose the fail-loud guard for the rest of the process. */
   @volatile private var allowUnseededOracleRender: Boolean = false
 
   /** Run `body` with the unseeded-render guard relaxed, restoring the
@@ -768,8 +770,7 @@ object Similarity {
       require(allowUnseededOracleRender,
         "s20 oracle rendered before any query populated autoCells — a " +
           "silent k default would point at the wrong k-suffixed artifact " +
-          "(ADVICE r11). Keys-only consumers must set " +
-          "allowUnseededOracleRender.")
+          "(ADVICE r11). Render a row's oracle only after its query ran.")
       4
     }
   }
@@ -1127,8 +1128,7 @@ object Similarity {
     bs.headOption.getOrElse {
       require(allowUnseededOracleRender,
         "s26 oracle rendered before the query wrote its sweep facts — " +
-          "the fallback path does not exist (ADVICE r11). Keys-only " +
-          "consumers must set allowUnseededOracleRender.")
+          "the fallback path does not exist (ADVICE r11).")
       ivfSweepBase("unset")
     }
   }
@@ -2774,8 +2774,8 @@ object Similarity {
     * corpus-sized assignment index to parquet — everything
     * query-INDEPENDENT. After this, [[annTwoStageServeOnly]] serves any
     * query without touching a fit or writing a corpus-sized fact. This
-    * split is the probe boundary `tools.ServeProbe` measures (SCALE.md:
-    * the serve path's cost must stay near-flat as the corpus grows,
+    * split is the probe boundary SCALE.md "s19 serve-only probe" measured
+    * (the serve path's cost must stay near-flat as the corpus grows,
     * because raw floats are only read for `shortlist` rows/query). */
   def warmTwoStageIndex(s: SparkSession, dir: String, m: Int = 8, kc: Int = 8,
                         iters: Int = 2, nCentroids: Int = 16): Unit = {
@@ -2859,102 +2859,76 @@ object Similarity {
        |ORDER BY cos DESC, s.vec_id ASC LIMIT $k""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_knn_brute" -> ((s: SparkSession, dir: String) =>
-      knnBrute(Tables.embeddings(s, dir), queryId = 0L)),
-    "s23_mmr_rerank" -> ((s: SparkSession, dir: String) =>
-      mmrRerank(Tables.embeddings(s, dir), queryId = 0L)),
-    "s24_sq8_recall" -> ((s: SparkSession, dir: String) =>
-      sq8Recall(Tables.embeddings(s, dir))),
-    "s25_mrl_recall" -> ((s: SparkSession, dir: String) =>
-      mrlRecall(Tables.embeddings(s, dir))),
-    "s2_ann_lsh" -> ((s: SparkSession, dir: String) =>
+  // LSH-family oracles read oracleP — resolved from the per-dir autoP
+  // cache every query consults, so subset runs and execution order can
+  // never desynchronize oracle and engine (round-6 fix)
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("s1_knn_brute", (s, dir) => knnBrute(Tables.embeddings(s, dir), queryId = 0L),
+      () => knnBruteSql(0L), Seq("cos")),
+    QuerySpec("s23_mmr_rerank", (s, dir) => mmrRerank(Tables.embeddings(s, dir), queryId = 0L),
+      () => mmrRerankSql(0L), Seq("mmr")),
+    QuerySpec("s24_sq8_recall", (s, dir) => sq8Recall(Tables.embeddings(s, dir)),
+      () => sq8RecallSql(), Seq("recall")),
+    QuerySpec("s25_mrl_recall", (s, dir) => mrlRecall(Tables.embeddings(s, dir)),
+      () => mrlRecallSql(), Seq("recall")),
+    QuerySpec("s2_ann_lsh", (s, dir) =>
       annLsh(Tables.embeddings(s, dir), queryId = 0L,
-        p = autoPForDir(s, dir))),
-    "s3_near_dup_pairs" -> ((s: SparkSession, dir: String) =>
-      nearDupPairsFromScored(cachedScoredPairs(s, dir))),
-    "s5_embedding_clusters" -> ((s: SparkSession, dir: String) =>
-      cachedClusters(s, dir).orderBy("vec_id")),
+        p = autoPForDir(s, dir)),
+      () => annLshSql(0L, p = oracleP), Seq("cos")),
+    QuerySpec("s3_near_dup_pairs", (s, dir) => nearDupPairsFromScored(cachedScoredPairs(s, dir)),
+      () => nearDupPairsSql(p = oracleP), Seq("cos")),
+    QuerySpec("s5_embedding_clusters", (s, dir) => cachedClusters(s, dir).orderBy("vec_id"),
+      () => embeddingClustersSql(p = oracleP)),
     // the quantizer fit stays in Spark (not SQL-expressible); the
     // assignments are persisted so everything downstream of the fit —
     // probe pruning + exact re-rank — is DuckDB hash-checked. Recall is
     // additionally test-enforced against brute force in SimilaritySpec.
-    "s4_ann_ivf" -> ((s: SparkSession, dir: String) =>
-      annIvfServed(s, dir, queryId = 0L)),
-    "s6_label_centroids" -> ((s: SparkSession, dir: String) =>
-      labelCentroids(Tables.embeddings(s, dir))),
-    "s7_ann_batch" -> ((s: SparkSession, dir: String) =>
-      knnBatch(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L))),
-    "s8_ann_int8" -> ((s: SparkSession, dir: String) =>
-      annInt8(Tables.embeddings(s, dir), queryId = 0L)),
-    "s9_centroid_assign" -> ((s: SparkSession, dir: String) =>
-      centroidAssign(Tables.embeddings(s, dir))),
-    "s10_kmeans" -> ((s: SparkSession, dir: String) =>
-      cachedKmeans(s, dir).orderBy("vec_id")),
-    "s27_silhouette" -> ((s: SparkSession, dir: String) =>
-      silhouetteFrom(Tables.embeddings(s, dir), cachedKmeans(s, dir))),
-    "s11_knn_graph" -> ((s: SparkSession, dir: String) =>
-      knnGraphFromScored(cachedScoredPairs(s, dir))),
-    "s12_semantic_dedup" -> ((s: SparkSession, dir: String) =>
-      semanticDedup(Tables.embeddings(s, dir), cachedClusters(s, dir))),
-    "s13_hard_negatives" -> ((s: SparkSession, dir: String) =>
-      hardNegatives(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L))),
-    "m17_ndcg" -> ((s: SparkSession, dir: String) =>
-      ndcgAtK(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L))),
-    "s14_ann_recall" -> ((s: SparkSession, dir: String) =>
+    QuerySpec("s4_ann_ivf", (s, dir) => annIvfServed(s, dir, queryId = 0L),
+      () => annIvfSql(0L), Seq("cos")),
+    QuerySpec("s6_label_centroids", (s, dir) => labelCentroids(Tables.embeddings(s, dir)),
+      () => labelCentroidsSql, Seq("centroid")),
+    QuerySpec("s7_ann_batch", (s, dir) =>
+      knnBatch(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L)),
+      () => knnBatchSql(Seq(0L, 1L, 2L, 3L, 4L)), Seq("cos")),
+    QuerySpec("s8_ann_int8", (s, dir) => annInt8(Tables.embeddings(s, dir), queryId = 0L),
+      () => annInt8Sql(0L)),
+    QuerySpec("s9_centroid_assign", (s, dir) => centroidAssign(Tables.embeddings(s, dir)),
+      () => centroidAssignSql),
+    QuerySpec("s10_kmeans", (s, dir) => cachedKmeans(s, dir).orderBy("vec_id"), () => kmeansSql()),
+    QuerySpec("s27_silhouette", (s, dir) =>
+      silhouetteFrom(Tables.embeddings(s, dir), cachedKmeans(s, dir)),
+      () => silhouetteSql(), Seq("mean_s")),
+    QuerySpec("s11_knn_graph", (s, dir) => knnGraphFromScored(cachedScoredPairs(s, dir)),
+      () => knnGraphSql(p = oracleP), Seq("cos")),
+    QuerySpec("s12_semantic_dedup", (s, dir) =>
+      semanticDedup(Tables.embeddings(s, dir), cachedClusters(s, dir)),
+      () => semanticDedupSql(p = oracleP)),
+    QuerySpec("s13_hard_negatives", (s, dir) =>
+      hardNegatives(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L)),
+      () => hardNegativesSql(Seq(0L, 1L, 2L, 3L, 4L)), Seq("cos")),
+    QuerySpec("m17_ndcg", (s, dir) =>
+      ndcgAtK(Tables.embeddings(s, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L)),
+      () => ndcgAtKSql(Seq(0L, 1L, 2L, 3L, 4L)), Seq("dcg", "idcg", "ndcg")),
+    QuerySpec("s14_ann_recall", (s, dir) =>
       annRecall(Tables.embeddings(s, dir), queryId = 0L,
-        p = autoPForDir(s, dir))),
-    "s15_ann_pq" -> ((s: SparkSession, dir: String) =>
-      annPqServed(s, dir, queryId = 0L)),
-    "s19_ann_twostage" -> ((s: SparkSession, dir: String) =>
-      annTwoStageServed(s, dir, queryId = 0L)),
-    "s16_mips" -> ((s: SparkSession, dir: String) =>
-      mipsBrute(Tables.embeddings(s, dir), queryId = 0L)),
-    "s17_filtered_ann" -> ((s: SparkSession, dir: String) =>
-      filteredKnn(Tables.embeddings(s, dir), queryId = 0L, labelEq = 3)),
-    "s18_pca_power" -> ((s: SparkSession, dir: String) =>
-      pcaPower(Tables.embeddings(s, dir))),
-    "s20_incremental_assign" -> ((s: SparkSession, dir: String) =>
-      incrementalAssign(s, dir)),
-    "s21_cell_occupancy" -> ((s: SparkSession, dir: String) =>
-      cellOccupancy(s, dir)),
-    "s22_ingest_merge" -> ((s: SparkSession, dir: String) =>
-      ingestMerge(s, dir)),
-    "s26_nprobe_recall" -> ((s: SparkSession, dir: String) =>
-      nprobeRecall(s, dir)),
-  )
-
-  // LSH-family oracles read oracleP — resolved from the per-dir autoP
-  // cache every query consults, so subset runs and execution order can
-  // never desynchronize oracle and engine (round-6 fix)
-  def oracles: Map[String, String] = Map(
-    "s1_knn_brute" -> knnBruteSql(0L),
-    "s23_mmr_rerank" -> mmrRerankSql(0L),
-    "s24_sq8_recall" -> sq8RecallSql(),
-    "s25_mrl_recall" -> mrlRecallSql(),
-    "s2_ann_lsh" -> annLshSql(0L, p = oracleP),
-    "s3_near_dup_pairs" -> nearDupPairsSql(p = oracleP),
-    "s5_embedding_clusters" -> embeddingClustersSql(p = oracleP),
-    "s4_ann_ivf" -> annIvfSql(0L),
-    "s6_label_centroids" -> labelCentroidsSql,
-    "s7_ann_batch" -> knnBatchSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "s8_ann_int8" -> annInt8Sql(0L),
-    "s9_centroid_assign" -> centroidAssignSql,
-    "s10_kmeans" -> kmeansSql(),
-    "s27_silhouette" -> silhouetteSql(),
-    "s11_knn_graph" -> knnGraphSql(p = oracleP),
-    "s12_semantic_dedup" -> semanticDedupSql(p = oracleP),
-    "s13_hard_negatives" -> hardNegativesSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "m17_ndcg" -> ndcgAtKSql(Seq(0L, 1L, 2L, 3L, 4L)),
-    "s14_ann_recall" -> annRecallSql(0L, p = oracleP),
-    "s15_ann_pq" -> annPqSql(0L),
-    "s19_ann_twostage" -> annTwoStageSql(0L),
-    "s16_mips" -> mipsBruteSql(0L),
-    "s17_filtered_ann" -> filteredKnnSql(0L, labelEq = 3),
-    "s18_pca_power" -> pcaPowerSql(),
-    "s20_incremental_assign" -> incrementalAssignSql(),
-    "s21_cell_occupancy" -> cellOccupancySql(),
-    "s22_ingest_merge" -> ingestMergeSql(),
-    "s26_nprobe_recall" -> nprobeRecallSql(),
+        p = autoPForDir(s, dir)),
+      () => annRecallSql(0L, p = oracleP), Seq("recall")),
+    QuerySpec("s15_ann_pq", (s, dir) => annPqServed(s, dir, queryId = 0L),
+      () => annPqSql(0L), Seq("adc")),
+    QuerySpec("s19_ann_twostage", (s, dir) => annTwoStageServed(s, dir, queryId = 0L),
+      () => annTwoStageSql(0L), Seq("adc", "cos")),
+    QuerySpec("s16_mips", (s, dir) => mipsBrute(Tables.embeddings(s, dir), queryId = 0L),
+      () => mipsBruteSql(0L), Seq("ip")),
+    QuerySpec("s17_filtered_ann", (s, dir) =>
+      filteredKnn(Tables.embeddings(s, dir), queryId = 0L, labelEq = 3),
+      () => filteredKnnSql(0L, labelEq = 3), Seq("cos")),
+    QuerySpec("s18_pca_power", (s, dir) => pcaPower(Tables.embeddings(s, dir)),
+      () => pcaPowerSql(), Seq("loading")),
+    QuerySpec("s20_incremental_assign", (s, dir) => incrementalAssign(s, dir),
+      () => incrementalAssignSql()),
+    QuerySpec("s21_cell_occupancy", (s, dir) => cellOccupancy(s, dir), () => cellOccupancySql()),
+    QuerySpec("s22_ingest_merge", (s, dir) => ingestMerge(s, dir), () => ingestMergeSql()),
+    QuerySpec("s26_nprobe_recall", (s, dir) => nprobeRecall(s, dir),
+      () => nprobeRecallSql(), Seq("recall")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
 import java.sql.Timestamp
 
@@ -37,7 +38,7 @@ import graft.sources.Tables
   */
 object EventStream {
   /** Default state-store count for stateful streaming queries — the
-    * sizing rule the StreamScaleProbe measured (SCALE.md round-15): a
+    * sizing rule SCALE.md "Streaming wall-floor isolation" measured: a
     * stateful query creates one state store per shuffle partition and
     * commits EVERY store EVERY micro-batch (~50 ms each through one
     * local filesystem), so the stream's wall floor is
@@ -794,36 +795,9 @@ object EventStream {
       .orderBy("wstart", "q")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st11_hourly_quantiles" -> ((s: SparkSession, dir: String) =>
-      quantilesFromHist(hourlyQuantileHist(Tables.events(s, dir)))),
-    "st9_enriched_segments" -> ((s: SparkSession, dir: String) =>
-      enrichedSegmentCounts(Tables.events(s, dir), Tables.customer(s, dir))
-        .orderBy("segment", "event_type")),
-    "st1_tumbling_counts" -> ((s: SparkSession, dir: String) =>
-      tumblingCounts(Tables.events(s, dir)).orderBy("wstart", "sentiment")),
-    "st2_sliding_counts" -> ((s: SparkSession, dir: String) =>
-      slidingCounts(Tables.events(s, dir)).orderBy("wstart", "sentiment")),
-    "st3_sessions" -> ((s: SparkSession, dir: String) =>
-      sessionize(Tables.events(s, dir), gapSec = 8 * 3600)
-        .orderBy("user_id", "session_id")),
-    "st4_session_window" -> ((s: SparkSession, dir: String) =>
-      sessionWindows(Tables.events(s, dir), gapSec = 8 * 3600)
-        .orderBy("user_id", "s_start")),
-    "st5_hourly_users" -> ((s: SparkSession, dir: String) =>
-      hourlyUsers(Tables.events(s, dir)).orderBy("wstart")),
-    "st6_attribution" -> ((s: SparkSession, dir: String) =>
-      attribution(Tables.events(s, dir)).orderBy("user_id")),
-    "st7_stream_dedup" -> ((s: SparkSession, dir: String) =>
-      dedupDelivery(Tables.events(s, dir))),
-    "st8_daily_rollup" -> ((s: SparkSession, dir: String) =>
-      dailyRollup(Tables.events(s, dir)).orderBy("day", "event_type")),
-    "st10_attribution_outer" -> ((s: SparkSession, dir: String) =>
-      attributionOuter(Tables.events(s, dir))),
-  )
-
-  def oracles: Map[String, String] = Map(
-    "st11_hourly_quantiles" ->
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("st11_hourly_quantiles", (s, dir) =>
+      quantilesFromHist(hourlyQuantileHist(Tables.events(s, dir))), () =>
       """WITH cents_t AS (
         |  SELECT time_bucket(INTERVAL '1 hour', ts) AS wstart,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -846,20 +820,32 @@ object EventStream {
         |  CAST(MIN(n) AS BIGINT) AS n
         |FROM cum_t c JOIN tot USING (wstart) CROSS JOIN targets
         |WHERE cum >= CAST(ceil(CAST(q AS DECIMAL(8,2)) * n) AS BIGINT)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "st1_tumbling_counts" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("st9_enriched_segments", (s, dir) =>
+      enrichedSegmentCounts(Tables.events(s, dir), Tables.customer(s, dir))
+        .orderBy("segment", "event_type"), () =>
+      """SELECT c.c_mktsegment AS segment, e.event_type,
+        |  count(*) AS n,
+        |  CAST(SUM(CAST(e.value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("st1_tumbling_counts", (s, dir) =>
+      tumblingCounts(Tables.events(s, dir)).orderBy("wstart", "sentiment"), () =>
       """SELECT time_bucket(INTERVAL '1 hour', ts) AS wstart,
         |  CASE WHEN value < 5 THEN 'NEG' WHEN value < 15 THEN 'NEUTRAL' ELSE 'POS' END AS sentiment,
         |  count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "st2_sliding_counts" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("st2_sliding_counts", (s, dir) =>
+      slidingCounts(Tables.events(s, dir)).orderBy("wstart", "sentiment"), () =>
       """WITH e AS (
         |  SELECT time_bucket(INTERVAL '12 hours', ts) - u.i * INTERVAL '12 hours' AS wstart,
         |    CASE WHEN value < 5 THEN 'NEG' WHEN value < 15 THEN 'NEUTRAL' ELSE 'POS' END AS sentiment
         |  FROM events, UNNEST(range(2)) AS u(i))
         |SELECT wstart, sentiment, count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "st3_sessions" ->
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("st3_sessions", (s, dir) =>
+      sessionize(Tables.events(s, dir), gapSec = 8 * 3600)
+        .orderBy("user_id", "session_id"), () =>
       """WITH o AS (
         |  SELECT user_id, ts, event_id,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -877,8 +863,10 @@ object EventStream {
         |)
         |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
         |  count(*) AS n_events, min(ts) AS s_start, max(ts) AS s_end
-        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "st4_session_window" ->
+        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    QuerySpec("st4_session_window", (s, dir) =>
+      sessionWindows(Tables.events(s, dir), gapSec = 8 * 3600)
+        .orderBy("user_id", "s_start"), () =>
       """WITH o AS (
         |  SELECT user_id, ts, event_id,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -894,38 +882,35 @@ object EventStream {
         |  FROM flagged
         |)
         |SELECT user_id, count(*) AS n_events, min(ts) AS s_start, max(ts) AS s_end
-        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, s_start""".stripMargin,
-    "st5_hourly_users" ->
+        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, s_start""".stripMargin),
+    QuerySpec("st5_hourly_users", (s, dir) =>
+      hourlyUsers(Tables.events(s, dir)).orderBy("wstart"), () =>
       """SELECT time_bucket(INTERVAL '1 hour', ts) AS wstart,
         |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "st6_attribution" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("st6_attribution", (s, dir) =>
+      attribution(Tables.events(s, dir)).orderBy("user_id"), () =>
       """WITH v AS (SELECT user_id, epoch_us(ts) AS view_us FROM events WHERE event_type = 'view'),
         |c AS (SELECT user_id, epoch_us(ts) AS click_us FROM events WHERE event_type = 'click')
         |SELECT v.user_id, count(*) AS n_attributed
         |FROM v JOIN c ON v.user_id = c.user_id
         | AND c.click_us >= v.view_us AND c.click_us <= v.view_us + 3600000000
-        |GROUP BY v.user_id ORDER BY v.user_id""".stripMargin,
-    "st7_stream_dedup" ->
+        |GROUP BY v.user_id ORDER BY v.user_id""".stripMargin),
+    QuerySpec("st7_stream_dedup", (s, dir) => dedupDelivery(Tables.events(s, dir)), () =>
       """WITH delivered AS (
         |  SELECT * FROM events
         |  UNION ALL SELECT * FROM events WHERE event_id % 10 = 0
         |), dd AS (SELECT DISTINCT * FROM delivered)
         |SELECT event_type, count(*) AS n_events,
         |       count(DISTINCT user_id) AS n_users
-        |FROM dd GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "st8_daily_rollup" ->
+        |FROM dd GROUP BY event_type ORDER BY event_type""".stripMargin),
+    QuerySpec("st8_daily_rollup", (s, dir) =>
+      dailyRollup(Tables.events(s, dir)).orderBy("day", "event_type"), () =>
       """SELECT time_bucket(INTERVAL '1 day', ts) AS day, event_type,
         |  count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "st9_enriched_segments" ->
-      """SELECT c.c_mktsegment AS segment, e.event_type,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "st10_attribution_outer" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("st10_attribution_outer", (s, dir) => attributionOuter(Tables.events(s, dir)), () =>
       """WITH v AS (SELECT user_id, event_id AS view_id, epoch_us(ts) AS view_us
         |  FROM events WHERE event_type = 'view'),
         |c AS (SELECT user_id AS c_user, epoch_us(ts) AS click_us
@@ -938,6 +923,6 @@ object EventStream {
         |  CAST(COUNT(DISTINCT view_id) AS BIGINT) AS n_views,
         |  CAST(COUNT(click_us) AS BIGINT) AS n_attributed,
         |  CAST(COUNT(DISTINCT CASE WHEN click_us IS NULL THEN view_id END) AS BIGINT) AS n_orphan_views
-        |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin),
   )
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -687,9 +688,10 @@ object TextStats {
   /** [[bpeMerges]] over a pre-built (word, freq) frame — the probe
     * entry point: the registered corpora cap out at a 31-word vocab
     * (89 merges to exhaustion), so realistic merge counts need a
-    * FABRICATED rich vocabulary (BpeMergeProbe), and fabricating word
-    * counts directly skips re-materializing a giant synthetic corpus
-    * whose only purpose is to be re-counted. */
+    * FABRICATED rich vocabulary (SCALE.md "BPE training at realistic
+    * merge counts"), and fabricating word counts directly skips
+    * re-materializing a giant synthetic corpus whose only purpose is to
+    * be re-counted. */
   private[graft] def bpeMergesFromWordCounts(wc: DataFrame, rounds: Int,
                                              recordKey: Option[String] = None): DataFrame = {
     val vgen = graft.plans.Lineage.gen() // keep-2 vocab chain (Lineage.Gen)
@@ -723,7 +725,7 @@ object TextStats {
       // eagerly re-analyzes the growing flattened Union, so a linear
       // fold over one 1-row frame per merge is O(rounds²) plan
       // construction on the driver — fine at rounds=10, a bottleneck
-      // at BpeMergeProbe's 10³+ targets. Tree shape analyzes
+      // at the 10³+ targets SCALE.md's BPE sections measure. Tree shape analyzes
       // O(rounds·log rounds) nodes total (ADVICE r14).
       var layer = merges
       while (layer.size > 1)
@@ -2151,92 +2153,53 @@ object TextStats {
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x1_entity_count" -> xEntityCount _,
-    "x2_lang_id" -> xLangId _,
-    "x3_quality" -> xQuality _,
-    "x4_token_count" -> xTokenCount _,
-    "x5_fingerprint" -> xFingerprint _,
-    "x6_hash_split" -> xHashSplit _,
-    "x7_repetition" -> ((s: SparkSession, dir: String) =>
-      repetition(docsTok(s, dir))),
-    "x8_pii_scrub" -> ((s: SparkSession, dir: String) =>
-      piiScrub(Tables.documents(s, dir), plantedText)),
-    "x9_stratified_sample" -> ((s: SparkSession, dir: String) =>
-      stratifiedSample(Tables.documents(s, dir))),
-    "x10_mix_weights" -> ((s: SparkSession, dir: String) =>
-      mixWeights(docsTok(s, dir))),
-    "x11_sequence_pack" -> ((s: SparkSession, dir: String) =>
-      sequencePack(docsTok(s, dir))),
-    "x13_bpe_merges" -> xBpeMerges _,
-    "x14_unigram_logprob" -> ((s: SparkSession, dir: String) =>
-      cachedLogprob(s, dir).orderBy("doc_id")),
-    "x15_ppl_buckets" -> ((s: SparkSession, dir: String) =>
-      pplBuckets(cachedLogprob(s, dir))),
-    "x16_bigram_logprob" -> ((s: SparkSession, dir: String) =>
-      bigramLogprob(docsTok(s, dir))),
-    "x17_source_profile" -> ((s: SparkSession, dir: String) =>
-      sourceProfile(docsTok(s, dir))),
-    "x18_vocab_coverage" -> ((s: SparkSession, dir: String) =>
-      vocabCoverage(docsTok(s, dir))),
-    "x19_rag_chunks" -> ((s: SparkSession, dir: String) =>
-      ragChunks(docsTok(s, dir))),
-    "x20_source_kl" -> ((s: SparkSession, dir: String) =>
-      sourceKl(docsTok(s, dir))),
-    "x21_cdc_chunks" -> ((s: SparkSession, dir: String) =>
-      cdcChunks(docsTok(s, dir))),
-    "x22_zipf_slope" -> ((s: SparkSession, dir: String) =>
-      zipfSlope(docsTok(s, dir))),
-    "x23_heaps_law" -> ((s: SparkSession, dir: String) =>
-      heapsLaw(docsTok(s, dir))),
-    "x24_lang_confusion" -> xLangConfusion _,
-    "x27_weighted_sample" -> ((s: SparkSession, dir: String) =>
-      xWeightedSample(Tables.documents(s, dir))),
-    "x25_js_divergence" -> ((s: SparkSession, dir: String) =>
-      jsDivergence(docsTok(s, dir))),
-    "x26_filter_funnel" -> ((s: SparkSession, dir: String) =>
-      filterFunnel(docsTok(s, dir))),
-    "x28_token_waterfill" -> ((s: SparkSession, dir: String) =>
-      tokenWaterfill(docsTok(s, dir))),
-    "x29_dsir_weights" -> ((s: SparkSession, dir: String) =>
-      dsirWeights(docsTok(s, dir))),
-    "x30_bpe_train" -> xBpeTrain _,
-    "x31_bpe_encode" -> xBpeEncode _,
-    "x32_bpe_batch" -> xBpeBatch _,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "x1_entity_count" -> xEntityCountSql,
-    "x2_lang_id" -> xLangIdSql,
-    "x3_quality" -> xQualitySql,
-    "x4_token_count" -> xTokenCountSql,
-    "x5_fingerprint" -> xFingerprintSql,
-    "x6_hash_split" -> xHashSplitSql,
-    "x7_repetition" -> xRepetitionSql,
-    "x8_pii_scrub" -> xPiiScrubSql,
-    "x9_stratified_sample" -> stratifiedSampleSql(),
-    "x10_mix_weights" -> mixWeightsSql(),
-    "x11_sequence_pack" -> sequencePackSql(),
-    "x13_bpe_merges" -> xBpeMergesSql(),
-    "x14_unigram_logprob" -> unigramLogprobSql,
-    "x15_ppl_buckets" -> pplBucketsSql(),
-    "x16_bigram_logprob" -> bigramLogprobSql,
-    "x17_source_profile" -> sourceProfileSql,
-    "x18_vocab_coverage" -> vocabCoverageSql(),
-    "x19_rag_chunks" -> ragChunksSql,
-    "x20_source_kl" -> sourceKlSql,
-    "x21_cdc_chunks" -> cdcChunksSql(),
-    "x22_zipf_slope" -> zipfSlopeSql(),
-    "x23_heaps_law" -> heapsLawSql(),
-    "x24_lang_confusion" -> xLangConfusionSql,
-    "x25_js_divergence" -> jsDivergenceSql,
-    "x27_weighted_sample" -> xWeightedSampleSql(),
-    "x26_filter_funnel" -> filterFunnelSql,
-    "x28_token_waterfill" -> tokenWaterfillSql(),
-    "x29_dsir_weights" -> dsirWeightsSql,
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("x1_entity_count", xEntityCount _, () => xEntityCountSql),
+    QuerySpec("x2_lang_id", xLangId _, () => xLangIdSql),
+    QuerySpec("x3_quality", xQuality _, () => xQualitySql),
+    QuerySpec("x4_token_count", xTokenCount _, () => xTokenCountSql),
+    QuerySpec("x5_fingerprint", xFingerprint _, () => xFingerprintSql),
+    QuerySpec("x6_hash_split", xHashSplit _, () => xHashSplitSql),
+    QuerySpec("x7_repetition", (s, dir) => repetition(docsTok(s, dir)), () => xRepetitionSql),
+    QuerySpec("x8_pii_scrub", (s, dir) => piiScrub(Tables.documents(s, dir), plantedText),
+      () => xPiiScrubSql),
+    QuerySpec("x9_stratified_sample", (s, dir) => stratifiedSample(Tables.documents(s, dir)),
+      () => stratifiedSampleSql()),
+    QuerySpec("x10_mix_weights", (s, dir) => mixWeights(docsTok(s, dir)), () => mixWeightsSql()),
+    QuerySpec("x11_sequence_pack", (s, dir) => sequencePack(docsTok(s, dir)),
+      () => sequencePackSql()),
+    QuerySpec("x13_bpe_merges", xBpeMerges _, () => xBpeMergesSql()),
+    QuerySpec("x14_unigram_logprob", (s, dir) => cachedLogprob(s, dir).orderBy("doc_id"),
+      () => unigramLogprobSql, Seq("sum_logp", "avg_logp")),
+    QuerySpec("x15_ppl_buckets", (s, dir) => pplBuckets(cachedLogprob(s, dir)),
+      () => pplBucketsSql(), Seq("lo", "hi")),
+    QuerySpec("x16_bigram_logprob", (s, dir) => bigramLogprob(docsTok(s, dir)),
+      () => bigramLogprobSql, Seq("sum_logp", "avg_logp")),
+    QuerySpec("x17_source_profile", (s, dir) => sourceProfile(docsTok(s, dir)),
+      () => sourceProfileSql, Seq("en_frac")),
+    QuerySpec("x18_vocab_coverage", (s, dir) => vocabCoverage(docsTok(s, dir)),
+      () => vocabCoverageSql(), Seq("coverage")),
+    QuerySpec("x19_rag_chunks", (s, dir) => ragChunks(docsTok(s, dir)), () => ragChunksSql),
+    QuerySpec("x20_source_kl", (s, dir) => sourceKl(docsTok(s, dir)), () => sourceKlSql, Seq("kl")),
+    QuerySpec("x21_cdc_chunks", (s, dir) => cdcChunks(docsTok(s, dir)), () => cdcChunksSql()),
+    QuerySpec("x22_zipf_slope", (s, dir) => zipfSlope(docsTok(s, dir)),
+      () => zipfSlopeSql(), Seq("slope", "intercept")),
+    QuerySpec("x23_heaps_law", (s, dir) => heapsLaw(docsTok(s, dir)),
+      () => heapsLawSql(), Seq("beta", "log_k")),
+    QuerySpec("x24_lang_confusion", xLangConfusion _, () => xLangConfusionSql),
+    QuerySpec("x27_weighted_sample", (s, dir) => xWeightedSample(Tables.documents(s, dir)),
+      () => xWeightedSampleSql(), Seq("key")),
+    QuerySpec("x25_js_divergence", (s, dir) => jsDivergence(docsTok(s, dir)),
+      () => jsDivergenceSql, Seq("js")),
+    QuerySpec("x26_filter_funnel", (s, dir) => filterFunnel(docsTok(s, dir)),
+      () => filterFunnelSql),
+    QuerySpec("x28_token_waterfill", (s, dir) => tokenWaterfill(docsTok(s, dir)),
+      () => tokenWaterfillSql()),
+    QuerySpec("x29_dsir_weights", (s, dir) => dsirWeights(docsTok(s, dir)),
+      () => dsirWeightsSql, Seq("logw")),
     // built after the queries run: unroll the recorded merge rounds
-    "x30_bpe_train" -> xBpeTrainSql(),
-    "x31_bpe_encode" -> xBpeEncodeSql(),
-    "x32_bpe_batch" -> xBpeBatchSql(),
+    QuerySpec("x30_bpe_train", xBpeTrain _, () => xBpeTrainSql()),
+    QuerySpec("x31_bpe_encode", xBpeEncode _, () => xBpeEncodeSql(), Seq("chars_per_token")),
+    QuerySpec("x32_bpe_batch", xBpeBatch _, () => xBpeBatchSql()),
   )
 }

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB attribution trace (round-17 measurement lens, guide §1).
   *
@@ -18,18 +17,10 @@ import org.apache.spark.sql.SparkSession
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(2)
     val name = sys.env.getOrElse("SPARK_GRAFT_ONLY", "g14_hits")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
 
     case class J(id: Int, stages: Int, site: String, desc: String)

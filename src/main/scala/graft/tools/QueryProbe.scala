@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query execution-shape profiler (round-16 optimization lens).
@@ -32,25 +31,16 @@ import org.apache.spark.sql.execution.ExplainMode
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(3)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val rows = graft.SparkEntry.selected().sortBy(_.name)
     val plansDir = sys.env.get("SPARK_GRAFT_PLANS_DIR")
     // A/B experiment knob: SPARK_GRAFT_CONF="key=val;key=val" overlays
     // arbitrary session confs on the Bench-identical baseline below
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
       .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
+    val spark = extra.foldLeft(graft.GraftSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -86,10 +76,10 @@ object QueryProbe {
       shufReadB.set(0); shufWriteB.set(0)
     }
 
-    val qseq = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.contains(kv._1)))
     println("name\twall_med\tjobs\tstages\ttasks\ttask_time_s\ttask_cpu_s\tdeser_s\tshuf_read_mb\tshuf_write_mb\tgc_ms")
-    qseq.foreach { case (name, fn) =>
+    rows.foreach { q =>
+      val name = q.name
+      val fn = graft.SparkEntry.run(q) _
       // listener events are async — settle before the delta bracket
       def settle(): Unit = Thread.sleep(300)
       val walls = (1 to reps).map { r =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fabricates an F× replica corpus for measured scale probes (SCALE.md
@@ -47,14 +46,7 @@ object ScaleProbe {
     val skewNames = args.length == 4
     val f = fStr.toInt
     require(f >= 1, s"factor must be >= 1, got $f")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val reps = spark.range(f).toDF("rep")
 

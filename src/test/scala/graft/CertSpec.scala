@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Conventions the assertions rely on:
   *  - decimal output columns arrive as micro-unit BIGINT (the driver's
   *    `CAST(col * 1000000 AS BIGINT)` wrapper — see
-  *    `SparkEntry.microCols`), so ratios live in [0, 1000000];
+  *    each `QuerySpec` row's `microCols`), so ratios live in [0, 1000000];
   *  - result ordering is part of each query's contract (same ORDER BY
   *    on both engines), so positional assertions are legal.
   */

@@ -2,37 +2,39 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry integrity: the driver's correctness gate hash-compares only
-  * queries that have BOTH a `queries` entry and an `oracleSql` entry —
-  * a missing oracle silently downgrades that query to a weaker
-  * rows-only check. This spec makes the promise "every registered query
-  * is oracle-checked" a CI failure instead of a silent downgrade.
-  * (Pure map checks — no SparkSession needed.)
+/** Registry integrity. One [[QuerySpec]] row per query carries its
+  * engine dataflow, its oracle and its decimal columns, so "every query
+  * has an oracle" and "decimal lists name only registered queries" hold
+  * by construction. What is left to check: names are unique and follow
+  * the convention, and every id is documented and certified.
+  * (Names only — no SparkSession, and no oracle SQL is rendered.)
   */
 class RegistrySpec extends AnyFunSuite {
 
-  // keys-only consumer: no query has run here, so cache-resolved oracle
-  // renders (s20/s26 family) need the documented escape hatch — SCOPED
-  // to this one render (ADVICE r12: the old latched var disabled the
-  // guard for every later suite in the shared test JVM)
-  private val oracleKeys = graft.similarity.Similarity
-    .withUnseededOracleRender(SparkEntry.oracleSql.keySet)
+  private val names: Seq[String] = SparkEntry.specs.map(_.name)
 
-  test("every registered query has an oracle, and no oracle is orphaned") {
-    val q = SparkEntry.queries.keySet
-    val o = oracleKeys
-    assert((q -- o).isEmpty, s"queries without oracle SQL: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
+  test("a name registered twice fails, naming it") {
+    val rows = SparkEntry.specs
+    val dup = rows.head
+    val e = intercept[IllegalArgumentException](QuerySpec.unique(rows :+ dup))
+    assert(e.getMessage.contains(dup.name), e.getMessage)
+    assert(QuerySpec.unique(rows).size == names.toSet.size)
   }
 
-  test("microCols names only registered queries") {
-    val stale = SparkEntry.microCols.keySet -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"microCols entries for unregistered queries: ${stale.toSeq.sorted}")
+  test("SPARK_GRAFT_ONLY selects registered names and rejects unknown ones") {
+    assert(SparkEntry.only(None).isEmpty)
+    assert(SparkEntry.only(Some(" q1_agg, g2_pagerank,")) ==
+      Some(Set("q1_agg", "g2_pagerank")))
+    assert(SparkEntry.selected(Some(Set("q1_agg"))).map(_.name) == Seq("q1_agg"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.only(Some("q1_agg,q1_aggg")))
+    assert(e.getMessage.endsWith("unregistered queries: q1_aggg"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.only(Some(" , ")))
   }
 
   test("query names follow the family naming convention") {
     val pat = "^(q|t|d|s|g|m|x|st)\\d+_[a-z0-9_]+$".r
-    val bad = SparkEntry.queries.keySet.filterNot(n => pat.matches(n))
+    val bad = names.filterNot(n => pat.matches(n))
     assert(bad.isEmpty, s"non-conventional query names: ${bad.toSeq.sorted}")
   }
 
@@ -55,14 +57,14 @@ class RegistrySpec extends AnyFunSuite {
   test("every registered query id appears verbatim in COVERAGE.md") {
     val cov = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("COVERAGE.md")), "UTF-8")
-    val missing = SparkEntry.queries.keySet.filterNot(cov.contains)
+    val missing = names.filterNot(cov.contains)
     assert(missing.isEmpty,
       s"queries absent from the COVERAGE.md inventory: ${missing.toSeq.sorted}")
   }
 
   test("every registered query id is cited verbatim by at least one spec") {
     val tests = readAll(java.nio.file.Paths.get("src/test/scala"))
-    val missing = SparkEntry.queries.keySet.filterNot(tests.contains)
+    val missing = names.filterNot(tests.contains)
     assert(missing.isEmpty,
       s"queries with no citing spec (add a *CertSpec test): ${missing.toSeq.sorted}")
   }

@@ -3,16 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared spec base: one SparkSession per suite (SURVEY.md §5). */
+/** Shared spec base: one SparkSession per suite (SURVEY.md §5), built by
+  * the same [[GraftSession]] as Bench and Verify, on 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"
 }
