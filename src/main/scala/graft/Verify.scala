@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,25 +21,38 @@ object Verify {
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // rendered after every selected query ran, and only for those rows:
     // the render-after-run guard stays fail-loud in subset mode too
-    val json = rows.map(q => s"${js(q.name)}: ${js(SparkEntry.oracle(q))}")
-      .mkString("{", ",", "}")
+    val json = oracleJson(rows)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** oracle_sql.json's text for `rows`. A row whose oracle throws while
+    * rendering gets an invalid marker query naming it and the error, so
+    * that row fails alone in the compare — the way the recorded-round
+    * markers do — instead of the throw aborting the file for every row. */
+  def oracleJson(rows: Seq[QuerySpec]): String =
+    rows.map { q =>
+      val sql = try SparkEntry.oracle(q) catch { case NonFatal(e) =>
+        val msg = String.valueOf(e.getMessage).replace("*/", "* /")
+        s"SELECT graft_error_${q.name}_oracle_render_failed /* $msg */"
+      }
+      s"${js(q.name)}: ${js(sql)}"
+    }.mkString("{", ",", "}")
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in an oracle's SQL would otherwise make the reader's
+  // json.load fail and lose every row's oracle at once.
+  private def js(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Self-contained dump: persisted-fit artifacts (and the oracle SQL
     * paths that reference them) live NEXT TO the out dir, in the sibling

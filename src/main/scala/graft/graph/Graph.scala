@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.plans.Lineage
+import graft.plans.{Lineage, Recorded}
 import graft.plans.Lineage.CheckpointOps
 import graft.sources.Tables
 
@@ -17,8 +17,9 @@ import graft.sources.Tables
   * GraphFrames is not on our classpath, and the hand-rolled loop has a
   * known lineage hazard (no checkpoint inside the loop — SURVEY §4): every
   * iteration's plan replays all prior iterations. Here every iterative
-  * algorithm calls `localCheckpoint(eager=true)` per step, so the plan (and
-  * the Catalyst analysis cost) stays O(1) per iteration — the difference
+  * algorithm rolls its loop frame through `Lineage.Gen.roll` per step (an
+  * eager, stats-clamped `localCheckpoint`), so the plan (and the Catalyst
+  * analysis cost) stays O(1) per iteration — the difference
   * between 20 iterations and an exponential-plan blowup at 100 TB.
   *
   * Graph model: `edges(src: Long, dst: Long)` — same shape GraphFrames
@@ -86,22 +87,6 @@ object Graph {
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))
   }
 
-  /** Fixed-iteration PageRank (ref G3/G6; update formula per ref
-    * PageRank.scala:66 — the `α/N + (1-α)·Σ` "teleport-divided-by-N"
-    * variant; dangling mass is dropped, matching the reference).
-    *
-    * Clean-initialization variant: rank₀ = 1/N over the full implied
-    * vertex set (the reference starts at 10.0 and silently drops vertices
-    * with no in-links after iteration 1 — SURVEY §2.10 quirks; set
-    * `refQuirks=true` to reproduce that exactly).
-    *
-    * Determinism: per-edge contributions are computed in double then
-    * quantized to DECIMAL for the shuffle-sum (order-independent); all
-    * remaining arithmetic is scalar double (IEEE-deterministic).
-    *
-    * Each iteration ends in `localCheckpoint(eager=true)` so lineage stays
-    * flat (fixes the reference's unbounded-plan hazard, SURVEY §4).
-    */
   /** Implied vertex set hash-keyed on `id` at the loop partition count
     * — the variant of [[vertices]] for loops that join `v` every round:
     * the repartition lands BEFORE the distinct, so the aggregate reuses
@@ -160,101 +145,153 @@ object Graph {
     * and every such site is structurally |V|-bounded (see call sites). */
   private[graph] def shj(df: DataFrame, np: Int): DataFrame = {
     val fits = org.apache.spark.sql.graft.LineageStats.measurableBytes(df)
-      .forall { b =>
-        val adv = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          df.sparkSession.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-        catch { case _: Throwable => 64L * 1024 * 1024 }
-        b / math.max(1, np) <= BigInt(adv)
-      }
+      .forall(b => b / math.max(1, np) <= BigInt(Lineage.advisoryBytes(df.sparkSession)))
     if (fits) df.hint("shuffle_hash") else df
   }
 
-  def pageRank(edges: DataFrame, iterations: Int, alpha: Double = 0.15,
-               refQuirks: Boolean = false): DataFrame = {
-    // Checkpoint the caller's edge frame ONCE at entry (the CC round-12
-    // pattern): vertices/out-degrees/contribs all derive from the
-    // checkpoint, so a caller-supplied expensive pipeline (a d24-style
-    // match graph) runs exactly once, not once per derived frame — and
-    // `v` is checkpointed too because the clean variant joins it every
-    // iteration (GraphSpec pins single evaluation via accumulator).
-    //
-    // Round-16 (guide §2.4 — remove shuffles outright): the edge frame
-    // is hash-keyed on src at the size-derived loop partition count ONCE
-    // (the GraphX partitionBy discipline) and every checkpoint
-    // re-attaches the executed plan's partitioning (see LineageStats),
-    // so outDeg / contribs build exchange-free AND every iteration's
-    // contribs ⋈ ranks is exchange-free: ranks re-acquires hash(id, np)
-    // each roll because the round's final join streams the keyed `v`.
-    // The only per-round exchange left is the mass re-key to dst — the
-    // one shuffle fixed-point PageRank fundamentally needs (explicit
-    // repartition(np, dst) so the aggregate reuses it and the update
-    // join stays co-partitioned with v at any session conf). At cluster
-    // scale this is the difference between shuffling the edge list
-    // every iteration and never re-shuffling it.
-    val (e, np) = keyedEntry(edges.select("src", "dst"), "src")
-    // round 17: |V| rides the vertex checkpoint's materialization as an
-    // observed metric — no separate count() job (Lineage.checkpointCounted)
-    val (v, n) = Lineage.checkpointCounted(keyedVertices(e, np))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val init = if (refQuirks) 10.0 else 1.0 / n
-    // generation-tracked loop variable: each eager roll releases the
-    // grandparent generation's blocks (keep-2, see Lineage.Gen) so the
-    // loop's block-store residency is O(1), not O(iterations)
-    val rgen = Lineage.gen()
-    // rank₀ is a projection of the already-checkpointed v — no roll
-    // needed (nothing new to materialize, partitioning flows through)
-    var ranks: DataFrame = v.select(col("id"), lit(init).as("rank"))
-    val contribs = e.join(outDeg, "src") // pre-joined once, reused per iter
-      .select(col("src"), col("dst"), col("out_deg"))
-      .loopCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      // shuffle_hash hint on the ranks side: co-partitioned hash join —
-      // no per-round broadcast job, no sort of the edge-sized stream
-      // side, no |V|-sized broadcast at scale
+  /** The PageRank family's shared loop state, built once by [[prEntry]]:
+    * the keyed edges `e` at `np` loop partitions, the vertex checkpoint
+    * `v` with its count `n`, and the `contribs` checkpoint (every edge
+    * pre-joined with its source's out-degree, reused by every round). */
+  private final case class PrLoop(e: DataFrame, np: Int, v: DataFrame, n: Long,
+                                  contribs: DataFrame) {
+    /** One round's rank mass per `dst` from `ranks(id, rank)`: per-edge
+      * contributions computed in double, quantized to DECIMAL for the
+      * order-independent shuffle-sum. The shuffle_hash hint on the ranks
+      * side makes `contribs ⋈ ranks` a co-partitioned hash join — no
+      * per-round broadcast job, no sort of the edge-sized stream side,
+      * no |V|-sized broadcast at scale — and the re-key to `dst` is the
+      * round's one exchange: the one shuffle fixed-point PageRank
+      * fundamentally needs (explicit repartition(np, dst) so the
+      * aggregate reuses it and the update join stays co-partitioned
+      * with `v` at any session conf). */
+    def mass(ranks: DataFrame): DataFrame = {
       val spread = contribs
         .join(shj(ranks, np), contribs("src") === ranks("id"))
         .select(col("dst"),
           (col("rank") / col("out_deg")).cast(Dec).as("contrib"))
-      val mass = maybeRekey(spread, np, "dst")
+      maybeRekey(spread, np, "dst")
         .groupBy("dst")
         .agg(sum("contrib").cast("double").as("mass"))
-      val updated = mass.select(col("dst").as("id"),
-        (lit(alpha / n) + lit(1.0 - alpha) * col("mass")).as("rank"))
-      ranks = rgen.roll(
-        if (refQuirks) updated // ref drops vertices with no in-links
-        else v.join(updated.hint("shuffle_hash"), Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("rank"), lit(alpha / n)).as("rank")),
-        true)
     }
-    ranks.select(col("id"), round(col("rank"), 12).as("rank"))
   }
 
+  /** Keyed entry of every PageRank variant. The caller's edge frame is
+    * checkpointed ONCE (the CC round-12 pattern): vertices, out-degrees
+    * and contribs all derive from the checkpoint, so a caller-supplied
+    * expensive pipeline (a d24-style match graph) runs exactly once, not
+    * once per derived frame — and `v` is checkpointed too because the
+    * update joins it every round (GraphSpec pins single evaluation via
+    * accumulator).
+    *
+    * Round 16 (guide §2.4 — remove shuffles outright): the edge frame is
+    * hash-keyed on src at the size-derived loop partition count ONCE
+    * (the GraphX partitionBy discipline) and every checkpoint
+    * re-attaches the executed plan's partitioning (see LineageStats), so
+    * outDeg / contribs build exchange-free AND every round's
+    * contribs ⋈ ranks is exchange-free: ranks re-acquires hash(id, np)
+    * each roll because the round's final join streams the keyed `v`. At
+    * cluster scale this is the difference between shuffling the edge
+    * list every iteration and never re-shuffling it. Round 17: |V| rides
+    * the vertex checkpoint's materialization as an observed metric — no
+    * separate count() job (Lineage.checkpointCounted). */
+  private def prEntry(edges: DataFrame): PrLoop = {
+    val (e, np) = keyedEntry(edges.select("src", "dst"), "src")
+    val (v, n) = Lineage.checkpointCounted(keyedVertices(e, np))
+    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
+    val contribs = e.join(outDeg, "src")
+      .select(col("src"), col("dst"), col("out_deg"))
+      .loopCheckpoint(true)
+    PrLoop(e, np, v, n, contribs)
+  }
+
+  /** `iterations` rounds from `ranks0`: each round's `update(ranks,
+    * mass)` is rolled eagerly through one generation tracker, so the
+    * loop's block-store residency is O(1), not O(iterations) (keep-2,
+    * see Lineage.Gen), and its lineage stays flat. */
+  private def prRounds(loop: PrLoop, ranks0: DataFrame, iterations: Int)(
+      update: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val rgen = Lineage.gen()
+    (1 to iterations).foldLeft(ranks0) { (ranks, _) =>
+      rgen.roll(update(ranks, loop.mass(ranks)), true)
+    }
+  }
+
+  /** Fixed-iteration PageRank (ref G3/G6; update formula per ref
+    * PageRank.scala:66 — the `α/N + (1-α)·Σ` "teleport-divided-by-N"
+    * variant; dangling mass is dropped, matching the reference).
+    *
+    * Clean-initialization variant: rank₀ = 1/N over the full implied
+    * vertex set (the reference starts at 10.0 and silently drops vertices
+    * with no in-links after iteration 1 — SURVEY §2.10 quirks; set
+    * `refQuirks=true` to reproduce that exactly).
+    *
+    * Determinism: per-edge contributions are computed in double then
+    * quantized to DECIMAL for the shuffle-sum (order-independent); all
+    * remaining arithmetic is scalar double (IEEE-deterministic).
+    *
+    * Each iteration ends in an eager `Lineage.Gen.roll` so lineage stays
+    * flat (fixes the reference's unbounded-plan hazard, SURVEY §4).
+    */
+  def pageRank(edges: DataFrame, iterations: Int, alpha: Double = 0.15,
+               refQuirks: Boolean = false): DataFrame = {
+    val loop = prEntry(edges)
+    val n = loop.n
+    // rank₀ is a projection of the already-checkpointed v — no roll
+    // needed (nothing new to materialize, partitioning flows through)
+    val ranks0 = loop.v.select(col("id"), lit(if (refQuirks) 10.0 else 1.0 / n).as("rank"))
+    prRounds(loop, ranks0, iterations) { (_, mass) =>
+      val updated = mass.select(col("dst").as("id"),
+        (lit(alpha / n) + lit(1.0 - alpha) * col("mass")).as("rank"))
+      if (refQuirks) updated // ref drops vertices with no in-links
+      else loop.v.join(updated.hint("shuffle_hash"), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("rank"), lit(alpha / n)).as("rank"))
+    }.select(col("id"), round(col("rank"), 12).as("rank"))
+  }
+
+  /** The PageRank oracles' shared base CTEs over an edge-list CTE body
+    * (any id type — the engine loop is id-type-agnostic too). */
+  private def prBaseSql(edgesCte: String): String =
+    s"""edges_g AS ($edgesCte),
+       |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
+       |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
+       |outdeg AS (SELECT src, count(*) AS out_deg FROM edges_g GROUP BY src),
+       |contribs AS (SELECT e.src, e.dst, o.out_deg FROM edges_g e JOIN outdeg o USING (src))""".stripMargin
+
+  /** Round `i`'s mass CTE `m$i(dst, mass)` over `r${i-1}` — the
+    * [[PrLoop.mass]] decimal/double dance, op for op. */
+  private def prMassSql(i: Int): String =
+    s"""m$i AS (
+       |  SELECT c.dst, CAST(SUM(CAST(r.rank / c.out_deg AS DECIMAL(32,16))) AS DOUBLE) AS mass
+       |  FROM contribs c JOIN r${i - 1} r ON c.src = r.id GROUP BY c.dst)""".stripMargin
+
+  /** A PageRank variant's unrolled CTE chain: the base CTEs, `seed`
+    * (the CTEs before round 1, ending in `r0`), then per round its mass
+    * CTE and `update(i)` (ending in `r$i`). */
+  private def prUnrollSql(edgesCte: String, seed: String, rounds: Int)(
+      update: Int => String): String =
+    (Seq(prBaseSql(edgesCte), seed) ++
+      (1 to rounds).flatMap(i => Seq(prMassSql(i), update(i)))).mkString(",\n")
+
+  /** Round `i`'s rank CTE `tele + (1−α)·mass` — a vertex with no incoming
+    * mass keeps its teleport term (the g5/g11 update). */
+  private def prTeleportSql(tele: String, alpha: Double)(i: Int): String =
+    s"""r$i AS (
+       |  SELECT v.id, $tele + ${1.0 - alpha} * COALESCE(m$i.mass, 0.0) AS rank
+       |  FROM v LEFT JOIN m$i ON v.id = m$i.dst)""".stripMargin
+
   /** The [[pageRank]] oracle's CTE chain over an ARBITRARY edge-list CTE
-    * body (any id type — the engine loop is id-type-agnostic too): ends
-    * at `r$iterations(id, rank)`; callers append their own final SELECT.
-    * Factored out so non-graph modules (t12 TextRank runs PageRank on a
-    * word co-occurrence graph) reuse the identical unrolled
-    * double/DECIMAL dance instead of forking it. */
+    * body: ends at `r$iterations(id, rank)`; callers append their own
+    * final SELECT. Public so non-graph modules (t12 TextRank runs
+    * PageRank on a word co-occurrence graph) reuse the identical
+    * unrolled double/DECIMAL dance instead of forking it. */
   def pageRankCtesSql(edgesCte: String, iterations: Int,
-                      alpha: Double = 0.15): String = {
-    val base =
-      s"""edges_g AS ($edgesCte),
-         |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
-         |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-         |outdeg AS (SELECT src, count(*) AS out_deg FROM edges_g GROUP BY src),
-         |contribs AS (SELECT e.src, e.dst, o.out_deg FROM edges_g e JOIN outdeg o USING (src)),
-         |r0 AS (SELECT id, 1.0 / n.n AS rank FROM v, n)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""m$i AS (
-         |  SELECT c.dst, CAST(SUM(CAST(r.rank / c.out_deg AS DECIMAL(32,16))) AS DOUBLE) AS mass
-         |  FROM contribs c JOIN r${i - 1} r ON c.src = r.id GROUP BY c.dst),
-         |r$i AS (
+                      alpha: Double = 0.15): String =
+    prUnrollSql(edgesCte, "r0 AS (SELECT id, 1.0 / n.n AS rank FROM v, n)", iterations) { i =>
+      s"""r$i AS (
          |  SELECT v.id, COALESCE($alpha / n.n + ${1.0 - alpha} * m$i.mass, $alpha / n.n) AS rank
          |  FROM v CROSS JOIN n LEFT JOIN m$i ON v.id = m$i.dst)""".stripMargin
-    }.mkString(",\n")
-    s"$base,\n$iters"
-  }
+    }
 
   /** DuckDB oracle for [[pageRank]] (clean variant), iterations unrolled as
     * CTEs — must mirror the double/DECIMAL dance exactly. */
@@ -272,49 +309,27 @@ object Graph {
     *
     * The dangling sum is the A7 scalar-attach idiom — a 1-row
     * decimal-sum frame broadcast-crossJoined into the update, no driver
-    * action, so the loop stays fully distributed. Everything else
-    * (decimal-quantized contribution sums for order-independence, double
-    * teleport arithmetic mirrored op-for-op in the oracle, per-iteration
-    * `localCheckpoint`) matches [[pageRank]]. */
+    * action, so the loop stays fully distributed. Everything else is
+    * [[pageRank]]'s loop. */
   def pageRankDangling(edges: DataFrame, iterations: Int,
                        alpha: Double = 0.15): DataFrame = {
-    // keyed loop entry (round 16, see [[pageRank]]): one size-adaptive
-    // hash(src) keying of the edge frame, co-partitioned exchange-free
-    // per-round joins, one fundamental shuffle per round (mass by dst)
-    val (e, np) = keyedEntry(edges.select("src", "dst"), "src")
-    // round 17: |V| rides the vertex checkpoint (see pageRank)
-    val (v, n) = Lineage.checkpointCounted(keyedVertices(e, np))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val rgen = Lineage.gen() // keep-2 generation tracking (see pageRank)
-    var ranks: DataFrame = v.select(col("id"), lit(1.0 / n).as("rank"))
-    val contribs = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("out_deg"))
-      .loopCheckpoint(true)
+    val loop = prEntry(edges)
+    val (v, n) = (loop.v, loop.n)
     // out-degree-0 vertices, computed once (dst-only ids in this graph)
-    val danglingIds = v.join(e.select(col("src").as("id")).distinct(),
+    val danglingIds = v.join(loop.e.select(col("src").as("id")).distinct(),
         Seq("id"), "left_anti")
       .loopCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val spread = contribs
-        .join(shj(ranks, np), contribs("src") === ranks("id"))
-        .select(col("dst"),
-          (col("rank") / col("out_deg")).cast(Dec).as("contrib"))
-      val mass = maybeRekey(spread, np, "dst")
-        .groupBy("dst")
-        .agg(sum("contrib").cast("double").as("mass"))
-      val dangling = ranks.join(shj(danglingIds, np),
+    prRounds(loop, v.select(col("id"), lit(1.0 / n).as("rank")), iterations) { (ranks, mass) =>
+      val dangling = ranks.join(shj(danglingIds, loop.np),
           Seq("id"), "left_semi")
         .agg(coalesce(sum(col("rank").cast(Dec)), lit(0).cast(Dec))
           .cast("double").as("dm"))
-      ranks = rgen.roll(v.join(mass.hint("shuffle_hash"),
-          v("id") === mass("dst"), "left_outer")
+      v.join(mass.hint("shuffle_hash"), v("id") === mass("dst"), "left_outer")
         .crossJoin(broadcast(dangling))
         .select(v("id"),
           (lit(alpha / n) + lit(1.0 - alpha) *
-            (coalesce(col("mass"), lit(0.0)) + col("dm") / n)).as("rank")),
-        true)
-    }
-    ranks.select(col("id"), round(col("rank"), 12).as("rank"))
+            (coalesce(col("mass"), lit(0.0)) + col("dm") / n)).as("rank"))
+    }.select(col("id"), round(col("rank"), 12).as("rank"))
   }
 
   /** DuckDB oracle for [[pageRankDangling]] — the [[pageRankSql]]
@@ -322,68 +337,43 @@ object Graph {
     * decimal/double dance exactly. */
   def pageRankDanglingSql(iterations: Int, alpha: Double = 0.15,
                           m: Int = ProjMod): String = {
-    val base =
-      s"""WITH edges_g AS (${edgesSql(m)}),
-         |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
-         |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-         |outdeg AS (SELECT src, count(*) AS out_deg FROM edges_g GROUP BY src),
-         |contribs AS (SELECT e.src, e.dst, o.out_deg FROM edges_g e JOIN outdeg o USING (src)),
-         |dang AS (SELECT id FROM v WHERE NOT EXISTS (SELECT 1 FROM outdeg o WHERE o.src = v.id)),
-         |r0 AS (SELECT id, 1.0 / n.n AS rank FROM v, n)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""m$i AS (
-         |  SELECT c.dst, CAST(SUM(CAST(r.rank / c.out_deg AS DECIMAL(32,16))) AS DOUBLE) AS mass
-         |  FROM contribs c JOIN r${i - 1} r ON c.src = r.id GROUP BY c.dst),
-         |d$i AS (
+    val seed =
+      """dang AS (SELECT id FROM v WHERE NOT EXISTS (SELECT 1 FROM outdeg o WHERE o.src = v.id)),
+        |r0 AS (SELECT id, 1.0 / n.n AS rank FROM v, n)""".stripMargin
+    val ctes = prUnrollSql(edgesSql(m), seed, iterations) { i =>
+      s"""d$i AS (
          |  SELECT CAST(COALESCE(SUM(CAST(r.rank AS DECIMAL(32,16))), 0) AS DOUBLE) AS dm
          |  FROM r${i - 1} r JOIN dang USING (id)),
          |r$i AS (
          |  SELECT v.id, $alpha / n.n + ${1.0 - alpha} * (COALESCE(m$i.mass, 0.0) + d$i.dm / n.n) AS rank
          |  FROM v CROSS JOIN n CROSS JOIN d$i LEFT JOIN m$i ON v.id = m$i.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""$base,
-       |$iters
+    }
+    s"""WITH $ctes
        |SELECT id, round(rank, 12) AS rank FROM r$iterations ORDER BY id""".stripMargin
   }
 
   /** Personalized PageRank (the GraphFrames
     * `parallelPersonalizedPageRank` shape, single source set): teleport
     * mass lands uniformly on the `sources` set instead of all vertices,
-    * so ranks measure proximity TO the sources. Same checkpointed loop,
-    * decimal-quantized mass sums, and double teleport arithmetic as
+    * so ranks measure proximity TO the sources. Same loop as
     * [[pageRank]]; the teleport constant is computed ONCE in Scala and
     * interpolated into both engines' expressions, so the doubles being
     * added are bit-identical. */
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
                            iterations: Int = 3, alpha: Double = 0.15): DataFrame = {
-    // keyed loop entry (round 16, see [[pageRank]])
-    val (e, np) = keyedEntry(edges.select("src", "dst"), "src")
-    val v = keyedVertices(e, np).loopCheckpoint(true)
+    val loop = prEntry(edges)
     val k = sources.size
     val tele = alpha / k
     val isSrc = col("id").isin(sources: _*)
-    val rgen = Lineage.gen() // keep-2 generation tracking (see pageRank)
-    var ranks: DataFrame = v.select(col("id"),
+    val ranks0 = loop.v.select(col("id"),
       when(isSrc, lit(1.0 / k)).otherwise(lit(0.0)).as("rank"))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val contribs = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("out_deg"))
-      .loopCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val spread = contribs
-        .join(shj(ranks, np), contribs("src") === ranks("id"))
-        .select(col("dst"), (col("rank") / col("out_deg")).cast(Dec).as("contrib"))
-      val mass = maybeRekey(spread, np, "dst")
-        .groupBy("dst").agg(sum("contrib").cast("double").as("mass"))
-      ranks = rgen.roll(
-        v.join(mass.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-            Seq("id"), "left_outer")
-          .select(col("id"),
-            (when(isSrc, lit(tele)).otherwise(lit(0.0)) +
-              lit(1.0 - alpha) * coalesce(col("mass"), lit(0.0))).as("rank")),
-        true)
-    }
-    ranks.select(col("id"), round(col("rank"), 12).as("rank")).orderBy("id")
+    prRounds(loop, ranks0, iterations) { (_, mass) =>
+      loop.v.join(mass.withColumnRenamed("dst", "id").hint("shuffle_hash"),
+          Seq("id"), "left_outer")
+        .select(col("id"),
+          (when(isSrc, lit(tele)).otherwise(lit(0.0)) +
+            lit(1.0 - alpha) * coalesce(col("mass"), lit(0.0))).as("rank"))
+    }.select(col("id"), round(col("rank"), 12).as("rank")).orderBy("id")
   }
 
   /** Oracle for [[personalizedPageRank]]: the [[pageRankSql]] unroll with
@@ -393,26 +383,13 @@ object Graph {
     val k = sources.size
     val tele = alpha / k
     val srcList = sources.mkString(", ")
-    val base =
-      s"""WITH edges_g AS (${edgesSql(m)}),
-         |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
-         |outdeg AS (SELECT src, count(*) AS out_deg FROM edges_g GROUP BY src),
-         |contribs AS (SELECT e.src, e.dst, o.out_deg FROM edges_g e JOIN outdeg o USING (src)),
-         |r0 AS (SELECT id,
+    val seed =
+      s"""r0 AS (SELECT id,
          |  CAST(CASE WHEN id IN ($srcList) THEN ${1.0 / k} ELSE 0.0 END AS DOUBLE) AS rank
          |  FROM v)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""m$i AS (
-         |  SELECT c.dst, CAST(SUM(CAST(r.rank / c.out_deg AS DECIMAL(32,16))) AS DOUBLE) AS mass
-         |  FROM contribs c JOIN r${i - 1} r ON c.src = r.id GROUP BY c.dst),
-         |r$i AS (
-         |  SELECT v.id,
-         |    CAST(CASE WHEN v.id IN ($srcList) THEN $tele ELSE 0.0 END AS DOUBLE)
-         |      + ${1.0 - alpha} * COALESCE(m$i.mass, 0.0) AS rank
-         |  FROM v LEFT JOIN m$i ON v.id = m$i.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""$base,
-       |$iters
+    val ctes = prUnrollSql(edgesSql(m), seed, iterations)(prTeleportSql(
+      s"CAST(CASE WHEN v.id IN ($srcList) THEN $tele ELSE 0.0 END AS DOUBLE)", alpha))
+    s"""WITH $ctes
        |SELECT id, round(rank, 12) AS rank FROM r$iterations ORDER BY id""".stripMargin
   }
 
@@ -425,59 +402,30 @@ object Graph {
     * until max |Δrank| < tol, then scale the final ranks so they sum to N
     * — GraphX normalizes exactly so since SPARK-18847, and the
     * reference's GraphFrames call inherits it. Vertices receiving no mass
-    * settle at α (pre-scale). Same checkpointed loop as [[pageRank]] with
-    * one extra cheap action per round (the max-delta aggregate — the same
-    * price [[connectedComponents]] already pays per round).
+    * settle at α (pre-scale). Same entry and mass step as [[pageRank]];
+    * the tolerance gate rides each round's roll.
     *
-    * The converged iteration count is recorded per sf-dir in
-    * [[tolIterations]] (and mirrored in [[lastTolIterations]] for specs)
-    * so the oracle ([[pageRankTolSql]], built AFTER the queries run —
-    * `SparkEntry.oracleSql` is a def) can unroll exactly that many
-    * iterations: DuckDB then recomputes every rank value independently
-    * through the same per-iteration math; only the stopping rule itself
-    * is Spark-derived. If g5 never ran (threw, or Verify dumped oracles
-    * without it), the oracle is an intentionally-invalid marker query —
-    * a loud per-query DuckDB failure instead of a plausible-but-wrong
-    * 1-iteration oracle (ADVICE r2).
+    * The converged iteration count is recorded in [[tolIterations]] (see
+    * [[Recorded]]) so the oracle ([[pageRankTolSql]]) can unroll exactly
+    * that many iterations: DuckDB then recomputes every rank value
+    * independently through the same per-iteration math; only the
+    * stopping rule itself is Spark-derived.
     */
-  private[graph] val tolIterations =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  /** Key of the most recent [[pageRankTol]] run that recorded — the dir
-    * whose count the no-arg oracle lookup serves (last-write-wins, the
-    * same resolution the persisted-artifact oracles get from overwriting
-    * one parquet path per JVM). Per-dir counts stay intact in
-    * [[tolIterations]] for explicit-key lookups (ADVICE r3). */
-  @volatile private[graph] var lastRecordKey: Option[String] = None
-  @volatile var lastTolIterations: Int = -1
+  private[graph] val tolIterations = new Recorded
 
   def pageRankTol(edges: DataFrame, tol: Double = 0.01,
                   alpha: Double = 0.15, recordKey: Option[String] = None): DataFrame = {
-    // keyed loop entry (round 16, see [[pageRank]]); round 17: |V| for
-    // the final normalization rides the vertex checkpoint
-    val (e, np) = keyedEntry(edges.select("src", "dst"), "src")
-    val (v, nV) = Lineage.checkpointCounted(keyedVertices(e, np))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
+    val loop = prEntry(edges)
     val rgen = Lineage.gen()
-    var ranks = rgen.roll(v.select(col("id"), lit(1.0).as("rank")), true)
-    val contribs = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("out_deg"))
-      .loopCheckpoint(true)
+    var ranks = rgen.roll(loop.v.select(col("id"), lit(1.0).as("rank")), true)
     var iters = 0
     var maxDelta = Double.MaxValue
     while (maxDelta >= tol) {
-      val spread = contribs
-        .join(shj(ranks, np), contribs("src") === ranks("id"))
-        .select(col("dst"),
-          (col("rank") / col("out_deg")).cast(Dec).as("contrib"))
-      val mass = maybeRekey(spread, np, "dst")
-        .groupBy("dst")
-        .agg(sum("contrib").cast("double").as("mass"))
+      val mass = loop.mass(ranks)
       // ranks always carries the full vertex set, so the update joins it
       // directly and computes the per-vertex delta in the same pass.
       // The roll is EAGER since round 16: the executed plan's
-      // partitioning claim is what keeps the NEXT round exchange-free,
-      // and the max-delta aggregate then reads the fresh cache — still
-      // effectively one materializing pass per round.
+      // partitioning claim is what keeps the NEXT round exchange-free.
       val newRank = lit(alpha) + lit(1.0 - alpha) * coalesce(col("mass"), lit(0.0))
       // round 17: the tolerance gate max(delta) rides the roll's own
       // materialization as an observed metric (Lineage.rollObserved) —
@@ -492,54 +440,29 @@ object Graph {
       ranks = next.select("id", "rank")
       iters += 1
     }
-    lastTolIterations = iters
-    recordKey.foreach { k => tolIterations(k) = iters; lastRecordKey = Some(k) }
+    tolIterations.record(recordKey, iters)
     // normalize rank sum to N (GraphX SPARK-18847); the sum is
     // decimal-quantized so the scale factor is fold-order-independent
     val scale = ranks.agg(
-      (lit(nV.toDouble) / sum(col("rank").cast(Dec)).cast("double")).as("scale"))
+      (lit(loop.n.toDouble) / sum(col("rank").cast(Dec)).cast("double")).as("scale"))
     ranks.crossJoin(broadcast(scale))
       .select(col("id"), round(col("rank") * col("scale"), 10).as("rank"))
   }
 
   /** Oracle for [[pageRankTol]]: the converged iteration count unrolled
-    * as CTEs; every rank recomputed independently by DuckDB. The count is
-    * looked up per record key (explicit `key`, else the last-recorded
-    * run's); fails loudly (invalid marker SQL) only if no run recorded. */
+    * as CTEs; every rank recomputed independently by DuckDB. */
   def pageRankTolSql(alpha: Double = 0.15, m: Int = ProjMod,
-                     key: Option[String] = None): String = {
-    val recorded = tolIterations.readOnlySnapshot()
-    // explicit key wins; otherwise the most recently recorded run (the
-    // dir the rest of the oracle dump refers to). Running g5 for several
-    // sf-dirs in one JVM keeps every per-dir count addressable — only a
-    // run that never recorded yields the loud invalid marker.
-    val chosen = key.orElse(lastRecordKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g5_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val k = chosen.get
-    val base =
-      s"""WITH edges_g AS (${edgesSql(m)}),
-         |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
-         |outdeg AS (SELECT src, count(*) AS out_deg FROM edges_g GROUP BY src),
-         |contribs AS (SELECT e.src, e.dst, o.out_deg FROM edges_g e JOIN outdeg o USING (src)),
-         |r0 AS (SELECT id, 1.0::DOUBLE AS rank FROM v)""".stripMargin
-    val iters = (1 to k).map { i =>
-      s"""m$i AS (
-         |  SELECT c.dst, CAST(SUM(CAST(r.rank / c.out_deg AS DECIMAL(32,16))) AS DOUBLE) AS mass
-         |  FROM contribs c JOIN r${i - 1} r ON c.src = r.id GROUP BY c.dst),
-         |r$i AS (
-         |  SELECT v.id, $alpha + ${1.0 - alpha} * COALESCE(m$i.mass, 0.0) AS rank
-         |  FROM v LEFT JOIN m$i ON v.id = m$i.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""$base,
-       |$iters,
-       |scale AS (
-       |  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM v) /
-       |         CAST(SUM(CAST(rank AS DECIMAL(32,16))) AS DOUBLE) AS scale
-       |  FROM r$k)
-       |SELECT id, round(rank * scale, 10) AS rank
-       |FROM r$k CROSS JOIN scale ORDER BY id""".stripMargin
-  }
+                     key: Option[String] = None): String =
+    tolIterations.oracle("g5", key) { k =>
+      val ctes = prUnrollSql(edgesSql(m), "r0 AS (SELECT id, 1.0::DOUBLE AS rank FROM v)", k)(
+        prTeleportSql(alpha.toString, alpha))
+      s"""WITH $ctes,
+         |scale AS (
+         |  SELECT (SELECT n FROM n) / CAST(SUM(CAST(rank AS DECIMAL(32,16))) AS DOUBLE) AS scale
+         |  FROM r$k)
+         |SELECT id, round(rank * scale, 10) AS rank
+         |FROM r$k CROSS JOIN scale ORDER BY id""".stripMargin
+    }
 
   /** Top-5 communities by size (ref EpinionsGraphFrameAnalysis.scala:107-110
     * — `connectedComponents` → `groupBy("component").count()` →
@@ -1176,12 +1099,9 @@ object Graph {
 
   // -------------------------------------------------------------- k-truss
 
-  /** Converged peel-round count per record key for [[kTruss]] — the
-    * record-then-unroll oracle contract (g5/g7/g9). */
-  private[graph] val ktrussRounds =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[graph] var lastKtrussKey: Option[String] = None
+  /** Converged peel-round count per record key for [[kTruss]] (see
+    * [[Recorded]]). */
+  private[graph] val ktrussRounds = new Recorded
 
   /** g25: k-truss membership — the maximal subgraph in which EVERY edge
     * participates in ≥ k−2 triangles (triangles counted WITHIN the
@@ -1236,7 +1156,7 @@ object Graph {
       live = keep.select("a", "b")
       nLive = nKeep
     }
-    recordKey.foreach { key => ktrussRounds(key) = rounds; lastKtrussKey = Some(key) }
+    ktrussRounds.record(recordKey, rounds)
     supported.orderBy("a", "b")
   }
 
@@ -1246,40 +1166,36 @@ object Graph {
     * 3-way self-join (same triangle set as the engine's degree-ordered
     * enumeration), so nothing numeric crosses engines. Fails loudly
     * (invalid marker SQL) if g25 never recorded a run. */
-  def kTrussSql(k: Int = 5, m: Int = TrussProjMod, key: Option[String] = None): String = {
-    val recorded = ktrussRounds.readOnlySnapshot()
-    val chosen = key.orElse(lastKtrussKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g25_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    // every per-round CTE is MATERIALIZED: DuckDB inlines plain CTEs,
-    // and each round references the previous round's edge set ~5 times,
-    // so an inlined unroll re-scans the parquet 5^R times (observed as
-    // fd exhaustion at R=6); materialization makes each round evaluate
-    // exactly once, like the engine's per-round checkpoint
-    val sb = new StringBuilder
-    sb ++= s"WITH edges_g AS (${edgesSql(m)}),\n"
-    sb ++= "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM edges_g)"
-    for (i <- 1 to r) {
-      val p = i - 1
-      sb ++= s""",
-         |t$i AS MATERIALIZED (
-         |  SELECT e1.a, e1.b, e2.b AS c
-         |  FROM e$p e1 JOIN e$p e2 ON e1.b = e2.a
-         |  JOIN e$p e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |te$i AS (
-         |  SELECT a AS x, b AS y FROM t$i
-         |  UNION ALL SELECT a, c FROM t$i
-         |  UNION ALL SELECT b, c FROM t$i),
-         |s$i AS MATERIALIZED (
-         |  SELECT e.a, e.b, CAST(count(te.x) AS BIGINT) AS support
-         |  FROM e$p e LEFT JOIN te$i te ON te.x = e.a AND te.y = e.b
-         |  GROUP BY e.a, e.b),
-         |e$i AS MATERIALIZED (SELECT a, b FROM s$i WHERE support >= ${k - 2})""".stripMargin
+  def kTrussSql(k: Int = 5, m: Int = TrussProjMod, key: Option[String] = None): String =
+    ktrussRounds.oracle("g25", key) { r =>
+      // every per-round CTE is MATERIALIZED: DuckDB inlines plain CTEs,
+      // and each round references the previous round's edge set ~5 times,
+      // so an inlined unroll re-scans the parquet 5^R times (observed as
+      // fd exhaustion at R=6); materialization makes each round evaluate
+      // exactly once, like the engine's per-round checkpoint
+      val sb = new StringBuilder
+      sb ++= s"WITH edges_g AS (${edgesSql(m)}),\n"
+      sb ++= "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM edges_g)"
+      for (i <- 1 to r) {
+        val p = i - 1
+        sb ++= s""",
+           |t$i AS MATERIALIZED (
+           |  SELECT e1.a, e1.b, e2.b AS c
+           |  FROM e$p e1 JOIN e$p e2 ON e1.b = e2.a
+           |  JOIN e$p e3 ON e3.a = e1.a AND e3.b = e2.b),
+           |te$i AS (
+           |  SELECT a AS x, b AS y FROM t$i
+           |  UNION ALL SELECT a, c FROM t$i
+           |  UNION ALL SELECT b, c FROM t$i),
+           |s$i AS MATERIALIZED (
+           |  SELECT e.a, e.b, CAST(count(te.x) AS BIGINT) AS support
+           |  FROM e$p e LEFT JOIN te$i te ON te.x = e.a AND te.y = e.b
+           |  GROUP BY e.a, e.b),
+           |e$i AS MATERIALIZED (SELECT a, b FROM s$i WHERE support >= ${k - 2})""".stripMargin
+      }
+      sb ++= s"\nSELECT a, b, support FROM s$r WHERE support >= ${k - 2} ORDER BY a, b"
+      sb.toString
     }
-    sb ++= s"\nSELECT a, b, support FROM s$r WHERE support >= ${k - 2} ORDER BY a, b"
-    sb.toString
-  }
 
   /** g17: Adamic-Adar link prediction — for every non-adjacent vertex
     * pair (a, b) with at least one common neighbor in the undirected
@@ -1413,12 +1329,9 @@ object Graph {
 
   // ------------------------------------------------------- shortest paths
 
-  /** Converged round count per record key for [[shortestPaths]] — the
-    * same record-then-unroll oracle contract as [[tolIterations]]. */
-  private[graph] val bfsRounds =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[graph] var lastBfsKey: Option[String] = None
+  /** Converged round count per record key for [[shortestPaths]] (see
+    * [[Recorded]]). */
+  private[graph] val bfsRounds = new Recorded
 
   /** Landmark shortest-path distances (the GraphFrames
     * `shortestPaths(landmarks)` shape — beyond the reference's G1-G6
@@ -1469,7 +1382,7 @@ object Graph {
       growing = n > 0
       frontier = next
     }
-    recordKey.foreach { k => bfsRounds(k) = rounds; lastBfsKey = Some(k) }
+    bfsRounds.record(recordKey, rounds)
     dist.orderBy("landmark", "id")
   }
 
@@ -1477,24 +1390,20 @@ object Graph {
     * round count via recursive CTE, min length per (vertex, landmark).
     * Fails loudly (invalid marker SQL) if g7 never recorded a run. */
   def shortestPathsSql(landmarks: Seq[Long], m: Int = ProjMod,
-                       key: Option[String] = None): String = {
-    val recorded = bfsRounds.readOnlySnapshot()
-    val chosen = key.orElse(lastBfsKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g7_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    val lm = landmarks.mkString(", ")
-    s"""WITH RECURSIVE edges_g AS (${edgesSql(m)}),
-       |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
-       |walk(id, landmark, d) AS (
-       |  SELECT id, id, 0 FROM v WHERE id IN ($lm)
-       |  UNION
-       |  SELECT e.src, w.landmark, w.d + 1
-       |  FROM walk w JOIN edges_g e ON e.dst = w.id
-       |  WHERE w.d < $r)
-       |SELECT id, landmark, CAST(min(d) AS BIGINT) AS dist
-       |FROM walk GROUP BY id, landmark ORDER BY landmark, id""".stripMargin
-  }
+                       key: Option[String] = None): String =
+    bfsRounds.oracle("g7", key) { r =>
+      val lm = landmarks.mkString(", ")
+      s"""WITH RECURSIVE edges_g AS (${edgesSql(m)}),
+         |v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),
+         |walk(id, landmark, d) AS (
+         |  SELECT id, id, 0 FROM v WHERE id IN ($lm)
+         |  UNION
+         |  SELECT e.src, w.landmark, w.d + 1
+         |  FROM walk w JOIN edges_g e ON e.dst = w.id
+         |  WHERE w.d < $r)
+         |SELECT id, landmark, CAST(min(d) AS BIGINT) AS dist
+         |FROM walk GROUP BY id, landmark ORDER BY landmark, id""".stripMargin
+    }
 
   /** g20: landmark distance histogram with cumulative pair counts — the
     * effective-diameter read-off (smallest d whose cum_pairs covers 90 %
@@ -1559,12 +1468,8 @@ object Graph {
   // ------------------------------------------- weighted shortest paths
 
   /** Converged relaxation-wave count per record key for
-    * [[weightedSssp]] — the record-then-unroll oracle contract
-    * (g5/g7/g9/g25). */
-  private[graph] val wssspRounds =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[graph] var lastWssspKey: Option[String] = None
+    * [[weightedSssp]] (see [[Recorded]]). */
+  private[graph] val wssspRounds = new Recorded
 
   /** Deterministic positive integer weights for the bench graph:
     * w = 1 + (3·src + 7·dst) mod 9 ∈ [1, 9]. Purely a test-corpus
@@ -1641,7 +1546,7 @@ object Graph {
       improving = n > 0
       frontier = improved
     }
-    recordKey.foreach { k => wssspRounds(k) = rounds; lastWssspKey = Some(k) }
+    wssspRounds.record(recordKey, rounds)
     dist.orderBy("landmark", "id")
   }
 
@@ -1651,40 +1556,33 @@ object Graph {
     * across every weighted edge. Only the round COUNT is Spark-derived
     * (the g5/g7 contract). Fails loudly if g26 never recorded a run. */
   def weightedSsspSql(landmarks: Seq[Long], m: Int = ProjMod,
-                      key: Option[String] = None): String = {
-    val recorded = wssspRounds.readOnlySnapshot()
-    val chosen = key.orElse(lastWssspKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g26_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    val lm = landmarks.mkString(", ")
-    val sb = new StringBuilder
-    sb ++= s"WITH ew AS MATERIALIZED (${weightedEdgesSql(m)}),\n"
-    sb ++= "v AS (SELECT src AS id FROM ew UNION SELECT dst FROM ew),\n"
-    sb ++= s"d0 AS MATERIALIZED (SELECT id, id AS landmark, CAST(0 AS BIGINT) AS wdist FROM v WHERE id IN ($lm))"
-    for (i <- 1 to r) {
-      val p = i - 1
-      sb ++= s""",
-         |d$i AS MATERIALIZED (
-         |  SELECT id, landmark, CAST(min(wdist) AS BIGINT) AS wdist FROM (
-         |    SELECT id, landmark, wdist FROM d$p
-         |    UNION ALL
-         |    SELECT e.src AS id, d.landmark, d.wdist + e.w AS wdist
-         |    FROM d$p d JOIN ew e ON e.dst = d.id
-         |  ) u GROUP BY id, landmark)""".stripMargin
+                      key: Option[String] = None): String =
+    wssspRounds.oracle("g26", key) { r =>
+      val lm = landmarks.mkString(", ")
+      val sb = new StringBuilder
+      sb ++= s"WITH ew AS MATERIALIZED (${weightedEdgesSql(m)}),\n"
+      sb ++= "v AS (SELECT src AS id FROM ew UNION SELECT dst FROM ew),\n"
+      sb ++= s"d0 AS MATERIALIZED (SELECT id, id AS landmark, CAST(0 AS BIGINT) AS wdist FROM v WHERE id IN ($lm))"
+      for (i <- 1 to r) {
+        val p = i - 1
+        sb ++= s""",
+           |d$i AS MATERIALIZED (
+           |  SELECT id, landmark, CAST(min(wdist) AS BIGINT) AS wdist FROM (
+           |    SELECT id, landmark, wdist FROM d$p
+           |    UNION ALL
+           |    SELECT e.src AS id, d.landmark, d.wdist + e.w AS wdist
+           |    FROM d$p d JOIN ew e ON e.dst = d.id
+           |  ) u GROUP BY id, landmark)""".stripMargin
+      }
+      sb ++= s"\nSELECT id, landmark, wdist FROM d$r ORDER BY landmark, id"
+      sb.toString
     }
-    sb ++= s"\nSELECT id, landmark, wdist FROM d$r ORDER BY landmark, id"
-    sb.toString
-  }
 
   // ------------------------------------------------ betweenness centrality
 
-  /** Forward BFS level count per record key for [[betweenness]] — the
-    * record-then-unroll oracle contract (g5/g7/g9/g25/g26). */
-  private[graph] val btwLevels =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[graph] var lastBtwKey: Option[String] = None
+  /** Forward BFS level count per record key for [[betweenness]] (see
+    * [[Recorded]]). */
+  private[graph] val btwLevels = new Recorded
 
   /** g27: betweenness centrality over a pivot set — Brandes' algorithm
     * (Brandes 2001, "A faster algorithm for betweenness centrality"),
@@ -1762,7 +1660,7 @@ object Graph {
       frontier = next
     }
     val levels = lvl
-    recordKey.foreach { k => btwLevels(k) = levels; lastBtwKey = Some(k) }
+    btwLevels.record(recordKey, levels)
     // Runtime guard for the documented micro-math bound (ADVICE r13): σ
     // grows multiplicatively on diamond-dense graphs (exponential in BFS
     // depth), so CHECK — not assume — that every backward contribution
@@ -1837,54 +1735,50 @@ object Graph {
     * round(double, 6) formulation was abandoned). Fails loudly if g27
     * never recorded a run. */
   def betweennessSql(pivots: Seq[Long], m: Int = ProjMod,
-                     key: Option[String] = None): String = {
-    val recorded = btwLevels.readOnlySnapshot()
-    val chosen = key.orElse(lastBtwKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g27_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val l = chosen.get
-    val pv = pivots.mkString(", ")
-    val sb = new StringBuilder
-    sb ++= s"WITH edges_g AS MATERIALIZED (${edgesSql(m)}),\n"
-    sb ++= "v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),\n"
-    sb ++= s"n0 AS MATERIALIZED (SELECT id, id AS pvt, 0 AS dist, CAST(1 AS BIGINT) AS sigma FROM v WHERE id IN ($pv)),\n"
-    sb ++= "f0 AS MATERIALIZED (SELECT * FROM n0)"
-    for (i <- 1 to l) {
-      val p = i - 1
+                     key: Option[String] = None): String =
+    btwLevels.oracle("g27", key) { l =>
+      val pv = pivots.mkString(", ")
+      val sb = new StringBuilder
+      sb ++= s"WITH edges_g AS MATERIALIZED (${edgesSql(m)}),\n"
+      sb ++= "v AS (SELECT src AS id FROM edges_g UNION SELECT dst FROM edges_g),\n"
+      sb ++= s"n0 AS MATERIALIZED (SELECT id, id AS pvt, 0 AS dist, CAST(1 AS BIGINT) AS sigma FROM v WHERE id IN ($pv)),\n"
+      sb ++= "f0 AS MATERIALIZED (SELECT * FROM n0)"
+      for (i <- 1 to l) {
+        val p = i - 1
+        sb ++= s""",
+           |f$i AS MATERIALIZED (
+           |  SELECT e.dst AS id, f.pvt, $i AS dist, CAST(SUM(f.sigma) AS BIGINT) AS sigma
+           |  FROM f$p f JOIN edges_g e ON e.src = f.id
+           |  WHERE NOT EXISTS (SELECT 1 FROM n$p n WHERE n.pvt = f.pvt AND n.id = e.dst)
+           |  GROUP BY e.dst, f.pvt),
+           |n$i AS MATERIALIZED (SELECT * FROM n$p UNION ALL SELECT id, pvt, dist, sigma FROM f$i)""".stripMargin
+      }
       sb ++= s""",
-         |f$i AS MATERIALIZED (
-         |  SELECT e.dst AS id, f.pvt, $i AS dist, CAST(SUM(f.sigma) AS BIGINT) AS sigma
-         |  FROM f$p f JOIN edges_g e ON e.src = f.id
-         |  WHERE NOT EXISTS (SELECT 1 FROM n$p n WHERE n.pvt = f.pvt AND n.id = e.dst)
-         |  GROUP BY e.dst, f.pvt),
-         |n$i AS MATERIALIZED (SELECT * FROM n$p UNION ALL SELECT id, pvt, dist, sigma FROM f$i)""".stripMargin
+         |b$l AS MATERIALIZED (
+         |  SELECT pvt, id, sigma, CAST(0 AS BIGINT) AS delta
+         |  FROM n$l WHERE dist = $l)""".stripMargin
+      for (r <- (l - 1) to 0 by -1) {
+        sb ++= s""",
+           |b$r AS MATERIALIZED (
+           |  SELECT cur.pvt, cur.id, cur.sigma,
+           |    CAST(COALESCE(SUM((2 * cur.sigma * (1000000 + dn.delta) + dn.sigma)
+           |      // (2 * dn.sigma)), 0) AS BIGINT) AS delta
+           |  FROM (SELECT pvt, id, sigma FROM n$l WHERE dist = $r) cur
+           |  LEFT JOIN edges_g e ON e.src = cur.id
+           |  LEFT JOIN b${r + 1} dn ON dn.pvt = cur.pvt AND dn.id = e.dst
+           |  GROUP BY cur.pvt, cur.id, cur.sigma)""".stripMargin
+      }
+      val unionAll = (0 to l).map(r => s"SELECT pvt, id, delta FROM b$r")
+        .mkString("\n    UNION ALL ")
+      sb ++= s"""
+         |SELECT v.id, COALESCE(b.btw, CAST(0 AS DECIMAL(18,6))) AS btw
+         |FROM v LEFT JOIN (
+         |  SELECT id, CAST(round(SUM(delta) / 1000000.0, 6) AS DECIMAL(18,6)) AS btw
+         |  FROM ($unionAll) allb
+         |  WHERE id <> pvt GROUP BY id) b USING (id)
+         |ORDER BY id""".stripMargin
+      sb.toString
     }
-    sb ++= s""",
-       |b$l AS MATERIALIZED (
-       |  SELECT pvt, id, sigma, CAST(0 AS BIGINT) AS delta
-       |  FROM n$l WHERE dist = $l)""".stripMargin
-    for (r <- (l - 1) to 0 by -1) {
-      sb ++= s""",
-         |b$r AS MATERIALIZED (
-         |  SELECT cur.pvt, cur.id, cur.sigma,
-         |    CAST(COALESCE(SUM((2 * cur.sigma * (1000000 + dn.delta) + dn.sigma)
-         |      // (2 * dn.sigma)), 0) AS BIGINT) AS delta
-         |  FROM (SELECT pvt, id, sigma FROM n$l WHERE dist = $r) cur
-         |  LEFT JOIN edges_g e ON e.src = cur.id
-         |  LEFT JOIN b${r + 1} dn ON dn.pvt = cur.pvt AND dn.id = e.dst
-         |  GROUP BY cur.pvt, cur.id, cur.sigma)""".stripMargin
-    }
-    val unionAll = (0 to l).map(r => s"SELECT pvt, id, delta FROM b$r")
-      .mkString("\n    UNION ALL ")
-    sb ++= s"""
-       |SELECT v.id, COALESCE(b.btw, CAST(0 AS DECIMAL(18,6))) AS btw
-       |FROM v LEFT JOIN (
-       |  SELECT id, CAST(round(SUM(delta) / 1000000.0, 6) AS DECIMAL(18,6)) AS btw
-       |  FROM ($unionAll) allb
-       |  WHERE id <> pvt GROUP BY id) b USING (id)
-       |ORDER BY id""".stripMargin
-    sb.toString
-  }
 
   // ------------------------------------------------ greedy modularity moves
 
@@ -2216,12 +2110,9 @@ object Graph {
 
   // --------------------------------------------------------------- k-core
 
-  /** Converged peel-round count per record key for [[kCore]] — the
-    * record-then-unroll oracle contract (g5/g7). */
-  private[graph] val kcoreRounds =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[graph] var lastKcoreKey: Option[String] = None
+  /** Converged peel-round count per record key for [[kCore]] (see
+    * [[Recorded]]). */
+  private[graph] val kcoreRounds = new Recorded
 
   /** k-core decomposition membership: the maximal induced subgraph of
     * the symmetrized graph where every vertex has degree ≥ k, found by
@@ -2263,7 +2154,7 @@ object Graph {
       converged = m == n
       if (!converged) { alive = next; n = m; rounds += 1 }
     }
-    recordKey.foreach { key => kcoreRounds(key) = rounds; lastKcoreKey = Some(key) }
+    kcoreRounds.record(recordKey, rounds)
     val core = sym
       .join(alive, sym("src") === alive("id"), "left_semi")
       .join(alive.withColumnRenamed("id", "id2"),
@@ -2273,29 +2164,25 @@ object Graph {
 
   /** Oracle for [[kCore]]: the peel rounds unrolled as CTEs to the
     * recorded count (fails loudly if g9 never recorded a run). */
-  def kCoreSql(k: Int = 10, m: Int = ProjMod, key: Option[String] = None): String = {
-    val recorded = kcoreRounds.readOnlySnapshot()
-    val chosen = key.orElse(lastKcoreKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_g9_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    val sb = new StringBuilder
-    sb ++= s"WITH edges_g AS (${edgesSql(m)}),\n"
-    sb ++= "sym AS (SELECT src, dst FROM edges_g UNION SELECT dst AS src, src AS dst FROM edges_g),\n"
-    sb ++= s"a1 AS (SELECT src AS id FROM sym GROUP BY src HAVING count(*) >= $k)"
-    for (i <- 2 to r) {
-      sb ++= s""",
-         |a$i AS (
-         |  SELECT e.src AS id FROM sym e
-         |  JOIN a${i - 1} x ON e.src = x.id JOIN a${i - 1} y ON e.dst = y.id
-         |  GROUP BY e.src HAVING count(*) >= $k)""".stripMargin
+  def kCoreSql(k: Int = 10, m: Int = ProjMod, key: Option[String] = None): String =
+    kcoreRounds.oracle("g9", key) { r =>
+      val sb = new StringBuilder
+      sb ++= s"WITH edges_g AS (${edgesSql(m)}),\n"
+      sb ++= "sym AS (SELECT src, dst FROM edges_g UNION SELECT dst AS src, src AS dst FROM edges_g),\n"
+      sb ++= s"a1 AS (SELECT src AS id FROM sym GROUP BY src HAVING count(*) >= $k)"
+      for (i <- 2 to r) {
+        sb ++= s""",
+           |a$i AS (
+           |  SELECT e.src AS id FROM sym e
+           |  JOIN a${i - 1} x ON e.src = x.id JOIN a${i - 1} y ON e.dst = y.id
+           |  GROUP BY e.src HAVING count(*) >= $k)""".stripMargin
+      }
+      sb ++= s"""
+         |SELECT e.src AS id, count(*) AS core_deg FROM sym e
+         |JOIN a$r x ON e.src = x.id JOIN a$r y ON e.dst = y.id
+         |GROUP BY e.src ORDER BY id""".stripMargin
+      sb.toString
     }
-    sb ++= s"""
-       |SELECT e.src AS id, count(*) AS core_deg FROM sym e
-       |JOIN a$r x ON e.src = x.id JOIN a$r y ON e.dst = y.id
-       |GROUP BY e.src ORDER BY id""".stripMargin
-    sb.toString
-  }
 
   // -------------------------------------------------------------- registry
 

@@ -79,10 +79,7 @@ object Lineage {
     def roll(df: DataFrame, eager: Boolean): DataFrame = {
       val out = checkpoint(df, eager)
       LineageStats.checkpointRdd(out).foreach(pending.enqueue(_))
-      while (pending.size > 2) {
-        val old = pending.dequeue()
-        if (!Gen.keepAll) old.unpersist(blocking = false)
-      }
+      while (pending.size > 2) pending.dequeue().unpersist(blocking = false)
       out
     }
 
@@ -95,11 +92,8 @@ object Lineage {
       * return. Falls back to a real count when the observed metric is
       * unavailable — never wrong, only slower. */
     def rollCounted(df: DataFrame,
-                    pred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): (DataFrame, Long) = {
-      val observed = observing(df, pred)
-      val out = roll(observed, eager = true)
-      (out, observedN(observed, out, pred))
-    }
+                    pred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): (DataFrame, Long) =
+      counted(df, pred)(roll(_, eager = true))
 
     /** Eager roll + an arbitrary piggybacked observed AGGREGATE (the
       * [[rollCounted]] mechanism for non-count gates, e.g. a tolerance
@@ -117,14 +111,6 @@ object Lineage {
     }
   }
 
-  object Gen {
-    /** Diagnostic kill-switch (dev-only; never set by the driver):
-      * SPARK_GRAFT_GEN_KEEPALL=1 disables generation release so an
-      * interleaved A/B can attribute a timing delta to the release
-      * mechanism itself within one host regime. */
-    private[Lineage] val keepAll = sys.env.contains("SPARK_GRAFT_GEN_KEEPALL")
-  }
-
   /** Fresh per-loop-variable generation tracker. */
   def gen(): Gen = new Gen()
 
@@ -132,22 +118,18 @@ object Lineage {
     * checkpoints: eager checkpoint + piggybacked (optionally gated)
     * row count, no separate count() job. */
   def checkpointCounted(df: DataFrame,
-                        pred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): (DataFrame, Long) = {
-    val observed = observing(df, pred)
-    val out = checkpoint(observed, eager = true)
-    (out, observedN(observed, out, pred))
-  }
+                        pred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): (DataFrame, Long) =
+    counted(df, pred)(checkpoint(_, eager = true))
 
-  private def observing(df: DataFrame,
-                        pred: org.apache.spark.sql.Column): DataFrame = {
+  /** `materialize(df)` with the gated count observed on the way. */
+  private def counted(df: DataFrame, pred: org.apache.spark.sql.Column)(
+      materialize: DataFrame => DataFrame): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.{count, lit, when}
-    df.observe("graft_roll_n", count(when(pred, lit(1))).as("n"))
+    val observed = df.observe("graft_roll_n", count(when(pred, lit(1))).as("n"))
+    val out = materialize(observed)
+    (out, LineageStats.observedCount(observed, "graft_roll_n")
+      .getOrElse(out.filter(pred).count()))
   }
-
-  private def observedN(observed: DataFrame, out: DataFrame,
-                        pred: org.apache.spark.sql.Column): Long =
-    LineageStats.observedCount(observed, "graft_roll_n")
-      .getOrElse(out.filter(pred).count())
 
   /** Release a consumed checkpoint's blocks (non-blocking). Only for
     * frames that will never be read again — localCheckpoint lineage is
@@ -168,13 +150,19 @@ object Lineage {
     * (not a checkpoint, or evicted). */
   def sizedParts(cp: DataFrame, default: Int = 1): Int = {
     val s = cp.sparkSession
-    val adv = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-    catch { case _: Throwable => 64L * 1024 * 1024 }
     LineageStats.checkpointRdd(cp).flatMap { r =>
       s.sparkContext.getRDDStorageInfo.find(_.id == r.id)
         .map(i => math.max(1L, i.memSize + i.diskSize))
-    }.map(b => math.max(1, math.ceil(b.toDouble / adv).toInt))
+    }.map(b => math.max(1, math.ceil(b.toDouble / advisoryBytes(s)).toInt))
       .getOrElse(default)
   }
+
+  /** The session's AQE advisory partition size in bytes
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), 64 MB when
+    * unset or unparsable — the unit both loop partition sizing and the
+    * SHJ build-side guard measure against. */
+  def advisoryBytes(s: org.apache.spark.sql.SparkSession): Long =
+    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
+    catch { case _: Throwable => 64L * 1024 * 1024 }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.plans.Lineage.CheckpointOps
+import graft.plans.Recorded
 import graft.sources.Tables
 
 /** Text-analysis operators for large-scale corpus curation: heuristic
@@ -613,14 +614,11 @@ object TextStats {
 
   // --------------------------------------------- BPE training + encoding
 
-  /** Recorded merge-round count per key for [[bpeMerges]] — the
-    * record-then-unroll oracle contract (g5/g7/g9/g25): small corpora
-    * can exhaust their pair supply before `rounds`, so the oracle
-    * unrolls exactly the rounds that actually merged. */
-  private[text] val bpeRoundsRec =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[graft.graph.Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[text] var lastBpeKey: Option[String] = None
+  /** Recorded merge-round count per key for [[bpeMerges]] (see
+    * [[Recorded]]): small corpora can exhaust their pair supply before
+    * `rounds`, so the oracle unrolls exactly the rounds that actually
+    * merged. */
+  private[text] val bpeRoundsRec = new Recorded
 
   /** Symbolization of a word as a '##'-bounded symbol string: every
     * boundary (including both ends) is the DOUBLE separator "##", so a
@@ -716,7 +714,7 @@ object TextStats {
         done = i
       }
     }
-    recordKey.foreach { k => bpeRoundsRec(k) = done; lastBpeKey = Some(k) }
+    bpeRoundsRec.record(recordKey, done)
     if (merges.isEmpty)
       vocab.limit(0).select(lit(0).as("merge_rank"), lit("").as("lhs"),
         lit("").as("rhs"), lit(0L).as("n"))
@@ -735,12 +733,9 @@ object TextStats {
     }
   }
 
-  /** Recorded batch-round count per key for [[bpeMergesBatched]] —
-    * same record-then-unroll oracle contract as [[bpeRoundsRec]]. */
-  private[text] val bpeBatchRec =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  // last-write-wins no-arg-oracle fallback: safe because the gate runs one sf-dir per JVM — rationale at [[graft.graph.Graph.lastRecordKey]]'s doc + NOTES.md "ADVICE r13 item 4 (oracle last-key fallback)"
-  @volatile private[text] var lastBpeBatchKey: Option[String] = None
+  /** Recorded batch-round count per key for [[bpeMergesBatched]] (see
+    * [[Recorded]]). */
+  private[text] val bpeBatchRec = new Recorded
 
   /** x32: BATCHED symbol-disjoint BPE training — the real-corpus scale
     * path the per-merge loop can't reach. Sequential BPE pays one
@@ -839,7 +834,7 @@ object TextStats {
         done = b
       }
     }
-    recordKey.foreach { k => bpeBatchRec(k) = done; lastBpeBatchKey = Some(k) }
+    bpeBatchRec.record(recordKey, done)
     if (ruleFrames.isEmpty)
       vocab.limit(0).select(lit(0).as("batch"), lit(0).as("pos"),
         lit("").as("lhs"), lit("").as("rhs"), lit(0L).as("n"))
@@ -880,7 +875,7 @@ object TextStats {
     graft.plans.Materialized(s, s"bpe_vocab:${Tables.norm(dir)}") {
       val merges = cachedBpeMerges(s, dir) // ensures the round count is recorded
       bpeApply(docsTok(s, dir), merges,
-        bpeRoundsRec.getOrElse(Tables.norm(dir), 0))
+        bpeRoundsRec.get(Tables.norm(dir)).getOrElse(0))
     }
 
   def xBpeTrain(spark: SparkSession, dir: String): DataFrame =
@@ -949,42 +944,34 @@ object TextStats {
     sb.toString
   }
 
-  def xBpeTrainSql(key: Option[String] = None): String = {
-    val recorded = bpeRoundsRec.readOnlySnapshot()
-    val chosen = key.orElse(lastBpeKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_x30_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    val un = (1 to r)
-      .map(i => s"SELECT $i AS merge_rank, lhs, rhs, CAST(n AS BIGINT) AS n FROM b$i")
-      .mkString("\n  UNION ALL ")
-    s"""WITH ${bpeCtes(r)}
-       |SELECT * FROM (
-       |  $un
-       |) m ORDER BY merge_rank""".stripMargin
-  }
+  def xBpeTrainSql(key: Option[String] = None): String =
+    bpeRoundsRec.oracle("x30", key) { r =>
+      val un = (1 to r)
+        .map(i => s"SELECT $i AS merge_rank, lhs, rhs, CAST(n AS BIGINT) AS n FROM b$i")
+        .mkString("\n  UNION ALL ")
+      s"""WITH ${bpeCtes(r)}
+         |SELECT * FROM (
+         |  $un
+         |) m ORDER BY merge_rank""".stripMargin
+    }
 
-  def xBpeEncodeSql(key: Option[String] = None): String = {
-    val recorded = bpeRoundsRec.readOnlySnapshot()
-    val chosen = key.orElse(lastBpeKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_x31_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    s"""WITH ${bpeCtes(r)},
-       |dt AS (SELECT doc_id, word, count(*) AS c FROM tok GROUP BY doc_id, word),
-       |vs AS (SELECT word,
-       |  len(list_filter(string_split(sym, '##'), s -> s <> '')) AS n_sym,
-       |  length(word) AS n_chr FROM v$r),
-       |ag AS (SELECT doc_id, SUM(c * n_sym) AS n_tokens, SUM(c * n_chr) AS n_chars
-       |  FROM dt JOIN vs USING (word) GROUP BY doc_id)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-       |  CAST(COALESCE(a.n_chars, 0) AS BIGINT) AS n_chars,
-       |  CAST(CASE WHEN COALESCE(a.n_tokens, 0) > 0
-       |    THEN round(((2 * a.n_chars * 1000000 + a.n_tokens) // (2 * a.n_tokens)) / 1000000.0, 6)
-       |    ELSE 0 END AS DECIMAL(18,6)) AS chars_per_token
-       |FROM documents d LEFT JOIN ag a USING (doc_id) ORDER BY d.doc_id""".stripMargin
-  }
+  def xBpeEncodeSql(key: Option[String] = None): String =
+    bpeRoundsRec.oracle("x31", key) { r =>
+      s"""WITH ${bpeCtes(r)},
+         |dt AS (SELECT doc_id, word, count(*) AS c FROM tok GROUP BY doc_id, word),
+         |vs AS (SELECT word,
+         |  len(list_filter(string_split(sym, '##'), s -> s <> '')) AS n_sym,
+         |  length(word) AS n_chr FROM v$r),
+         |ag AS (SELECT doc_id, SUM(c * n_sym) AS n_tokens, SUM(c * n_chr) AS n_chars
+         |  FROM dt JOIN vs USING (word) GROUP BY doc_id)
+         |SELECT d.doc_id,
+         |  CAST(COALESCE(a.n_tokens, 0) AS BIGINT) AS n_tokens,
+         |  CAST(COALESCE(a.n_chars, 0) AS BIGINT) AS n_chars,
+         |  CAST(CASE WHEN COALESCE(a.n_tokens, 0) > 0
+         |    THEN round(((2 * a.n_chars * 1000000 + a.n_tokens) // (2 * a.n_tokens)) / 1000000.0, 6)
+         |    ELSE 0 END AS DECIMAL(18,6)) AS chars_per_token
+         |FROM documents d LEFT JOIN ag a USING (doc_id) ORDER BY d.doc_id""".stripMargin
+    }
 
   /** Unrolled batch-round CTEs for the x32 oracle: per round, DuckDB
     * independently recomputes the pair counts, the (n desc, lhs, rhs)
@@ -1055,27 +1042,24 @@ object TextStats {
     sb.toString
   }
 
-  def xBpeBatchSql(key: Option[String] = None): String = {
-    val recorded = bpeBatchRec.readOnlySnapshot()
-    val chosen = key.orElse(lastBpeBatchKey).flatMap(recorded.get)
-    if (chosen.isEmpty)
-      return s"SELECT graft_error_x32_oracle_without_recorded_run /* keys=${recorded.keys.mkString(";")} */"
-    val r = chosen.get
-    if (r == 0)
-      return """SELECT CAST(0 AS INT) AS batch, CAST(0 AS INT) AS pos,
-               |  '' AS lhs, '' AS rhs, CAST(0 AS BIGINT) AS n WHERE FALSE""".stripMargin
-    val un = (1 to r).map(i =>
-      s"""SELECT $i AS batch, CAST(u.x.pos AS INT) AS pos, u.x.lhs AS lhs,
-         |       u.x.rhs AS rhs, CAST(u.x.n AS BIGINT) AS n
-         |  FROM (SELECT list_transform(sel, (x, ix) ->
-         |          {'pos': ix, 'lhs': x.lhs, 'rhs': x.rhs, 'n': x.n}) AS sel2
-         |        FROM bs$i) t, UNNEST(t.sel2) AS u(x)""".stripMargin)
-      .mkString("\n  UNION ALL ")
-    s"""WITH RECURSIVE ${bpeBatchCtes(r)}
-       |SELECT * FROM (
-       |  $un
-       |) m ORDER BY batch, pos""".stripMargin
-  }
+  def xBpeBatchSql(key: Option[String] = None): String =
+    bpeBatchRec.oracle("x32", key) {
+      case 0 =>
+        """SELECT CAST(0 AS INT) AS batch, CAST(0 AS INT) AS pos,
+          |  '' AS lhs, '' AS rhs, CAST(0 AS BIGINT) AS n WHERE FALSE""".stripMargin
+      case r =>
+        val un = (1 to r).map(i =>
+          s"""SELECT $i AS batch, CAST(u.x.pos AS INT) AS pos, u.x.lhs AS lhs,
+             |       u.x.rhs AS rhs, CAST(u.x.n AS BIGINT) AS n
+             |  FROM (SELECT list_transform(sel, (x, ix) ->
+             |          {'pos': ix, 'lhs': x.lhs, 'rhs': x.rhs, 'n': x.n}) AS sel2
+             |        FROM bs$i) t, UNNEST(t.sel2) AS u(x)""".stripMargin)
+          .mkString("\n  UNION ALL ")
+        s"""WITH RECURSIVE ${bpeBatchCtes(r)}
+           |SELECT * FROM (
+           |  $un
+           |) m ORDER BY batch, pos""".stripMargin
+    }
 
   // --------------------------------------------------- unigram LM score
 

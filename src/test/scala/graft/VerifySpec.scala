@@ -12,4 +12,13 @@ class VerifySpec extends AnyFunSuite {
     val cwd = java.nio.file.Paths.get("").toAbsolutePath.normalize
     assert(Verify.artifactsDir("./v") == s"$cwd/v_artifacts")
   }
+
+  test("a throwing oracle fails its own row; the other rows' SQL is intact") {
+    val rows = Seq(
+      QuerySpec("bad_row", (_, _) => null, () => throw new IllegalArgumentException("not seeded */ x")),
+      QuerySpec("good_row", (_, _) => null, () => "SELECT 1 AS \"a\"\nFROM t"))
+    assert(Verify.oracleJson(rows) ==
+      """{"bad_row": "SELECT graft_error_bad_row_oracle_render_failed /* not seeded * / x */",""" +
+        """"good_row": "SELECT 1 AS \"a\"\nFROM t"}""")
+  }
 }

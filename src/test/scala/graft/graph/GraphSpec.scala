@@ -126,7 +126,7 @@ class GraphSpec extends SparkSpec {
     assert(r.length == 3)
     // the cycle STARTS at the fixpoint (every contrib = 1.0), so the loop
     // detects convergence on its first delta check
-    assert(Graph.lastTolIterations >= 1)
+    assert(Graph.tolIterations.last >= 1)
     // symmetric cycle, sum-to-N convention → fixpoint rank = 1.0 each
     r.foreach { case (_, rank) => assert(math.abs(rank - 1.0) < 1e-4) }
   }
