@@ -1,90 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** The measurement main: one pass over the registry (or the
+  * SPARK_GRAFT_ONLY subset) into a noop sink. Stdout gets one compact
+  * driver-facing JSON line; the full per-query detail — walls, cpu,
+  * builds, regime, episodes and each query's [[Bench.Ledger]] row —
+  * goes to stderr, /tmp/graft_bench_full.json and
+  * bench_anchors/bench_full_last.json. */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_ISOLATE=n (dev-only; driver never sets it): fork one
-    // child JVM per n query names and merge their timings. See
-    // [[runIsolated]] for the measurement contract.
-    sys.env.get("SPARK_GRAFT_ISOLATE").flatMap(_.toIntOption)
-      .filter(_ >= 1) match {
-      case Some(chunk) => runIsolated(chunk)
-      case None        => runInProcess()
-    }
-  }
-
-  private def envReps: Int = sys.env.get("SPARK_GRAFT_REPS")
-    .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-
-  /** Noise-contained bench (VERDICT r9 task 8): each chunk of `chunk`
-    * query names runs in its OWN freshly-forked JVM (same classpath,
-    * same JVM flags, same env minus the isolate flag), so one query's
-    * GC/codegen/block-manager residue can never contaminate another's
-    * reading — the in-run 20-40× spikes (NOTES.md: q46 39 s in-run vs
-    * 1.5 s isolated) were partly that contamination. The residual noise
-    * is EXTERNAL host contention (measured: a 9 s q38 median survived
-    * full isolation), which no process boundary removes — that is what
-    * the per-query process-CPU column exists for: CPU seconds are
-    * contention-immune, so two same-config runs agree on CPU even when
-    * wall clock diverges.
-    *
-    * Measurement contract: per-query numbers are each child's own
-    * steady-state reading (children still warm up on the tiny SF);
-    * JVM/session startup is NOT counted. With chunk=1 every query also
-    * pays its memoized family build alone, so ISOLATED TOTALS ARE NOT
-    * COMPARABLE to in-process totals — the per-query medians are the
-    * point. Chunk a family together (e.g. SPARK_GRAFT_ISOLATE=20) to
-    * keep intra-family memo amortization. Combine with
-    * SPARK_GRAFT_REPS=k for in-child medians (rep 1 pays the family
-    * build, so a k≥3 median reads warm-memo state). */
-  private def runIsolated(chunk: Int): Unit = {
-    import scala.jdk.CollectionConverters._
-    val names = SparkEntry.selected().map(_.name).sorted
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    // replicate this JVM's own flags (add-opens, -Xmx, -D...) verbatim
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val results: Seq[(String, (Double, Double, Double))] =
-      names.grouped(chunk).toSeq.flatMap { grp =>
-        val tsv = java.nio.file.Files.createTempFile("graft_bench_", ".tsv")
-        val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
-        val pb = new ProcessBuilder(cmd.asJava)
-        pb.environment().remove("SPARK_GRAFT_ISOLATE")
-        pb.environment().put("SPARK_GRAFT_ONLY", grp.mkString(","))
-        pb.environment().put("SPARK_GRAFT_TSV_OUT", tsv.toString)
-        // child stdout carries its own driver-facing JSON — drop it so the
-        // parent's stdout contract (ONE final JSON line) stays intact
-        pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val exit = pb.start().waitFor()
-        // children append one line per completed query (not one bulk write
-        // at chunk end), so a mid-chunk crash loses only the in-flight
-        // query; a truncated final line fails the parse guard and is
-        // skipped, never mis-read
-        val got: Map[String, (Double, Double, Double)] =
-          try java.nio.file.Files.readAllLines(tsv).asScala
-            .map(_.split('\t')).collect {
-              case Array(n, w, c, b) if scala.util.Try(w.toDouble).isSuccess &&
-                scala.util.Try(c.toDouble).isSuccess &&
-                scala.util.Try(b.toDouble).isSuccess =>
-                n -> (w.toDouble, c.toDouble, b.toDouble)
-            }.toMap
-          finally java.nio.file.Files.deleteIfExists(tsv)
-        if (exit != 0)
-          System.err.println(s"[bench] isolated chunk ${grp.head}.. exit=$exit")
-        // a name the child never reported (crash before its turn) counts
-        // as failed; cpu = -1 marks MISSING (no reading at all) so report
-        // can exclude it from totals instead of adding a fabricated
-        // |wall| second per lost query (ADVICE r10)
-        grp.map(n => n -> got.getOrElse(n, (-1.0, -1.0, 0.0)))
-      }
-    report(results.toMap, reps = envReps,
-      sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      isolated = Some(chunk), regime = Regime.empty, fullRun = false,
-      episodes = Map.empty)
-  }
-
-  /** Host-regime evidence captured by an in-process run so a contended
+  /** Host-regime evidence captured by a pass so a contended
     * reading self-identifies (VERDICT r13 finding 1 — the 1710 s
     * BENCH_r13 needed judge archaeology to adjudicate as host noise):
     *  - `gc` / `gcTotal`: per-query process GC seconds
@@ -99,13 +32,10 @@ object Bench {
     *  - `blocks` / `blocksMax`: persistent-RDD count after each query
     *    (post-sweep) and the pass-wide pre-sweep max — the bounded-
     *    block-store telemetry for finding 2. */
-  private final case class Regime(
+  private[graft] final case class Regime(
     gc: Map[String, Double], load: Seq[Double], refProbe: Seq[Double],
     blocks: Map[String, Int], blocksMax: Int, stealPct: Seq[Double],
     jit: Map[String, Double])
-  private object Regime {
-    val empty = Regime(Map.empty, Nil, Nil, Map.empty, 0, Nil, Map.empty)
-  }
 
   /** Cumulative steal jiffies from /proc/stat (-1 if unreadable). Steal
     * is the DIRECT co-tenant signal on this host: the boot-average is
@@ -121,18 +51,16 @@ object Bench {
     } catch { case _: Throwable => -1L }
 
   // ---- process counters shared by the timed loop and the episode
-  // watchdog (hoisted from runInProcess when the watchdog landed)
+  // watchdog
   private val osBean =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean => Some(b)
       case _ => None
     }
   private def cpuNanos: Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
+  private def gcMillis: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
   // cumulative JIT compiler thread time: the per-query delta is the
   // episode discriminator the gc/steal columns can't provide — a
   // query at cpu≈wall with gc≈0 and jit≈cpu was a COMPILATION storm
@@ -166,8 +94,7 @@ object Bench {
     * 3-rep re-runs — a pass-context-only, in-JVM episode class no
     * existing column could name. This watchdog makes the next episode
     * carry its own diagnosis: while a query runs, a daemon thread
-    * checks elapsed wall against max(3× its anchor median, 5 s
-    * [SPARK_GRAFT_EPISODE_SEC overrides the floor, dev-only]); on
+    * checks elapsed wall against max(3× its anchor median, 5 s); on
     * breach it dumps (a) jit/gc/Janino-compile-count deltas from rep
     * start to capture end and (b) aggregated all-thread stack samples
     * on an exponential-backoff schedule spanning ~64 s of breach —
@@ -182,13 +109,12 @@ object Bench {
     * the query is already anomalous — zero cost on clean passes. */
   private final class EpisodeWatchdog(anchorWarm: Map[String, Double],
                                       anchorBuild: Map[String, Double]) {
-    private val floorSec = sys.env.get("SPARK_GRAFT_EPISODE_SEC")
-      .flatMap(_.toDoubleOption).filter(_ > 0).getOrElse(5.0)
+    private val floorSec = 5.0
     // (name, startNanos, thresholdSec, baseJitMs, baseGcMs, baseJanino)
     @volatile private var current: Option[(String, Long, Double, Long, Long, Long)] = None
     private val out = scala.collection.concurrent.TrieMap[String, String]()
-    // true while capture() is writing an episode: report() must flush
-    // before reading, or a capture racing the pass's final breaching
+    // true while capture() is writing an episode: the pass must flush
+    // before rendering, or a capture racing the pass's final breaching
     // query can miss the emitted JSON entirely (ADVICE r15)
     @volatile private var inFlight = false
     def episodes: Map[String, String] = out.toMap
@@ -211,8 +137,6 @@ object Bench {
       current = Some((name, System.nanoTime(), thresholdFor(name),
         jitMillis, gcMillis, janinoCount))
     def end(): Unit = current = None
-    private def esc(s: String) =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
     /** One aggregated stack sample: top-of-stack signatures (6 frames,
       * class.method only) of all RUNNABLE threads, grouped with counts
       * so 13 identical codegen workers read as one line, not 13.
@@ -223,7 +147,6 @@ object Bench {
       * janino), a signature distinct from both host steal and the r14
       * compilation storms. */
     private def sampleStacks(): (Int, Int, String) = {
-      import scala.jdk.CollectionConverters._
       val sigs = Thread.getAllStackTraces.asScala.toSeq.collect {
         case (t, st) if t.getState == Thread.State.RUNNABLE && st.nonEmpty &&
           t.getName != "graft-episode-watchdog" =>
@@ -240,7 +163,7 @@ object Bench {
       val active = sigs.count(s => !idleTop.exists(s.takeWhile(_ != '<').contains))
       val top = sigs.groupBy(identity).view.mapValues(_.size).toSeq
         .sortBy { case (s, n) => (-n, s) }.take(6)
-        .map { case (s, n) => s"""{"n":$n,"stack":"${esc(s)}"}""" }
+        .map { case (s, n) => s"""{"n":$n,"stack":${Verify.js(s)}}""" }
         .mkString("[", ",", "]")
       (sigs.size, active, top)
     }
@@ -356,7 +279,85 @@ object Bench {
     math.min(once(), once())
   }
 
-  private def runInProcess(): Unit = {
+  /** Per-query execution shape from the listener bus — what a wall time
+    * alone can't say: is the time going to driver round-trips (many tiny
+    * jobs), task volume (32-task stages over KB-sized data), shuffle
+    * bytes, or genuine compute (task time ≈ wall × cores)? [[open]] zeroes
+    * the counters and [[close]] reads them, each after draining the bus,
+    * so a row holds exactly the events posted in between. A job's site
+    * is its distinct stage names in stage-id order (parents first; the
+    * event lists them in hash order) joined with ` | ` — which
+    * checkpoint, broadcast, AQE stage or final action issued it. */
+  private[graft] final class Ledger(sc: SparkContext) extends SparkListener {
+    private val jobs, stages, tasks = new AtomicInteger
+    private val runMs, cpuNs, deserMs, gcMs, readB, writeB = new AtomicLong
+    private val sites = new ConcurrentHashMap[String, AtomicInteger]
+    sc.addSparkListener(this)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      val site = j.stageInfos.sortBy(_.stageId).map(_.name).distinct.mkString(" | ")
+      sites.computeIfAbsent(site, _ => new AtomicInteger).incrementAndGet()
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) {
+        runMs.addAndGet(m.executorRunTime)
+        cpuNs.addAndGet(m.executorCpuTime)
+        deserMs.addAndGet(m.executorDeserializeTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        readB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        writeB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+
+    // the drain gives up after 10 s; a late event then lands in the
+    // neighbouring row instead of aborting the pass
+    private def settle(): Unit =
+      try ListenerBus.drain(sc)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+    def open(): Unit = {
+      settle()
+      Seq(jobs, stages, tasks).foreach(_.set(0))
+      Seq(runMs, cpuNs, deserMs, gcMs, readB, writeB).foreach(_.set(0L))
+      sites.clear()
+    }
+    def close(): Ledger.Row = {
+      settle()
+      Ledger.Row(jobs.get, stages.get, tasks.get, runMs.get / 1e3,
+        cpuNs.get / 1e9, deserMs.get / 1e3, gcMs.get, readB.get / 1e6,
+        writeB.get / 1e6, sites.asScala.map { case (k, n) => k -> n.get }.toMap)
+    }
+  }
+  private[graft] object Ledger {
+    final case class Row(jobs: Int, stages: Int, tasks: Int, taskTimeS: Double,
+                         taskCpuS: Double, deserS: Double, gcMs: Long,
+                         shufReadMb: Double, shufWriteMb: Double,
+                         sites: Map[String, Int]) {
+      def json: String = {
+        val st = sites.toSeq.sortBy { case (k, n) => (-n, k) }
+          .map { case (k, n) => s"${Verify.js(k)}:$n" }.mkString("{", ",", "}")
+        f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_s":$taskTimeS%.3f,"task_cpu_s":$taskCpuS%.3f,"deser_s":$deserS%.3f,"gc_ms":$gcMs,"shuf_read_mb":$shufReadMb%.2f,"shuf_write_mb":$shufWriteMb%.2f,"sites":$st}"""
+      }
+    }
+  }
+
+  /** `explain("formatted")` of one query into `<dir>/<name>.txt`.
+    * Building the frame runs its eager checkpoints — real jobs — so the
+    * pass dumps only after every reading of the query is taken. */
+  private[graft] def dumpPlan(spark: SparkSession, name: String,
+                              fn: (SparkSession, String) => DataFrame,
+                              sfDir: String, dir: String): Unit = {
+    val d = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.createDirectories(d)
+    java.nio.file.Files.writeString(d.resolve(s"$name.txt"), fn(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted")))
+  }
+
+  def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // dev-only subset filter (SPARK_GRAFT_ONLY), shared with Verify —
     // the driver never sets it, so the gate benches everything
@@ -390,39 +391,14 @@ object Bench {
     // unchanged): run each query k times and report the per-query MEDIAN.
     // Host noise on this sandbox moves single readings by several seconds
     // (NOTES.md) — medians make the per-query detail trustworthy without
-    // touching the driver-facing line's semantics.
-    val reps = envReps
-    // SPARK_GRAFT_SLOW_Q=name:ms (dev-only gate-validation hook, VERDICT
-    // r14 item 2 done-check): sleep ms INSIDE the timed region of one
-    // named query, simulating a real plan regression — wall grows with
-    // no build/jit attribution, so the methodology-aware regression
-    // flag must still fire on it while staying ≈0 on clean cold runs.
-    // `name:ms` sleeps (zero jit attribution — validates the discount's
-    // floor); `name:ms:spin` burns the same wall through FRESHLY
-    // GENERATED codegen classes (a new modulus literal per iteration →
-    // a new plan → Janino + C2 churn), carrying the jit attribution a
-    // REAL plan regression carries — validating that the capped jit
-    // discount cannot mask that class either (ADVICE r15).
-    val slowQ: Option[(String, Long, Boolean)] = sys.env.get("SPARK_GRAFT_SLOW_Q")
-      .flatMap { s =>
-        s.split(':') match {
-          case Array(n, ms) => ms.toLongOption.map((n, _, false))
-          case Array(n, ms, "spin") => ms.toLongOption.map((n, _, true))
-          case _ => None
-        }
-      }
-    // child mode under SPARK_GRAFT_ISOLATE: stream each query's reading
-    // to the parent AS IT COMPLETES, so a later query's crash never
-    // discards the chunk's finished work (ADVICE r10)
-    val tsvOut = sys.env.get("SPARK_GRAFT_TSV_OUT")
-    def appendTsv(name: String, wall: Double, cpu: Double, build: Double): Unit =
-      tsvOut.foreach { p =>
-        try java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-          s"$name\t$wall\t$cpu\t$build\n",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-        catch { case _: Throwable => () }
-      }
+    // touching the driver-facing line's semantics. The ledger keeps the
+    // LAST rep's row: at k≥3 that is warm state (memo builds and codegen
+    // paid by earlier reps).
+    val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
+      .filter(_ >= 1).getOrElse(1)
+    // SPARK_GRAFT_PLANS_DIR=dir (dev-only): each query's
+    // explain("formatted") → <dir>/<name>.txt, before/after plan evidence
+    val plansDir = sys.env.get("SPARK_GRAFT_PLANS_DIR")
     // Between-query block sweep (VERDICT r13 finding 2): superseded
     // loop generations and within-query multi-consumer checkpoints die
     // with their query, but their blocks linger until the driver GCs
@@ -436,11 +412,7 @@ object Bench {
     // post-sweep blocksByQ sample below must read the block store AFTER
     // removal completes — an async sweep overstated the residual in the
     // very telemetry added to prove the sweep works (ADVICE r14).
-    // SPARK_GRAFT_NO_SWEEP=1 (dev-only diagnostic; driver never sets
-    // it): disable the sweep so an interleaved A/B can attribute an
-    // in-pass timing delta to the sweep itself within one host regime
-    val noSweep = sys.env.contains("SPARK_GRAFT_NO_SWEEP")
-    def sweepBlocks(): Unit = if (!noSweep) {
+    def sweepBlocks(): Unit = {
       val live = graft.plans.Materialized.liveRddIds
       spark.sparkContext.getPersistentRDDs.values
         .filter(r => !live.contains(r.id)).foreach(_.unpersist(blocking = true))
@@ -457,6 +429,7 @@ object Bench {
     val gcByQ = scala.collection.mutable.Map.empty[String, Double]
     val jitByQ = scala.collection.mutable.Map.empty[String, Double]
     val blocksByQ = scala.collection.mutable.Map.empty[String, Int]
+    val ledgerByQ = scala.collection.mutable.Map.empty[String, Ledger.Row]
     var blocksMax = 0
     def regimePoint(): Unit = {
       loads += loadAvg; steals += ((stealJiffies, System.nanoTime()))
@@ -467,34 +440,20 @@ object Bench {
     // warm), which would dominate probe_drift on every run
     regimePoint() // pass start (post-warmup)
     val watchdog = new EpisodeWatchdog(anchorMap("queries"), anchorMap("builds"))
+    val ledger = new Ledger(spark.sparkContext)
     val results = qseq.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi == mid && qi > 0) regimePoint() // pass midpoint
       val g0 = gcMillis
       val j0 = jitMillis
       val reads = (1 to reps).map { _ =>
+        ledger.open() // bus drain: before t0, outside the timed region
         watchdog.begin(name)
         val c0 = cpuNanos
         val t0 = System.nanoTime()
         // noop sink: materializes every output column (a bare count() would
         // let Catalyst prune unreferenced expressions and undercount work)
         val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            slowQ.foreach { case (n, ms, spin) =>
-              if (n == name) {
-                if (spin) {
-                  val deadline = System.nanoTime() + ms * 1000000L
-                  var k = 3L
-                  while (System.nanoTime() < deadline) {
-                    spark.range(0L, 2000000L, 1L, 8)
-                      .selectExpr(s"sum(id % $k)").collect()
-                    k += 2
-                  }
-                } else Thread.sleep(ms)
-              }
-            }
-            true
-          }
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
           }
@@ -503,7 +462,7 @@ object Bench {
         // failed queries report negative elapsed so they can never be
         // mistaken for a fast pass in bench totals
         watchdog.end()
-        (if (ok) sec else -sec, cpu)
+        (if (ok) sec else -sec, cpu, ledger.close())
       }
       // GC/JIT deltas span ALL reps, but the per-query wall below is a
       // single-rep median — divide by reps so gc_frac/jit compare
@@ -513,17 +472,25 @@ object Bench {
       gcByQ(name) = (gcMillis - g0) / 1e3 / reps
       jitByQ(name) = if (j0 < 0) -1.0 else (jitMillis - j0) / 1e3 / reps
       blocksMax = math.max(blocksMax, spark.sparkContext.getPersistentRDDs.size)
-      sweepBlocks() // outside the timing; memo entries spared
-      blocksByQ(name) = spark.sparkContext.getPersistentRDDs.size
+      ledgerByQ(name) = reads.last._3
       // shared-memo builds this query's reps paid (first-payer cost):
       // queries run strictly sequentially, so the drain attributes
       // exactly — a nonzero value explains a first-payer-reassignment
       // swing without archaeology (VERDICT r11 item 4)
       val buildSec = graft.plans.Materialized.drainBuildLog().map(_._2).sum
+      // every reading above is taken, so the dump's eager checkpoint
+      // jobs land in no counter; the sweep below drops their blocks
+      plansDir.foreach { d =>
+        try dumpPlan(spark, name, fn, sfDir, d)
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name plan dump FAILED: ${e.getMessage}")
+        }
+      }
+      sweepBlocks() // outside the timing; memo entries spared
+      blocksByQ(name) = spark.sparkContext.getPersistentRDDs.size
       val median = reads.map(r => math.abs(r._1)).sorted.apply(reps / 2)
       val cpuMedian = reads.map(_._2).sorted.apply(reps / 2)
       val wall = if (reads.exists(_._1 < 0)) -median else median
-      appendTsv(name, wall, cpuMedian, buildSec)
       name -> (wall, cpuMedian, buildSec)
     }.toMap
     regimePoint() // pass end
@@ -538,33 +505,59 @@ object Bench {
       blocksByQ.toMap, blocksMax, stealPct, jitByQ.toMap)
     spark.stop() // stop BEFORE printing so no shutdown logs trail the JSON
     watchdog.flush() // join any capture racing the final query's end()
-    report(results, reps, sfDir, isolated = None, regime = regime,
-      fullRun = fullRun, episodes = watchdog.episodes)
+    val (compact, fullJson) = render(results, reps, sfDir, regime,
+      watchdog.episodes, ledgerByQ.toMap, anchorMap("queries"), anchorArr("ref_probe"))
+    // FULL per-query detail to stderr (and files) for BASELINE.md
+    // bookkeeping — NOT the driver-facing line.
+    System.err.println(fullJson)
+    // /tmp for ad-hoc reads AND a durable in-repo copy (bench_anchors/)
+    // so future rounds can audit the per-query detail of any recorded
+    // run without re-measuring (VERDICT r11 item 1). Full-registry runs
+    // ADDITIONALLY write a timestamped copy so one round's forensic
+    // evidence is never clobbered by the next invocation (VERDICT r13
+    // finding 3 — bench_full_last.json alone lost the driver's r13 run).
+    val stamp = java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.now())
+    val outs = Seq("/tmp/graft_bench_full.json",
+      "bench_anchors/bench_full_last.json") ++
+      (if (fullRun) Seq(s"bench_anchors/bench_full_$stamp.json") else Nil)
+    for (p <- outs)
+      try {
+        val path = java.nio.file.Paths.get(p)
+        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.writeString(path, fullJson + "\n")
+      } catch { case _: Throwable => () }
+    // Driver-facing line LAST on stdout, and compact: the driver keeps
+    // only a ~1 KiB tail of the output, so a 168-entry queries map gets
+    // its head truncated and fails to parse (BENCH_r4/r5 "parsed: null").
+    println(compact)
+    System.out.flush()
   }
 
-  private def report(results: Map[String, (Double, Double, Double)], reps: Int,
-                     sfDir: String, isolated: Option[Int],
-                     regime: Regime, fullRun: Boolean,
-                     episodes: Map[String, String]): Unit = {
+  /** The pass's two JSON documents, `(compactLine, fullJson)`, from its
+    * readings alone: `results` maps query → (wall, cpu, build seconds),
+    * wall negative for a failed query; `anchor`/`anchorProbe` are the
+    * committed anchor's per-query medians and reference-probe readings. */
+  private[graft] def render(results: Map[String, (Double, Double, Double)],
+                            reps: Int, sfDir: String, regime: Regime,
+                            episodes: Map[String, String],
+                            ledger: Map[String, Ledger.Row],
+                            anchor: Map[String, Double],
+                            anchorProbe: Seq[Double]): (String, String) = {
     val failed = results.count(_._2._1 < 0)
-    // cpu < 0 marks an isolated-mode query with NO reading (child crashed
-    // before reaching it): it counts in `failed` but contributes nothing
-    // to either total — the old code's abs(-1.0) fabricated one second
-    // per lost query (ADVICE r10). A query that ran and failed (cpu ≥ 0,
-    // wall < 0) still contributes its real elapsed time.
-    val measured = results.values.filter(_._2 >= 0)
-    val total = measured.map(r => math.abs(r._1)).sum
-    val cpuTotal = measured.map(_._2).sum
+    // a query that ran and failed (wall < 0) still contributes its real
+    // elapsed time
+    val total = results.values.map(r => math.abs(r._1)).sum
+    val cpuTotal = results.values.map(_._2).sum
     // first-payer attribution (VERDICT r11 item 4): Σ shared-memo build
     // seconds and the count of queries that paid one — the swing
     // explanation a raw per-query comparison needs
-    val buildTotal = measured.map(_._3).sum
+    val buildTotal = results.values.map(_._3).sum
     val buildPaid = results.values.count(_._3 > 0)
     def fmt(v: Double) = f"$v%.3f"
-    val iso = isolated.fold("")(c => s""","isolated":$c""")
-    // FULL per-query detail to stderr (and files) for BASELINE.md
-    // bookkeeping — NOT the driver-facing line. "cpu" is per-query
-    // process-CPU seconds (contention-immune; see runIsolated);
+    // "cpu" is per-query process-CPU seconds (contention-immune: two
+    // same-config runs agree on CPU even when wall clock diverges);
     // "builds" is per-query shared-memo build seconds (sparse: only
     // first payers are listed).
     val qsFull = results.map { case (k, (w, _, _)) => "\"" + k + "\":" + fmt(w) }
@@ -581,7 +574,6 @@ object Bench {
     // single-rep driver runs carry seconds of host noise on this sandbox
     // and sub-0.3 s queries jitter by whole ratio multiples. Queries
     // with no anchor entry (new this round) are omitted from the map.
-    val anchor: Map[String, Double] = anchorMap("queries")
     // Methodology-aware ratio (VERDICT r14 item 2 / findings 2-3): the
     // anchor medians are WARM multi-rep readings (rep 1 pays family
     // builds + compilation; the median doesn't), but a single-rep run —
@@ -594,7 +586,7 @@ object Bench {
     // comparing; at reps≥2 the median is already warm and the raw wall
     // compares like-for-like. The discount can only shrink the ratio
     // (a real plan regression burns wall with no build/jit attribution
-    // and still flags — validated by the SPARK_GRAFT_SLOW_Q dev hook).
+    // and still flags — BenchSpec's "no build, no jit" case).
     val discounted = reps == 1
     def adjWall(k: String): Double = {
       val raw = math.abs(results(k)._1)
@@ -606,9 +598,9 @@ object Bench {
         // triggers fresh codegen/JIT of its own — an uncapped
         // subtraction would discount part of a genuine regression's
         // signal in exactly the single-rep driver mode the flag serves
-        // (validated by the SLOW_Q :spin hook, which burns wall through
-        // freshly generated classes and must still flag). Builds stay
-        // uncapped: memo builds are wall-serial by construction.
+        // (BenchSpec's "jit as large as the wall" case must still flag).
+        // Builds stay uncapped: memo builds are wall-serial by
+        // construction.
         val jit = math.max(0.0, regime.jit.getOrElse(k, 0.0))
         math.max(0.0, raw - results(k)._3 - math.min(jit, 0.5 * raw))
       }
@@ -620,18 +612,16 @@ object Bench {
     // flags" instead of crying wolf on dozens of names (38 phantom flags
     // in the r15 driver pass, zero real). Floored at 1.0 — a faster-
     // than-anchor host must not inflate ratios — and inert (1.0) when
-    // either side lacks probe readings (isolated mode, missing anchor).
+    // either side lacks probe readings (missing anchor).
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val anchorProbe = anchorArr("ref_probe")
     val regimeFactor =
       if (regime.refProbe.nonEmpty && anchorProbe.nonEmpty &&
           med(anchorProbe) > 0)
         math.max(1.0, med(regime.refProbe) / med(anchorProbe))
       else 1.0
-    val ratios: Seq[(String, Double)] = results.toSeq.collect {
-      case (k, (_, c, _)) if c >= 0 && anchor.get(k).exists(_ > 0) =>
-        k -> adjWall(k) / (anchor(k) * regimeFactor)
-    }
+    val ratios: Seq[(String, Double)] = results.keys.toSeq
+      .filter(k => anchor.get(k).exists(_ > 0))
+      .map(k => k -> adjWall(k) / (anchor(k) * regimeFactor))
     val vsAnchorFull = ratios.map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }
       .mkString("{", ",", "}")
     val regressed = ratios.collect {
@@ -656,10 +646,9 @@ object Bench {
     // ratio the same way (a 0.08 s end reading pushed one quiet pass
     // to "drift 2.27" while all three readings sat inside the band)
     val probeDrift =
-      if (regime.refProbe.nonEmpty && regime.refProbe.min > 0) {
-        val med = regime.refProbe.sorted.apply(regime.refProbe.size / 2)
-        regime.refProbe.max / med
-      } else 0.0
+      if (regime.refProbe.nonEmpty && regime.refProbe.min > 0)
+        regime.refProbe.max / med(regime.refProbe)
+      else 0.0
     val jitTotal = regime.jit.values.filter(_ >= 0).sum
     val jitFull = regime.jit.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -667,33 +656,14 @@ object Bench {
     // pre-rendered JSON objects from the watchdog — empty on clean passes
     val episodesFull = episodes.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val ledgerFull = ledger.toSeq.sortBy(_._1)
+      .map { case (k, r) => "\"" + k + "\":" + r.json }.mkString("{", ",", "}")
     val regimeFull =
       s""","gc_total":${fmt(gcTotal)},"gc_frac":${fmt(gcFrac)},"gc":$gcFull,"jit_total":${fmt(jitTotal)},"jit":$jitFull,"load":${arr(regime.load)},"ref_probe":${arr(regime.refProbe)},"probe_drift":${fmt(probeDrift)},"regime_factor":${fmt(regimeFactor)},"steal_pct":${arr(regime.stealPct)},"blocks_max":${regime.blocksMax},"blocks":$blocksFull,"episodes":$episodesFull"""
     val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qsFull,"cpu_total":${fmt(cpuTotal)},"cpu":$cpuFull,"build_sec_total":${fmt(buildTotal)},"builds":$buildsFull,"vs_anchor":$vsAnchorFull,"vs_anchor_discounted":$discounted,"regressed":$regressedJson,"anchor_n":${ratios.size}$regimeFull,"failed":$failed,"sf":"$sfDir"$iso}"""
-    System.err.println(fullJson)
-    // /tmp for ad-hoc reads AND a durable in-repo copy (bench_anchors/)
-    // so future rounds can audit the per-query detail of any recorded
-    // run without re-measuring (VERDICT r11 item 1). Full-registry runs
-    // ADDITIONALLY write a timestamped copy so one round's forensic
-    // evidence is never clobbered by the next invocation (VERDICT r13
-    // finding 3 — bench_full_last.json alone lost the driver's r13 run).
-    val stamp = java.time.format.DateTimeFormatter
-      .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.now())
-    val outs = Seq("/tmp/graft_bench_full.json",
-      "bench_anchors/bench_full_last.json") ++
-      (if (fullRun) Seq(s"bench_anchors/bench_full_$stamp.json") else Nil)
-    for (p <- outs)
-      try {
-        val path = java.nio.file.Paths.get(p)
-        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.writeString(path, fullJson + "\n")
-      } catch { case _: Throwable => () }
-    // Driver-facing line LAST on stdout, and compact: the driver keeps
-    // only a ~1 KiB tail of the output, so a 168-entry queries map gets
-    // its head truncated and fails to parse (BENCH_r4/r5 "parsed: null").
-    // The spec asks for HEADLINE queries — one representative per family.
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qsFull,"cpu_total":${fmt(cpuTotal)},"cpu":$cpuFull,"build_sec_total":${fmt(buildTotal)},"builds":$buildsFull,"vs_anchor":$vsAnchorFull,"vs_anchor_discounted":$discounted,"regressed":$regressedJson,"anchor_n":${ratios.size}$regimeFull,"ledger":$ledgerFull,"failed":$failed,"sf":${Verify.js(sfDir)}}"""
+    // The compact line carries HEADLINE queries — one representative
+    // per family.
     val headline = Seq("q1_agg", "q3_join_agg", "q10_window", "t2_tfidf_multi",
       "d2_minhash_sig", "d3_lsh_near_dups", "s1_knn_brute", "s2_ann_lsh",
       "g2_pagerank", "st3_sessions", "x2_lang_id", "m1_confusion")
@@ -713,7 +683,8 @@ object Bench {
     val regimeHead = if (regime.refProbe.nonEmpty)
       s""","gc_frac":${fmt(gcFrac)},"load":${arr(regime.load)},"probe_drift":${fmt(probeDrift)},"regime_factor":${fmt(regimeFactor)},"steal_pct":${arr(regime.stealPct)},"blocks_max":${regime.blocksMax},"episodes_n":${episodes.size}"""
     else ""
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total":${fmt(cpuTotal)},"build_sec_total":${fmt(buildTotal)},"build_paid":$buildPaid,"queries":$qs,"failed":$failed,"regressed_n":${regressed.size},"regressed":$regHead$regimeHead,"sf":"$sfDir","n_queries":${results.size}$iso}""")
-    System.out.flush()
+    val compact =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total":${fmt(cpuTotal)},"build_sec_total":${fmt(buildTotal)},"build_paid":$buildPaid,"queries":$qs,"failed":$failed,"regressed_n":${regressed.size},"regressed":$regHead$regimeHead,"sf":${Verify.js(sfDir)},"n_queries":${results.size}}"""
+    (compact, fullJson)
   }
 }

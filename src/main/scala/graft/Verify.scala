@@ -41,10 +41,11 @@ object Verify {
       s"${js(q.name)}: ${js(sql)}"
     }.mkString("{", ",", "}")
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in an oracle's SQL would otherwise make the reader's
-  // json.load fail and lose every row's oracle at once.
-  private def js(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal — graft's one escaper (oracle SQL here, stack
+    * samples and job sites in Bench): backslash, quote, and ALL control
+    * chars (<0x20) — one tab or CR would otherwise make the reader's
+    * parse fail and lose the whole file. */
+  private[graft] def js(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
