@@ -6,16 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The measurement main: one pass over the registry (or the
   * SPARK_GRAFT_ONLY subset) into a noop sink. Stdout gets one compact
   * driver-facing JSON line; the full per-query detail — walls, cpu,
   * builds, regime, episodes and each query's [[Bench.Ledger]] row —
-  * goes to stderr, /tmp/graft_bench_full.json and
-  * bench_anchors/bench_full_last.json. */
+  * goes to stderr, /tmp/graft_bench_full.json and, for a full-registry
+  * run, bench_anchors/bench_full_last.json. */
 object Bench {
   /** Host-regime evidence captured by a pass so a contended
     * reading self-identifies (VERDICT r13 finding 1 — the 1710 s
@@ -236,12 +237,15 @@ object Bench {
     thread.start()
   }
 
+  private def anchorText: String = try new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get("bench_anchors/anchor_current.json")), "UTF-8")
+  catch { case _: Throwable => "" }
+
   /** Parse an anchor JSON's named map of "key":number pairs (the anchor
     * files are written by this object — flat one-level maps, so the
     * regex parse is safe). Returns empty on any failure. */
   private def anchorMap(field: String): Map[String, Double] = try {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_anchors/anchor_current.json")), "UTF-8")
+    val txt = anchorText
     val qi = txt.indexOf("\"" + field + "\":{")
     if (qi < 0) Map.empty
     else {
@@ -254,13 +258,16 @@ object Bench {
   /** Parse an anchor JSON's named flat array of numbers (same writer,
     * same safety argument as [[anchorMap]]). Empty on any failure. */
   private def anchorArr(field: String): Seq[Double] = try {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_anchors/anchor_current.json")), "UTF-8")
+    val txt = anchorText
     val qi = txt.indexOf("\"" + field + "\":[")
     if (qi < 0) Nil
     else txt.substring(qi + field.length + 4, txt.indexOf(']', qi))
       .split(',').toSeq.flatMap(_.trim.toDoubleOption)
   } catch { case _: Throwable => Nil }
+
+  /** The anchor run's local core count, if it recorded one. */
+  private def anchorCores: Option[Int] =
+    "\"cores\":([0-9]+)".r.findFirstMatchIn(anchorText).map(_.group(1).toInt)
 
   /** One fixed CPU-bound reference job: sum of 4×10⁸ modulos across 32
     * partitions. No IO, no shuffle beyond the final 32-row agg, no memo
@@ -287,16 +294,32 @@ object Bench {
     * so a row holds exactly the events posted in between. A job's site
     * is its distinct stage names in stage-id order (parents first; the
     * event lists them in hash order) joined with ` | ` — which
-    * checkpoint, broadcast, AQE stage or final action issued it. */
+    * checkpoint, broadcast, AQE stage or final action issued it. AQE
+    * submits its query-stage jobs from a thread pool, so their stages
+    * all carry the pool's call site; such a job is named by its SQL
+    * execution (`spark.sql.execution.id`) instead, as `AQE stage of`
+    * the execution's description — the action that planned it. */
   private[graft] final class Ledger(sc: SparkContext) extends SparkListener {
     private val jobs, stages, tasks = new AtomicInteger
     private val runMs, cpuNs, deserMs, gcMs, readB, writeB = new AtomicLong
     private val sites = new ConcurrentHashMap[String, AtomicInteger]
+    private val executions = new ConcurrentHashMap[Long, String] // id → description
+    private val jobExecutions = ConcurrentHashMap.newKeySet[Long]()
     sc.addSparkListener(this)
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => executions.put(x.executionId, x.description)
+      case _ => ()
+    }
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
-      val site = j.stageInfos.sortBy(_.stageId).map(_.name).distinct.mkString(" | ")
+      val exec = Option(j.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+      exec.foreach(jobExecutions.add)
+      val stageSite = j.stageInfos.sortBy(_.stageId).map(_.name).distinct.mkString(" | ")
+      val site = exec.filter(_ => stageSite.contains("withThreadLocalCaptured"))
+        .flatMap(id => Option(executions.get(id)))
+        .fold(stageSite)(d => s"AQE stage of $d")
       sites.computeIfAbsent(site, _ => new AtomicInteger).incrementAndGet()
     }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -323,24 +346,25 @@ object Bench {
       settle()
       Seq(jobs, stages, tasks).foreach(_.set(0))
       Seq(runMs, cpuNs, deserMs, gcMs, readB, writeB).foreach(_.set(0L))
-      sites.clear()
+      sites.clear(); executions.clear(); jobExecutions.clear()
     }
     def close(): Ledger.Row = {
       settle()
       Ledger.Row(jobs.get, stages.get, tasks.get, runMs.get / 1e3,
         cpuNs.get / 1e9, deserMs.get / 1e3, gcMs.get, readB.get / 1e6,
-        writeB.get / 1e6, sites.asScala.map { case (k, n) => k -> n.get }.toMap)
+        writeB.get / 1e6, sites.asScala.map { case (k, n) => k -> n.get }.toMap,
+        jobExecutions.size)
     }
   }
   private[graft] object Ledger {
     final case class Row(jobs: Int, stages: Int, tasks: Int, taskTimeS: Double,
                          taskCpuS: Double, deserS: Double, gcMs: Long,
                          shufReadMb: Double, shufWriteMb: Double,
-                         sites: Map[String, Int]) {
+                         sites: Map[String, Int], executions: Int = 0) {
       def json: String = {
         val st = sites.toSeq.sortBy { case (k, n) => (-n, k) }
           .map { case (k, n) => s"${Verify.js(k)}:$n" }.mkString("{", ",", "}")
-        f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_s":$taskTimeS%.3f,"task_cpu_s":$taskCpuS%.3f,"deser_s":$deserS%.3f,"gc_ms":$gcMs,"shuf_read_mb":$shufReadMb%.2f,"shuf_write_mb":$shufWriteMb%.2f,"sites":$st}"""
+        f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_s":$taskTimeS%.3f,"task_cpu_s":$taskCpuS%.3f,"deser_s":$deserS%.3f,"gc_ms":$gcMs,"shuf_read_mb":$shufReadMb%.2f,"shuf_write_mb":$shufWriteMb%.2f,"executions":$executions,"sites":$st}"""
       }
     }
   }
@@ -506,23 +530,21 @@ object Bench {
     spark.stop() // stop BEFORE printing so no shutdown logs trail the JSON
     watchdog.flush() // join any capture racing the final query's end()
     val (compact, fullJson) = render(results, reps, sfDir, regime,
-      watchdog.episodes, ledgerByQ.toMap, anchorMap("queries"), anchorArr("ref_probe"))
+      watchdog.episodes, ledgerByQ.toMap, anchorMap("queries"), anchorArr("ref_probe"),
+      GraftSession.cpus, anchorCores)
     // FULL per-query detail to stderr (and files) for BASELINE.md
     // bookkeeping — NOT the driver-facing line.
     System.err.println(fullJson)
-    // /tmp for ad-hoc reads AND a durable in-repo copy (bench_anchors/)
-    // so future rounds can audit the per-query detail of any recorded
-    // run without re-measuring (VERDICT r11 item 1). Full-registry runs
-    // ADDITIONALLY write a timestamped copy so one round's forensic
-    // evidence is never clobbered by the next invocation (VERDICT r13
-    // finding 3 — bench_full_last.json alone lost the driver's r13 run).
+    // /tmp for ad-hoc reads; full-registry runs also write a durable
+    // in-repo copy (bench_anchors/) so future rounds can audit the
+    // per-query detail of any recorded run without re-measuring
+    // (VERDICT r11 item 1), plus a timestamped copy so one round's
+    // forensic evidence is never clobbered by the next invocation
+    // (VERDICT r13 finding 3).
     val stamp = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
-    val outs = Seq("/tmp/graft_bench_full.json",
-      "bench_anchors/bench_full_last.json") ++
-      (if (fullRun) Seq(s"bench_anchors/bench_full_$stamp.json") else Nil)
-    for (p <- outs)
+    for (p <- outputs(fullRun, stamp))
       try {
         val path = java.nio.file.Paths.get(p)
         Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
@@ -535,16 +557,27 @@ object Bench {
     System.out.flush()
   }
 
+  /** Where the full JSON goes: /tmp always; the tracked
+    * `bench_anchors/` copies (last and timestamped) only for a
+    * full-registry run, so a SPARK_GRAFT_ONLY subset never replaces the
+    * recorded full-pass detail. */
+  private[graft] def outputs(fullRun: Boolean, stamp: String): Seq[String] =
+    "/tmp/graft_bench_full.json" +: (if (fullRun)
+      Seq("bench_anchors/bench_full_last.json", s"bench_anchors/bench_full_$stamp.json")
+    else Nil)
+
   /** The pass's two JSON documents, `(compactLine, fullJson)`, from its
     * readings alone: `results` maps query → (wall, cpu, build seconds),
     * wall negative for a failed query; `anchor`/`anchorProbe` are the
-    * committed anchor's per-query medians and reference-probe readings. */
+    * committed anchor's per-query medians and reference-probe readings,
+    * `cores`/`anchorCores` this run's and the anchor's local core counts. */
   private[graft] def render(results: Map[String, (Double, Double, Double)],
                             reps: Int, sfDir: String, regime: Regime,
                             episodes: Map[String, String],
                             ledger: Map[String, Ledger.Row],
                             anchor: Map[String, Double],
-                            anchorProbe: Seq[Double]): (String, String) = {
+                            anchorProbe: Seq[Double],
+                            cores: Int, anchorCores: Option[Int]): (String, String) = {
     val failed = results.count(_._2._1 < 0)
     // a query that ran and failed (wall < 0) still contributes its real
     // elapsed time
@@ -612,11 +645,13 @@ object Bench {
     // flags" instead of crying wolf on dozens of names (38 phantom flags
     // in the r15 driver pass, zero real). Floored at 1.0 — a faster-
     // than-anchor host must not inflate ratios — and inert (1.0) when
-    // either side lacks probe readings (missing anchor).
+    // either side lacks probe readings (missing anchor). Also inert when
+    // the core counts differ: the probe's 32 partitions on 4 cores read
+    // ~5.5× the 32-core anchor's, which is core count, not host speed.
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     val regimeFactor =
-      if (regime.refProbe.nonEmpty && anchorProbe.nonEmpty &&
-          med(anchorProbe) > 0)
+      if (anchorCores.contains(cores) && regime.refProbe.nonEmpty &&
+          anchorProbe.nonEmpty && med(anchorProbe) > 0)
         math.max(1.0, med(regime.refProbe) / med(anchorProbe))
       else 1.0
     val ratios: Seq[(String, Double)] = results.keys.toSeq
@@ -661,7 +696,7 @@ object Bench {
     val regimeFull =
       s""","gc_total":${fmt(gcTotal)},"gc_frac":${fmt(gcFrac)},"gc":$gcFull,"jit_total":${fmt(jitTotal)},"jit":$jitFull,"load":${arr(regime.load)},"ref_probe":${arr(regime.refProbe)},"probe_drift":${fmt(probeDrift)},"regime_factor":${fmt(regimeFactor)},"steal_pct":${arr(regime.stealPct)},"blocks_max":${regime.blocksMax},"blocks":$blocksFull,"episodes":$episodesFull"""
     val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qsFull,"cpu_total":${fmt(cpuTotal)},"cpu":$cpuFull,"build_sec_total":${fmt(buildTotal)},"builds":$buildsFull,"vs_anchor":$vsAnchorFull,"vs_anchor_discounted":$discounted,"regressed":$regressedJson,"anchor_n":${ratios.size}$regimeFull,"ledger":$ledgerFull,"failed":$failed,"sf":${Verify.js(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qsFull,"cpu_total":${fmt(cpuTotal)},"cpu":$cpuFull,"build_sec_total":${fmt(buildTotal)},"builds":$buildsFull,"vs_anchor":$vsAnchorFull,"vs_anchor_discounted":$discounted,"regressed":$regressedJson,"anchor_n":${ratios.size}$regimeFull,"ledger":$ledgerFull,"failed":$failed,"cores":$cores,"anchor_cores":${anchorCores.getOrElse(-1)},"sf":${Verify.js(sfDir)}}"""
     // The compact line carries HEADLINE queries — one representative
     // per family.
     val headline = Seq("q1_agg", "q3_join_agg", "q10_window", "t2_tfidf_multi",

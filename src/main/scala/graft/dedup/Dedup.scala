@@ -164,7 +164,7 @@ object Dedup {
       corpus.select("doc_id", "shh", "n").write.mode("overwrite").parquet(setsPath)
       s.range(1).toDF("ok")
     }
-    (s.read.parquet(bandsPath), s.read.parquet(setsPath))
+    (Tables.parquet(s, bandsPath), Tables.parquet(s, setsPath))
   }
 
   /** Oracle for [[nearDupIngest]] — recomputes the whole pipeline

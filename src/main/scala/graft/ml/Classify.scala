@@ -250,7 +250,7 @@ object Classify {
         .select(col("doc_id"), col("label"), col("prediction"))
     }
     scored.write.mode("overwrite").parquet(scoredPath(tag))
-    spark.read.parquet(scoredPath(tag))
+    Tables.parquet(spark, scoredPath(tag))
   }
 
   /** CV variant of [[scoreAndPersist]]: fit the full grid search on the
@@ -272,7 +272,7 @@ object Classify {
         .select(col("doc_id"), col("label"), col("prediction"))
     }
     scored.write.mode("overwrite").parquet(scoredPath(tag))
-    spark.read.parquet(scoredPath(tag))
+    Tables.parquet(spark, scoredPath(tag))
   }
 
   /** Derived (never manual — see [[fitKey]]) signature for a

@@ -61,7 +61,7 @@ object Embed {
       model.transform(docs)
         .select(col("doc_id"), vector_to_array(col("w2v")).as("emb"))
         .write.mode("overwrite").parquet(embPath(tag))
-      spark.read.parquet(embPath(tag))
+      Tables.parquet(spark, embPath(tag))
     }
 
   /** Cosine top-k over the persisted doc vectors: broadcast the one query
@@ -122,7 +122,7 @@ object Embed {
         .getVectors
         .select(col("word"), vector_to_array(col("vector")).as("emb"))
         .write.mode("overwrite").parquet(wordsPath(tag))
-      spark.read.parquet(wordsPath(tag))
+      Tables.parquet(spark, wordsPath(tag))
     }
 
   /** m28: word-analogy probes — the intrinsic embedding-quality check

@@ -87,11 +87,12 @@ object Layout {
     * (sampled range boundaries — the scalable distributed sort shape,
     * no single-partition bottleneck) and sort within partitions, so each
     * parquet row group covers a small z-range and its min/max stats are
-    * tight on both key columns. */
-  def zorderWrite(df: DataFrame, x: String, y: String, path: String,
-                  partitions: Int = 16): Unit =
+    * tight on both key columns. The range count is AQE's, as in
+    * [[graft.search.TfIdf.writeIndex]]: shuffle-partitions ranges
+    * coalesced to the advisory size, so the file count follows bytes. */
+  def zorderWrite(df: DataFrame, x: String, y: String, path: String): Unit =
     df.withColumn("zval", zValue(col(x), col(y)))
-      .repartitionByRange(partitions, col("zval"))
+      .repartitionByRange(col("zval"))
       .sortWithinPartitions("zval")
       .write.mode("overwrite").parquet(path)
 
@@ -109,7 +110,7 @@ object Layout {
       zorderWrite(Tables.lineitem(spark, dir), "l_orderkey", "l_partkey", path)
       spark.range(1).toDF("ok")
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("l_orderkey").between(100, 300) &&
         col("l_partkey").between(50, 150))
       .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
@@ -250,7 +251,7 @@ object Layout {
         .write.mode("overwrite").partitionBy("pk_bucket").parquet(path)
       spark.range(1).toDF("ok")
     }
-    val fact = spark.read.parquet(path)
+    val fact = Tables.parquet(spark, path)
     val dim = Tables.part(spark, dir)
       .filter(col("p_partkey") < 50)
       .withColumn("pk_bucket", expr("p_partkey div 64"))

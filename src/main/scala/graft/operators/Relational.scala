@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QuerySpec
 import graft.plans.Lineage.CheckpointOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -31,6 +31,27 @@ object Relational {
   private val Out6 = DecimalType(18, 6)
   private val D308 = DecimalType(30, 8)
 
+  /** The TPC-H pricing products of q1_agg and q92 from bounded DECIMAL
+    * operands: price DECIMAL(12,4), `1 - discount` and `1 + tax`
+    * DECIMAL(5,4). Each product and each sum is then exact decimal
+    * arithmetic in Spark and in DuckDB, with no per-row double → decimal
+    * rounding step. */
+  private def price: Column = col("l_extendedprice").cast(DecimalType(12, 4))
+  private def rate(c: Column): Column = c.cast(DecimalType(5, 4))
+  private def discounted: Column =
+    price * rate(lit(1) - col("l_discount").cast(DecimalType(12, 4)))
+  private def charged: Column =
+    discounted * rate(lit(1) + col("l_tax").cast(DecimalType(12, 4)))
+  private val discountedSql = "CAST(l_extendedprice AS DECIMAL(12,4)) * " +
+    "CAST(1 - CAST(l_discount AS DECIMAL(12,4)) AS DECIMAL(5,4))"
+  private val chargedSql =
+    s"$discountedSql * CAST(1 + CAST(l_tax AS DECIMAL(12,4)) AS DECIMAL(5,4))"
+  /** A DECIMAL sum as DOUBLE in the oracle. DuckDB's DECIMAL(38,s) →
+    * DOUBLE cast is not correctly rounded (seed-1 sf0.1 lineitem:
+    * 5030254529.33470000 → 5030254529.334701); its VARCHAR → DOUBLE
+    * parse is, as is Spark's decimal → double. */
+  private def doubleSql(dec: String): String = s"CAST(CAST($dec AS VARCHAR) AS DOUBLE)"
+
   // ------------------------------------------------------------ aggregates
 
   /** Pricing-summary aggregate (TPC-H Q1 shape): grouped sums/avgs/counts.
@@ -43,17 +64,17 @@ object Relational {
       .agg(
         sum(col("l_quantity").cast(D204)).cast("double").as("sum_qty"),
         sum(col("l_extendedprice").cast(D204)).cast("double").as("sum_base_price"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast(D308)).cast("double").as("sum_disc_price"),
+        sum(discounted).cast("double").as("sum_disc_price"),
         (sum(col("l_quantity").cast(D204)).cast("double") / count(lit(1))).as("avg_qty"),
         count(lit(1)).as("n_rows"))
       .orderBy("l_returnflag", "l_linestatus")
 
   def q1AggSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_base_price,
-      |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))) AS DOUBLE) AS sum_disc_price,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
+      |  ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sum_base_price,
+      |  ${doubleSql(s"SUM($discountedSql)")} AS sum_disc_price,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} / COUNT(*) AS avg_qty,
       |  COUNT(*) AS n_rows
       |FROM lineitem
       |GROUP BY l_returnflag, l_linestatus
@@ -517,7 +538,7 @@ object Relational {
         .write.mode("overwrite").partitionBy("lang").parquet(path)
       spark.range(1).toDF("ok")
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("lang") === "en")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -2514,10 +2535,8 @@ object Relational {
       .agg(
         sum(col("l_quantity").cast(D204)).cast("double").as("sum_qty"),
         sum(col("l_extendedprice").cast(D204)).cast("double").as("sum_base_price"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast(D308))
-          .cast("double").as("sum_disc_price"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount")) *
-          (lit(1) + col("l_tax"))).cast(D308)).cast("double").as("sum_charge"),
+        sum(discounted).cast("double").as("sum_disc_price"),
+        sum(charged).cast("double").as("sum_charge"),
         (sum(col("l_quantity").cast(D204)).cast("double") / count(lit(1))).as("avg_qty"),
         (sum(col("l_extendedprice").cast(D204)).cast("double") / count(lit(1))).as("avg_price"),
         (sum(col("l_discount").cast(D204)).cast("double") / count(lit(1))).as("avg_disc"),
@@ -2526,13 +2545,13 @@ object Relational {
 
   def q92PricingSummarySql(cutoff: String = "1998-09-02"): String =
     s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_base_price,
-       |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))) AS DOUBLE) AS sum_disc_price,
-       |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(30,8))) AS DOUBLE) AS sum_charge,
-       |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
-       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS avg_price,
-       |  CAST(SUM(CAST(l_discount AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS avg_disc,
+       |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
+       |  ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sum_base_price,
+       |  ${doubleSql(s"SUM($discountedSql)")} AS sum_disc_price,
+       |  ${doubleSql(s"SUM($chargedSql)")} AS sum_charge,
+       |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} / COUNT(*) AS avg_qty,
+       |  ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} / COUNT(*) AS avg_price,
+       |  ${doubleSql("SUM(CAST(l_discount AS DECIMAL(20,4)))")} / COUNT(*) AS avg_disc,
        |  COUNT(*) AS count_order
        |FROM lineitem
        |WHERE l_shipdate <= TIMESTAMP '$cutoff'
@@ -2743,7 +2762,7 @@ object Relational {
     // removed — a concurrent overwrite on the session must never see
     // this write's mode, and two overlapping calls cannot race a restore
     dynamicOverwrite(backfill.write).partitionBy("day").parquet(tmp)
-    spark.read.parquet(tmp)
+    Tables.parquet(spark, tmp)
       .groupBy("day").agg(count(lit(1)).as("n_rows"))
       .orderBy("day")
   }

@@ -1054,8 +1054,8 @@ object Similarity {
     assignedIds.write.mode("overwrite").parquet(s"$base/assign")
     probes.write.mode("overwrite").parquet(s"$base/probes")
     val s = emb.sparkSession
-    val a = s.read.parquet(s"$base/assign")
-    val p = s.read.parquet(s"$base/probes")
+    val a = Tables.parquet(s, s"$base/assign")
+    val p = Tables.parquet(s, s"$base/probes")
     rerank(emb.join(a, "vec_id").join(broadcast(p), "centroid")
       .select(col("vec_id"), col("embedding")), q, queryId, k)
   }
@@ -1174,8 +1174,8 @@ object Similarity {
       pranks.write.mode("overwrite").parquet(s"$base/pranks")
       s.range(1).toDF("ok")
     }
-    val a = s.read.parquet(s"$base/assign")
-    val pRead = s.read.parquet(s"$base/pranks")
+    val a = Tables.parquet(s, s"$base/assign")
+    val pRead = Tables.parquet(s, s"$base/pranks")
     val maxNp = nprobes.max
     val scored = emb.join(a, "vec_id")
       .join(broadcast(pRead.filter(col("pr") <= maxNp)), "centroid")
@@ -2261,8 +2261,8 @@ object Similarity {
     }
     // partition-column type inference reads cid back as INT — restate
     // the long the engine wrote so downstream plans see one type
-    (s.read.parquet(centsPath),
-      s.read.parquet(indexPath).select(col("vec_id"),
+    (Tables.parquet(s, centsPath),
+      Tables.parquet(s, indexPath).select(col("vec_id"),
         col("cid").cast("long").as("cid"), col("embedding"), col("norm2")))
   }
 
@@ -2734,8 +2734,8 @@ object Similarity {
     assignedIds.write.mode("overwrite").parquet(s"$ivf2sBase/assign")
     probes.write.mode("overwrite").parquet(s"$ivf2sBase/probes")
     val s = emb.sparkSession
-    val a = s.read.parquet(s"$ivf2sBase/assign")
-    val p = s.read.parquet(s"$ivf2sBase/probes")
+    val a = Tables.parquet(s, s"$ivf2sBase/assign")
+    val p = Tables.parquet(s, s"$ivf2sBase/probes")
     val cands = a.join(broadcast(p), "centroid").select("vec_id")
     val short = pqScore(codes.join(cands, "vec_id"), lut, queryId, shortlist)
     emb.join(broadcast(short), "vec_id")
@@ -2804,7 +2804,7 @@ object Similarity {
     val qrow = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"), norm2Col(col("embedding")).as("qnorm2"))
     val (cents, codes) = cachedPqFit(s, dir, m, kc, iters)
-    val a = s.read.parquet(s"$ivf2sBase/assign")
+    val a = Tables.parquet(s, s"$ivf2sBase/assign")
     val cands = a.join(broadcast(ivfProbes(centDf, qrow, nprobe)), "centroid")
       .select("vec_id")
     val short = pqScore(codes.join(cands, "vec_id"),

@@ -1,6 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the graft test tables (TESTDATA.md / FIXTURES.md §A).
   *
@@ -10,13 +17,62 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reproduce the reference's CSV ingestion semantics
   * (ref: StandaloneScala/PageRank.scala:27, EpinionsGraphFrameAnalysis.scala:49-53,
   * ScalaNotebooks/MovieSearchEngine.scala:25-29).
+  *
+  * [[parquet]] is the engine's one parquet reader: every parquet read in
+  * `src/main` goes through it (`SourceGuardSpec` fails on any other).
   */
 object Tables {
   /** Normalize a scale-factor dir (tolerate trailing slash). */
   def norm(dir: String): String = if (dir.endsWith("/")) dir.dropRight(1) else dir
 
+  /** Spark's `read.parquet` of `path` without its schema-inference job.
+    *
+    * Spark's inference with `mergeSchema=false` (the default) reads one
+    * footer — `_common_metadata`, else `_metadata`, else the first data
+    * file by path — in a one-task job: 41–75 ms plus driver gap per
+    * read on a 4-core host, 7 jobs per corpus_memo pass. This reads that
+    * same footer on the driver and hands the schema to
+    * `spark.read.schema`: Spark's stored row-metadata schema when the
+    * footer has one, else the parquet schema converted under the
+    * session conf (so `nanosAsLong` and INT96 behave as in inference).
+    * The file set is Spark's own listing (hidden, `_SUCCESS` and `.crc`
+    * files skipped); partition columns are still discovered from
+    * directory names. A missing path, a glob, an empty dir or a session
+    * with `spark.sql.parquet.mergeSchema` on takes Spark's own inference,
+    * so errors stay Spark's (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    if (conf.isParquetSchemaMergingEnabled || !root.getFileSystem(hadoopConf).exists(root)) None
+    else {
+      val files = new InMemoryFileIndex(spark, Seq(root), Map.empty, None).allFiles()
+        .sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+        }
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"${norm(dir)}/$name.parquet")
+    parquet(spark, s"${norm(dir)}/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -210,7 +210,7 @@ object EventStream {
     val spark = batch.sparkSession
     val merged =
       if (new java.io.File(storePath).exists())
-        spark.read.parquet(storePath)
+        Tables.parquet(spark, storePath)
           .join(batch.select("day", "event_type"), Seq("day", "event_type"), "left_anti")
           .unionByName(batch)
       else batch
@@ -303,7 +303,7 @@ object EventStream {
         val spark = ranked.sparkSession
         val merged =
           if (new java.io.File(storePath).exists())
-            spark.read.parquet(storePath)
+            Tables.parquet(spark, storePath)
               .join(ranked.select("hour", "rk"), Seq("hour", "rk"), "left_anti")
               .unionByName(ranked)
           else ranked

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Fabricates an F× replica corpus for measured scale probes (SCALE.md
   * "Measured 10× scale probe") so bench runs can compare a query's cost
   * at two scales on the same host:
@@ -50,7 +52,7 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     val reps = spark.range(f).toDF("rep")
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.parquet(spark, s"$src/documents.parquet")
     val maxDoc = docs.agg(max("doc_id")).head().getLong(0) + 1
     docs.crossJoin(reps)
       .select(
@@ -68,7 +70,7 @@ object ScaleProbe {
         length(col("text")).as("n_chars"))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$src/embeddings.parquet")
     val maxVec = emb.agg(max("vec_id")).head().getLong(0) + 1
     emb.crossJoin(reps)
       .select(
@@ -80,7 +82,7 @@ object ScaleProbe {
         col("label"))
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    val orders = spark.read.parquet(s"$src/orders.parquet")
+    val orders = Tables.parquet(spark, s"$src/orders.parquet")
     val maxOrd = orders.agg(max("o_orderkey")).head().getLong(0) + 1
     val maxCust = orders.agg(max("o_custkey")).head().getLong(0) + 1
     orders.crossJoin(reps)
@@ -91,7 +93,7 @@ object ScaleProbe {
         col("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-    val cust = spark.read.parquet(s"$src/customer.parquet")
+    val cust = Tables.parquet(spark, s"$src/customer.parquet")
     val maxCustK = cust.agg(max("c_custkey")).head().getLong(0) + 1
     val plainName =
       format_string("Customer#%09d", col("c_custkey") + col("rep") * maxCustK)
@@ -118,7 +120,7 @@ object ScaleProbe {
     // growth mode association-rule mining claims linearity under
     // (supports scale xF, N scales xF, so confidence/lift are
     // replica-invariant).
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.parquet(spark, s"$src/lineitem.parquet")
     li.crossJoin(reps)
       .select(
         (col("l_orderkey") + col("rep") * maxOrd).as("l_orderkey"),
@@ -128,7 +130,7 @@ object ScaleProbe {
         col("l_shipdate"))
       .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
 
-    val ev = spark.read.parquet(s"$src/events.parquet")
+    val ev = Tables.parquet(spark, s"$src/events.parquet")
     val maxEv = ev.agg(max("event_id")).head().getLong(0) + 1
     val maxUser = ev.agg(max("user_id")).head().getLong(0) + 1
     ev.crossJoin(reps)
@@ -143,7 +145,7 @@ object ScaleProbe {
     // scale with the fact tables — the point of the probe): q87/q89/q90/
     // q91-style dim-joining queries stay runnable against the replica
     for (dim <- Seq("nation", "region", "part", "supplier"))
-      spark.read.parquet(s"$src/$dim.parquet")
+      Tables.parquet(spark, s"$src/$dim.parquet")
         .write.mode("overwrite").parquet(s"$out/$dim.parquet")
 
     println(s"[probe] wrote ${f}x corpus to $out " +

@@ -24,10 +24,12 @@ class BenchSpec extends SparkSpec {
     Map("count at A.scala:1 | map at A.scala:1" -> 1, "collect\tat\u0001B" -> 1))
 
   private def render(results: Map[String, (Double, Double, Double)],
-                     regime: Bench.Regime, anchorProbe: Seq[Double] = Seq(1.0)) =
+                     regime: Bench.Regime, anchorProbe: Seq[Double] = Seq(1.0),
+                     cores: Int = 32) =
     Bench.render(results, reps = 1, sfDir = sfDir, regime = regime,
       episodes = Map.empty, ledger = Map("q1_agg" -> row),
-      anchor = Map("q1_agg" -> 1.0), anchorProbe = anchorProbe)
+      anchor = Map("q1_agg" -> 1.0), anchorProbe = anchorProbe,
+      cores = cores, anchorCores = Some(32))
 
   test("the compact line has a fixed key set; the ledger rides only the full JSON") {
     val results = Map("q1_agg" -> (1.0, 1.5, 0.0), "g2_pagerank" -> (-2.0, 2.5, 0.4))
@@ -73,6 +75,41 @@ class BenchSpec extends SparkSpec {
 
   test("regression flag: a host twice as slow as the anchor's is not a regression") {
     assert(!flagged(wall = 1.5, probe = 2.0))
+  }
+
+  test("regime factor applies only at the anchor's core count; cores ride the full JSON") {
+    val results = Map("q1_agg" -> (1.5, 1.5, 0.0))
+    def read(json: String, k: String) = parse(json).get(k).asDouble
+    // a 4-core run's 32-partition probe reads ~5.5x the 32-core anchor's
+    val (compact4, full4) = render(results, regime(Seq(5.5)), cores = 4)
+    assert(read(full4, "regime_factor") == 1.0 && read(compact4, "regime_factor") == 1.0)
+    assert(parse(full4).get("cores").asInt == 4 && parse(full4).get("anchor_cores").asInt == 32)
+    assert(parse(full4).get("regressed").size == 1, "the 1.5 s reading is not divided by 5.5")
+    val (_, full32) = render(results, regime(Seq(5.5)))
+    assert(read(full32, "regime_factor") == 5.5 && parse(full32).get("cores").asInt == 32)
+    assert(keys(compact4) == keys(render(results, regime(Seq(1.0)))._1),
+      "the compact line's key set does not change")
+  }
+
+  test("a subset run writes no tracked bench_anchors file") {
+    assert(Bench.outputs(fullRun = false, "s") == Seq("/tmp/graft_bench_full.json"))
+    assert(Bench.outputs(fullRun = true, "s") == Seq("/tmp/graft_bench_full.json",
+      "bench_anchors/bench_full_last.json", "bench_anchors/bench_full_s.json"))
+  }
+
+  test("the ledger names AQE stage jobs by their SQL execution, not the pool's call site") {
+    val ledger = new Bench.Ledger(spark.sparkContext)
+    try {
+      import spark.implicits._
+      ledger.open()
+      noop(spark.range(0, 1000, 1, 4).groupBy(($"id" % 7).as("k")).count())
+      val r = ledger.close()
+      assert(r.executions == 1, r)
+      assert(!r.sites.keys.exists(_.contains("withThreadLocalCaptured")), r.sites)
+      assert(r.sites.keys.exists(k => k.startsWith("AQE stage of ") && k.contains("BenchSpec")),
+        r.sites)
+      assert(r.sites.values.sum == r.jobs)
+    } finally spark.sparkContext.removeSparkListener(ledger)
   }
 
   private def noop(df: org.apache.spark.sql.DataFrame): Unit =

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RangeLayout, SparkSpec}
 import graft.sources.Tables
 
 class LayoutSpec extends SparkSpec {
@@ -36,6 +36,19 @@ class LayoutSpec extends SparkSpec {
     assert(p.contains("PushedFilters"), "no pushdown on the re-read")
     assert(p.contains("GreaterThanOrEqual(l_orderkey") || p.contains("l_orderkey"), p.take(800))
     assert(p.contains("l_partkey"), "partkey bound not pushed")
+  }
+
+  test("zorderWrite range-partitions on zval: AQE-sized files with disjoint ascending z-ranges") {
+    val path = java.nio.file.Files.createTempDirectory("graft_z").toString + "/z"
+    val li = Tables.lineitem(spark, sf("sf0.001"))
+    RangeLayout.withoutCoalescing(spark)(
+      Layout.zorderWrite(li, "l_orderkey", "l_partkey", path))
+    val files = RangeLayout.keysByFile[Long](spark, path, "zval")
+    assert(files.size > 1 && RangeLayout.isRangeLayout(files), files.map(_.size))
+    assert(files.map(_.size).sum == li.count())
+    Layout.zorderWrite(li, "l_orderkey", "l_partkey", path)
+    val one = RangeLayout.keysByFile[Long](spark, path, "zval")
+    assert(one.size == 1 && RangeLayout.isRangeLayout(one), one.map(_.size))
   }
 
   test("bloomPruneJoin result is row-identical to the plain join") {

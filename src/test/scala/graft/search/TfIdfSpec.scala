@@ -2,7 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RangeLayout, SparkSpec}
 
 /** Golden TF-IDF tests over a hand-computed mini corpus
   * (FIXTURES.md §B.1 shape). */
@@ -55,7 +55,15 @@ class TfIdfSpec extends SparkSpec {
 
   test("index persists to parquet and round-trips searches exactly") {
     val path = java.nio.file.Files.createTempDirectory("graft_idx").toString + "/idx"
-    TfIdf.writeIndex(p, path, partitions = 2)
+    // with coalescing off every range is a file: term ranges disjoint
+    // and ascending across files, each file term-sorted
+    RangeLayout.withoutCoalescing(spark)(TfIdf.writeIndex(p, path))
+    val files = RangeLayout.keysByFile[String](spark, path, "term")
+    assert(files.size > 1 && RangeLayout.isRangeLayout(files), files)
+    // with the session's confs AQE coalesces a small index to one file
+    TfIdf.writeIndex(p, path)
+    val one = RangeLayout.keysByFile[String](spark, path, "term")
+    assert(one.size == 1 && RangeLayout.isRangeLayout(one), one)
     val back = TfIdf.readIndex(spark, path)
     val a = TfIdf.searchSingle(p, "cat").collect().map(_.toSeq).toSeq
     val b = TfIdf.searchSingle(back, "cat").collect().map(_.toSeq).toSeq
