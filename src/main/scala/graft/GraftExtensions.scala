@@ -4,19 +4,19 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers every graft codegen
-  * kernel as a permanent SQL function at session build, so a deployment
-  * gets the whole surface from config alone —
+/** SparkSessionExtensions entry point and graft's SQL-name surface:
+  * injects every codegen kernel as a permanent SQL function at session
+  * build, so a deployment gets `SELECT graft_vector_dot_exact(a, b)`
+  * from config alone —
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * — and `SELECT graft_vector_dot_exact(a, b)` works from plain
-  * `spark.sql` (and from every session of the application, including
-  * ones the library never sees). The in-library operators keep using
-  * the idempotent per-object `register` calls (temp functions on their
-  * own session), so the library works with OR without the extension;
-  * both paths share one builder per kernel (each object's `injection`)
-  * and therefore cannot drift.
+  * — in every session of the application. [[GraftSession]] installs it
+  * with `withExtensions`. The DataFrame path needs no registration:
+  * each kernel's Column entry point (`VectorDotExact(a, b)`, …) builds
+  * its expression directly from the same `injection` builder this
+  * extension injects, so the two paths share one definition per kernel
+  * and cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

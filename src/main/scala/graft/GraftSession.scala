@@ -8,10 +8,12 @@ object GraftSession {
   /** Local cores: `SPARK_GRAFT_CPUS`, 32 when unset. */
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.trim.toInt)
 
-  /** A builder with the shared confs; add more before `getOrCreate()`. */
+  /** A builder with the shared confs and the [[GraftExtensions]] SQL
+    * functions; add more before `getOrCreate()`. */
   def builder(cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")

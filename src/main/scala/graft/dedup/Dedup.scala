@@ -109,7 +109,6 @@ object Dedup {
     * The delta side is the small side throughout (broadcastable when a
     * day's crawl fits). */
   def nearDupIngest(s: SparkSession, dir: String, minJaccard: Double = 0.5): DataFrame = {
-    graft.functions.SortedIntersectCount.register(s)
     val docs = Tables.documents(s, dir)
     val h = md5(col("text").cast("binary"))
     val corpusHashes = docs.filter(col("doc_id") % 5 =!= 0).select(h.as("h")).distinct()
@@ -569,7 +568,6 @@ object Dedup {
     * odds ~#shingles²/2⁶⁵) so the string-based oracle is unchanged. */
   def lshNearDupsFromBase(base: DataFrame, minJaccard: Double = 0.1,
                           lanes: Option[DataFrame] = None): DataFrame = {
-    graft.functions.SortedIntersectCount.register(base.sparkSession)
     // bands feeds both sides of the candidate self-join
     val bands = lanes.getOrElse(minhashLanesFromShingles(base)).select(col("doc_id"),
       posexplode(array((0 until 8).map(i => col(s"mh$i")): _*)).as(Seq("band", "key")))
@@ -815,7 +813,6 @@ object Dedup {
     * per-hex-digit form ([[simhashSql]]) — md5 is the shared
     * primitive, so the bits agree by construction. */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.Md5NibbleMsbs.register(docs.sparkSession)
     val terms = docs
       .select(col("doc_id"), explode(Tokenize.rawTokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1495,7 +1492,6 @@ object Dedup {
     * back to the memoized 64-bit shingle arrays (array_intersect), as
     * d3 does. */
   def prefixFilterPairs(base: DataFrame): DataFrame = {
-    graft.functions.SortedIntersectCount.register(base.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(asc("df_s"), asc("s"))
     val inv = base.select(col("doc_id"), col("n"), explode(col("shh")).as("s"))

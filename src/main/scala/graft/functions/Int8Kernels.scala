@@ -2,11 +2,10 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Codegen'd kernels for the int8-quantized retrieval path (s8).
@@ -52,11 +51,11 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-object QuantizeInt8 {
+object QuantizeInt8 extends Kernel("graft_quantize_int8", 1) {
   /** One-pass norm + quantize; see class doc for the exact semantics. */
   def quantize(a: ArrayData, aFloat: Boolean): ArrayData = {
     val n = a.numElements()
-    val acc = new Exact16.Sum(FnName)
+    val acc = new Exact16.Sum(name)
     var i = 0
     while (i < n) {
       val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
@@ -81,16 +80,9 @@ object QuantizeInt8 {
     new GenericArrayData(out)
   }
 
-  private val FnName = "graft_quantize_int8"
+  protected def make(a: Seq[Expression]): Expression = QuantizeInt8(a.head)
 
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => QuantizeInt8(KernelArgs.exactly(FnName, 1, exprs).head))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  def apply(a: Column): Column = call_function(FnName, a)
+  def apply(a: Column): Column = column(a)
 }
 
 case class VectorDotLong(left: Expression, right: Expression)
@@ -108,7 +100,7 @@ case class VectorDotLong(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object VectorDotLong {
+object VectorDotLong extends Kernel("graft_vector_dot_long", 2) {
   def dot(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
@@ -120,17 +112,7 @@ object VectorDotLong {
     acc
   }
 
-  private val FnName = "graft_vector_dot_long"
+  protected def make(a: Seq[Expression]): Expression = VectorDotLong(a(0), a(1))
 
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => {
-      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
-      VectorDotLong(a, b)
-    })
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  def apply(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def apply(a: Column, b: Column): Column = column(a, b)
 }

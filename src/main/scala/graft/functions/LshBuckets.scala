@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Codegen'd sign-random-projection LSH bucketer: ALL `l` table buckets
@@ -59,12 +59,12 @@ case class LshBucketsExact(child: Expression, l: Int, p: Int, dims: Int)
     copy(child = c)
 }
 
-object LshBucketsExact {
+object LshBucketsExact extends Kernel("graft_lsh_buckets_exact", 4) {
   /** All `l` bucket values for one vector; see class doc. */
   def buckets(a: ArrayData, aFloat: Boolean, l: Int, p: Int, dims: Int): ArrayData = {
     val n = math.min(dims, a.numElements())
     val out = new Array[Long](l)
-    val acc = new Exact16.Sum(FnName)
+    val acc = new Exact16.Sum(name)
     var t = 0
     while (t < l) {
       var bucket = 0L
@@ -88,26 +88,12 @@ object LshBucketsExact {
     new GenericArrayData(out)
   }
 
-  private val FnName = "graft_lsh_buckets_exact"
+  protected def make(a: Seq[Expression]): Expression = LshBucketsExact(a.head,
+    KernelArgs.positiveInt(name, "l", a(1), Int.MaxValue),
+    KernelArgs.positiveInt(name, "p", a(2), 63),
+    KernelArgs.positiveInt(name, "dims", a(3), Int.MaxValue))
 
-  /** (name, builder) for session-registry or
-    * [[graft.GraftExtensions]] injection. */
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => {
-      val Seq(a, l, p, dims) = KernelArgs.exactly(FnName, 4, exprs)
-      LshBucketsExact(a,
-        KernelArgs.positiveInt(FnName, "l", l, Int.MaxValue),
-        KernelArgs.positiveInt(FnName, "p", p, 63),
-        KernelArgs.positiveInt(FnName, "dims", dims, Int.MaxValue))
-    })
-
-  /** Register in the session's function registry (idempotent) — same
-    * injection seam as [[VectorDotExact.register]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  /** Column-level entry point; caller must have [[register]]ed. */
+  /** Column-level entry point; needs no function registration. */
   def apply(a: Column, l: Int, p: Int, dims: Int): Column =
-    call_function(FnName, a, lit(l), lit(p), lit(dims))
+    column(a, lit(l), lit(p), lit(dims))
 }

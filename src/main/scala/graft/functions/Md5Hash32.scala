@@ -2,10 +2,9 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,7 +43,7 @@ case class Md5Hash32(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-object Md5Hash32 {
+object Md5Hash32 extends Kernel("graft_md5_hash32", 1) {
   private[functions] val digest = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
       MessageDigest.getInstance("MD5")
@@ -59,21 +58,10 @@ object Md5Hash32 {
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
-  private val FnName = "graft_md5_hash32"
+  protected def make(a: Seq[Expression]): Expression = Md5Hash32(a.head)
 
-  /** (name, builder) for session-registry or
-    * [[graft.GraftExtensions]] injection. */
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => Md5Hash32(KernelArgs.exactly(FnName, 1, exprs).head))
-
-  /** Register in the session's function registry (idempotent) — same
-    * injection seam as [[VectorDotExact.register]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  /** Column-level entry point; caller must have [[register]]ed. */
-  def apply(key: Column): Column = call_function(FnName, key)
+  /** Column-level entry point; needs no function registration. */
+  def apply(key: Column): Column = column(key)
 }
 
 /** All 32 md5 nibble MSBs of a string packed into a LONG: bit j is set
@@ -108,7 +96,7 @@ case class Md5NibbleMsbs(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-object Md5NibbleMsbs {
+object Md5NibbleMsbs extends Kernel("graft_md5_nibble_msbs", 1) {
   /** Bit j (0-based, hex-digit order) = MSB of md5 nibble j. Nibble 2b
     * is byte b's HIGH nibble (hex renders high nibble first). */
   def msbs(s: UTF8String): Long = {
@@ -125,14 +113,7 @@ object Md5NibbleMsbs {
     out
   }
 
-  private val FnName = "graft_md5_nibble_msbs"
+  protected def make(a: Seq[Expression]): Expression = Md5NibbleMsbs(a.head)
 
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => Md5NibbleMsbs(KernelArgs.exactly(FnName, 1, exprs).head))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  def apply(key: Column): Column = call_function(FnName, key)
+  def apply(key: Column): Column = column(key)
 }

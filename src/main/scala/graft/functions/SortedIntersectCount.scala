@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Round-17 verification kernel: |a ∩ b| over two SORTED long arrays as
@@ -47,7 +46,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object SortedIntersectCount {
+object SortedIntersectCount extends Kernel("graft_sorted_intersect_count", 2) {
   /** Sorted-merge set-intersection count; see class doc. */
   def count(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
@@ -68,17 +67,15 @@ object SortedIntersectCount {
     c
   }
 
-  private val FnName = "graft_sorted_intersect_count"
+  protected def make(a: Seq[Expression]): Expression = SortedIntersectCount(a(0), a(1))
 
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => {
-      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
-      SortedIntersectCount(a, b)
-    })
-
+  /** Binds the SQL name in `spark`'s own registry, replacing any function
+    * of that name. Only `perfbench/harness` calls it (its kernel
+    * microbenchmark); the library's operators use `apply`, and a session
+    * built with [[graft.GraftExtensions]] already resolves the name. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
+      name, injection._2, "built-in")
 
-  def apply(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def apply(a: Column, b: Column): Column = column(a, b)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd exact dot product over two numeric-vector columns
@@ -54,10 +53,10 @@ case class VectorDotExact(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object VectorDotExact {
+object VectorDotExact extends Kernel("graft_vector_dot_exact", 2) {
   /** Exact decimal-quantized sum of element products; see class doc. */
   def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val acc = new Exact16.Sum(FnName)
+    val acc = new Exact16.Sum(name)
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
@@ -69,24 +68,8 @@ object VectorDotExact {
     acc.toDouble
   }
 
-  private val FnName = "graft_vector_dot_exact"
+  protected def make(a: Seq[Expression]): Expression = VectorDotExact(a(0), a(1))
 
-  /** (name, builder) for session-registry or
-    * [[graft.GraftExtensions]] injection. */
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => {
-      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
-      VectorDotExact(a, b)
-    })
-
-  /** Register in the session's function registry (idempotent) — the
-    * public seam for injecting a custom Expression without touching
-    * `private[sql]` Column internals; production deployments would use
-    * `SparkSessionExtensions.injectFunction` at session build instead. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  /** Column-level entry point; caller must have [[register]]ed. */
-  def apply(a: Column, b: Column): Column = call_function(FnName, a, b)
+  /** Column-level entry point; needs no function registration. */
+  def apply(a: Column, b: Column): Column = column(a, b)
 }

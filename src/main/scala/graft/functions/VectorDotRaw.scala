@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd PLAIN-double dot product — [[VectorDotExact]]'s cheap
@@ -52,7 +51,7 @@ case class VectorDotRaw(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object VectorDotRaw {
+object VectorDotRaw extends Kernel("graft_vector_dot_raw", 2) {
   /** Plain double fold of element products; see class doc. */
   def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
     var acc = 0.0
@@ -67,20 +66,8 @@ object VectorDotRaw {
     acc
   }
 
-  private val FnName = "graft_vector_dot_raw"
+  protected def make(a: Seq[Expression]): Expression = VectorDotRaw(a(0), a(1))
 
-  /** (name, builder) for session-registry or
-    * [[graft.GraftExtensions]] injection. */
-  def injection: (String, Seq[Expression] => Expression) =
-    (FnName, exprs => {
-      val Seq(a, b) = KernelArgs.exactly(FnName, 2, exprs)
-      VectorDotRaw(a, b)
-    })
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, injection._2, "built-in")
-
-  /** Column-level entry point; caller must have [[register]]ed. */
-  def apply(a: Column, b: Column): Column = call_function(FnName, a, b)
+  /** Column-level entry point; needs no function registration. */
+  def apply(a: Column, b: Column): Column = column(a, b)
 }

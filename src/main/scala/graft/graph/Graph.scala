@@ -1969,8 +1969,6 @@ object Graph {
     * per hop; output ≤ |V|·(steps+1) rows. */
   def randomWalks(edges: DataFrame, steps: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = edges.sparkSession
-    graft.functions.Md5Hash32.register(spark)
     val e = edges.select("src", "dst").loopCheckpoint(true)
     // round 16: both per-step joins probe on src — the window already
     // hash-partitions by src, so the checkpoints carry that claim and

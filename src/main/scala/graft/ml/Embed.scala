@@ -69,7 +69,6 @@ object Embed {
     * below minCount) are excluded on both engines — cosine is undefined
     * for them. */
   def w2vKnn(emb: DataFrame, queryId: Long, k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     def norm2(c: org.apache.spark.sql.Column) = VectorDotExact(c, c)
     val q = emb.filter(col("doc_id") === queryId)
       .select(col("emb").as("qe"), norm2(col("emb")).as("qnorm2"))
@@ -141,7 +140,6 @@ object Embed {
                 probes: Seq[(String, String, String)]): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    VectorDotExact.register(spark)
     val p = probes.toDF("a", "b", "c")
     val v = vecs.select(col("word"), col("emb"))
     val tgt = p

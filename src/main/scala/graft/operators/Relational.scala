@@ -110,8 +110,8 @@ object Relational {
   }
 
   def q3JoinAggSql: String =
-    """SELECT n_name,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
+    s"""SELECT n_name,
+      |  ${doubleSql("SUM(CAST(o_totalprice AS DECIMAL(20,4)))")} AS revenue,
       |  COUNT(*) AS n_orders
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |JOIN nation ON c_nationkey = n_nationkey
@@ -130,8 +130,8 @@ object Relational {
   }
 
   def q4BroadcastJoinSql: String =
-    """SELECT p_brand,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
+    s"""SELECT p_brand,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
       |  COUNT(*) AS n_items
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE p_size <= 10
@@ -152,14 +152,14 @@ object Relational {
   }
 
   def q5FullOuterSql: String =
-    """SELECT COALESCE(a.user_id, h.user_id) AS user_id,
+    s"""SELECT COALESCE(a.user_id, h.user_id) AS user_id,
       |       COALESCE(a.event_type, h.event_type) AS event_type,
       |       a.n_all, h.hi_value
       |FROM (SELECT user_id, event_type, COUNT(*) AS n_all
       |      FROM events GROUP BY user_id, event_type) a
       |FULL OUTER JOIN
       |     (SELECT user_id, event_type,
-      |             CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS hi_value
+      |             ${doubleSql("SUM(CAST(value AS DECIMAL(20,4)))")} AS hi_value
       |      FROM events WHERE value > 50 GROUP BY user_id, event_type) h
       |ON a.user_id = h.user_id AND a.event_type = h.event_type
       |ORDER BY user_id, event_type""".stripMargin
@@ -173,8 +173,8 @@ object Relational {
         count(lit(1)).as("n_rows"))
 
   def q6FilterSql: String =
-    """SELECT
-      |  CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,8))) AS DOUBLE) AS revenue,
+    s"""SELECT
+      |  ${doubleSql("SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,8)))")} AS revenue,
       |  COUNT(*) AS n_rows
       |FROM lineitem
       |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin
@@ -243,10 +243,10 @@ object Relational {
   }
 
   def q10WindowSql: String =
-    """SELECT user_id, event_id,
+    s"""SELECT user_id, event_id,
       |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-      |  CAST(SUM(CAST(value AS DECIMAL(20,4))) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
+      |  ${doubleSql("SUM(CAST(value AS DECIMAL(20,4))) OVER (PARTITION BY user_id " +
+             "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")} AS running_value
       |FROM events WHERE user_id < 50
       |ORDER BY user_id, event_id""".stripMargin
 
@@ -308,10 +308,10 @@ object Relational {
       .orderBy("event_type", "bucket")
 
   def q14CaseWhenSql: String =
-    """SELECT event_type,
+    s"""SELECT event_type,
       |  CASE WHEN value < 5 THEN 'low' WHEN value < 15 THEN 'mid' ELSE 'high' END AS bucket,
       |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS total
+      |  ${doubleSql("SUM(CAST(value AS DECIMAL(20,4)))")} AS total
       |FROM events
       |GROUP BY event_type, CASE WHEN value < 5 THEN 'low' WHEN value < 15 THEN 'mid' ELSE 'high' END
       |ORDER BY event_type, bucket""".stripMargin
@@ -349,9 +349,9 @@ object Relational {
       .orderBy("yr", "mo")
 
   def q16DateTimeSql: String =
-    """SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
+    s"""SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
       |  COUNT(*) AS n_orders,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS revenue
+      |  ${doubleSql("SUM(CAST(o_totalprice AS DECIMAL(20,4)))")} AS revenue
       |FROM orders GROUP BY year(o_orderdate), month(o_orderdate)
       |ORDER BY yr, mo""".stripMargin
 
@@ -380,10 +380,10 @@ object Relational {
   }
 
   def q33IncrementalRollupSql: String =
-    """SELECT year(ts) AS yr, month(ts) AS mo, event_type,
+    s"""SELECT year(ts) AS yr, month(ts) AS mo, event_type,
       |  CAST(COUNT(*) AS BIGINT) AS n_events,
-      |  CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value,
-      |  CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS avg_value,
+      |  ${doubleSql("SUM(CAST(value AS DECIMAL(20,4)))")} AS sum_value,
+      |  ${doubleSql("SUM(CAST(value AS DECIMAL(20,4)))")} / COUNT(*) AS avg_value,
       |  CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days
       |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
 
@@ -439,8 +439,8 @@ object Relational {
       .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   def q19RollupSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
       |  COUNT(*) AS n_rows
       |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
@@ -460,8 +460,8 @@ object Relational {
         asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   def q28CubeSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
       |  COUNT(*) AS n_rows,
       |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid
       |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
@@ -482,8 +482,8 @@ object Relational {
       .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   def q35GroupingSetsSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
       |  COUNT(*) AS n_rows
       |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
@@ -577,9 +577,9 @@ object Relational {
       .orderBy("l_returnflag")
 
   def q21PivotSql: String =
-    """SELECT l_returnflag,
-      |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(20,4)) END) AS DOUBLE) AS qty_f,
-      |  CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(20,4)) END) AS DOUBLE) AS qty_o
+    s"""SELECT l_returnflag,
+      |  ${doubleSql("SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(20,4)) END)")} AS qty_f,
+      |  ${doubleSql("SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(20,4)) END)")} AS qty_o
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   /** Wide-to-long unpivot (melt) — the inverse of q21's pivot: per-flag
@@ -603,11 +603,11 @@ object Relational {
       .orderBy("l_returnflag", "metric")
 
   def q46UnpivotSql: String =
-    """WITH wide AS (
+    s"""WITH wide AS (
       |  SELECT l_returnflag,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price,
-      |    CAST(SUM(CAST(l_discount AS DECIMAL(20,4))) AS DOUBLE) AS sum_disc
+      |    ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty,
+      |    ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sum_price,
+      |    ${doubleSql("SUM(CAST(l_discount AS DECIMAL(20,4)))")} AS sum_disc
       |  FROM lineitem GROUP BY l_returnflag)
       |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM wide
       |UNION ALL SELECT l_returnflag, 'sum_price', sum_price FROM wide
@@ -1344,9 +1344,9 @@ object Relational {
   }
 
   def q39RollingSql: String =
-    """SELECT user_id, event_id,
+    s"""SELECT user_id, event_id,
       |  count(*) OVER w AS n_1h,
-      |  CAST(SUM(CAST(value AS DECIMAL(20,4))) OVER w AS DOUBLE) AS sum_1h
+      |  ${doubleSql("SUM(CAST(value AS DECIMAL(20,4))) OVER w")} AS sum_1h
       |FROM (SELECT user_id, event_id, epoch_us(ts) AS us, value
       |      FROM events WHERE user_id < 50)
       |WINDOW w AS (PARTITION BY user_id ORDER BY us
@@ -1388,13 +1388,13 @@ object Relational {
   }
 
   def q40GroupedCorrSql: String =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sx,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sy,
-      |    CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS sxy,
-      |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,8))) AS DOUBLE) AS sxx,
-      |    CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS syy
+      |    ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sx,
+      |    ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sy,
+      |    ${doubleSql("SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8)))")} AS sxy,
+      |    ${doubleSql("SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,8)))")} AS sxx,
+      |    ${doubleSql("SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,8)))")} AS syy
       |  FROM lineitem GROUP BY l_returnflag
       |)
       |SELECT l_returnflag, n,
@@ -1439,13 +1439,13 @@ object Relational {
   }
 
   def q100GroupedOlsSql: String =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sx,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sy,
-      |    CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS sxy,
-      |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,8))) AS DOUBLE) AS sxx,
-      |    CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS syy
+      |    ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sx,
+      |    ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sy,
+      |    ${doubleSql("SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8)))")} AS sxy,
+      |    ${doubleSql("SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,8)))")} AS sxx,
+      |    ${doubleSql("SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,8)))")} AS syy
       |  FROM lineitem GROUP BY l_returnflag
       |)
       |SELECT l_returnflag, n,
@@ -1509,7 +1509,7 @@ object Relational {
   def q42TopkAggSql(k: Int = 5): String =
     s"""WITH s AS (
        |  SELECT event_type, user_id,
-       |    CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
+       |    ${doubleSql("SUM(CAST(value AS DECIMAL(20,4)))")} AS sum_value
        |  FROM events GROUP BY event_type, user_id
        |), r AS (
        |  SELECT event_type, user_id, sum_value,
@@ -1611,8 +1611,8 @@ object Relational {
   }
 
   def q45OrcRoundtripSql: String =
-    """SELECT l_linestatus, count(*) AS n,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
+    s"""SELECT l_linestatus, count(*) AS n,
+      |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty
       |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin
 
   /** q67: distribution-rank windows — ntile decile, percent_rank and
@@ -1712,7 +1712,7 @@ object Relational {
 
   def q70RegionalRevenueSql(region: String = "ASIA", yr: Int = 1996): String =
     s"""SELECT n_name,
-       |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
+       |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)))")} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -1747,7 +1747,7 @@ object Relational {
   def q71ShippingPrioritySql(segment: String = "BUILDING",
                              cutoff: String = "1998-06-30"): String =
     s"""SELECT l_orderkey, CAST(o_orderdate AS DATE) AS odate,
-       |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4))) AS DOUBLE) AS revenue
+       |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)))")} AS revenue
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -1860,7 +1860,7 @@ object Relational {
   def q73BigOrdersSql(minQty: Int = 300): String =
     s"""SELECT c_name, c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS odate,
        |  CAST(o_totalprice AS DOUBLE) AS total_price,
-       |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
+       |  ${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} AS sum_qty
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -1893,7 +1893,7 @@ object Relational {
 
   def q74ReturnedRevenueSql(yr: Int = 1995): String =
     s"""SELECT c_custkey, c_name, n_name,
-       |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
+       |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)))")} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -1943,7 +1943,7 @@ object Relational {
   def q75VolumeShippingSql(natA: String = "NATION_1", natB: String = "NATION_2"): String =
     s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-       |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
+       |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)))")} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -2158,12 +2158,12 @@ object Relational {
        |  WHERE p_brand = '$brand'
        |), thr AS (
        |  SELECT l_partkey AS t_partkey,
-       |    0.2 * (CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*)) AS thr
+       |    0.2 * (${doubleSql("SUM(CAST(l_quantity AS DECIMAL(20,4)))")} / COUNT(*)) AS thr
        |  FROM bl GROUP BY l_partkey
        |)
        |SELECT COUNT(*) AS n_lines,
-       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price,
-       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) / 7.0 AS avg_yearly
+       |  ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} AS sum_price,
+       |  ${doubleSql("SUM(CAST(l_extendedprice AS DECIMAL(20,4)))")} / 7.0 AS avg_yearly
        |FROM bl JOIN thr ON l_partkey = t_partkey
        |WHERE l_quantity < thr""".stripMargin
 
@@ -2249,11 +2249,11 @@ object Relational {
 
   def q84IdleRichCustomersSql(since: String = "2000-01-01"): String =
     s"""WITH thr AS (
-       |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) / COUNT(*) AS thr
+       |  SELECT ${doubleSql("SUM(CAST(c_acctbal AS DECIMAL(20,4)))")} / COUNT(*) AS thr
        |  FROM customer WHERE c_acctbal > 0
        |)
        |SELECT c_nationkey AS cntrycode, COUNT(*) AS numcust,
-       |  CAST(SUM(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) AS totacctbal
+       |  ${doubleSql("SUM(CAST(c_acctbal AS DECIMAL(20,4)))")} AS totacctbal
        |FROM customer CROSS JOIN thr
        |WHERE c_acctbal > thr
        |  AND c_custkey NOT IN (SELECT o_custkey FROM orders
@@ -2334,8 +2334,8 @@ object Relational {
   }
 
   def q86DisjunctiveRevenueSql: String =
-    """SELECT COUNT(*) AS n_lines,
-      |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4))) AS DOUBLE) AS revenue
+    s"""SELECT COUNT(*) AS n_lines,
+      |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)))")} AS revenue
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1 AND 11)
       |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
@@ -2380,8 +2380,8 @@ object Relational {
   def q87NationProfitSql(pattern: String = "bolt"): String =
     s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
        |  COUNT(*) AS n_lines,
-       |  CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)) -
-       |           CAST(round(p_retailprice * l_quantity * 0.1, 4) AS DECIMAL(20,4))) AS DOUBLE) AS sum_profit
+       |  ${doubleSql("SUM(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(20,4)) - " +
+              "CAST(round(p_retailprice * l_quantity * 0.1, 4) AS DECIMAL(20,4)))")} AS sum_profit
        |FROM lineitem
        |JOIN part ON l_partkey = p_partkey
        |JOIN orders ON l_orderkey = o_orderkey
@@ -2580,7 +2580,7 @@ object Relational {
   def q93RevenueChangeSql(from: String = "1995-01-01",
                           until: String = "1996-01-01"): String =
     s"""SELECT
-       |  CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,8))) AS DOUBLE) AS revenue,
+       |  ${doubleSql("SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,8)))")} AS revenue,
        |  COUNT(*) AS n_rows
        |FROM lineitem
        |WHERE l_shipdate >= TIMESTAMP '$from' AND l_shipdate < TIMESTAMP '$until'
@@ -2701,10 +2701,10 @@ object Relational {
   }
 
   def q78BadRecordsSql: String =
-    """SELECT * FROM (
+    s"""SELECT * FROM (
       |  SELECT event_type AS kind, count(*) AS n_rows,
-      |    CAST(COALESCE(SUM(CAST(round(CASE WHEN value IS NULL OR isnan(value) OR isinf(value)
-      |      THEN NULL ELSE value END, 4) AS DECIMAL(20,4))), 0) AS DOUBLE) AS sum_value
+      |    ${doubleSql("COALESCE(SUM(CAST(round(CASE WHEN value IS NULL OR isnan(value) " +
+               "OR isinf(value) THEN NULL ELSE value END, 4) AS DECIMAL(20,4))), 0)")} AS sum_value
       |  FROM events WHERE event_id % 37 != 0 GROUP BY event_type
       |  UNION ALL
       |  SELECT '_corrupt', count(*), 0.0 FROM events WHERE event_id % 37 = 0

@@ -30,8 +30,7 @@ object Sketch {
     * engines (md5 is the only shared hash primitive). Since round 6 the
     * engine side is the codegen'd [[graft.functions.Md5Hash32]] kernel
     * (one digest per row; the Column formulation re-evaluated the md5
-    * subtree once per hex digit — 8×). Callers must have
-    * `Md5Hash32.register`ed the session. */
+    * subtree once per hex digit — 8×). */
   def hash32(key: Column): Column =
     graft.functions.Md5Hash32(key.cast("string"))
 
@@ -49,7 +48,6 @@ object Sketch {
     * here so the query itself exhibits the error being accepted. */
   def kmvDistinct(events: DataFrame, k: Int = K): DataFrame = {
     val spark = events.sparkSession
-    graft.functions.Md5Hash32.register(spark)
     import spark.implicits._
     val est = events.select(col("event_type"), hash32(col("user_id")).as("hv"))
       .as[(String, Long)]
@@ -171,7 +169,6 @@ object Sketch {
     * count_distinct scan+shuffle. */
   def hllDistinct(lineitem: DataFrame, b: Int = 8): DataFrame = {
     val spark = lineitem.sparkSession
-    graft.functions.Md5Hash32.register(spark)
     val m = 1 << b
     val wBits = 32 - b
     val alpha = 0.7213 / (1.0 + 1.079 / m)
@@ -257,8 +254,6 @@ object Sketch {
     * any order. With ~10² users/day the small-range linear-counting
     * branch is the one exercised — the calibration columns show it. */
   def hllWindows(events: DataFrame, b: Int = 8): DataFrame = {
-    val spark = events.sparkSession
-    graft.functions.Md5Hash32.register(spark)
     val m = 1 << b
     val wBits = 32 - b
     val alpha = 0.7213 / (1.0 + 1.079 / m)
@@ -348,7 +343,6 @@ object Sketch {
     // tokenize+count shuffle (map-side combined) feeds the counter
     // build, the top-k, and the probes; sketch-build hashing is
     // O(vocabulary), not O(corpus) — the shape that survives 100 TB.
-    graft.functions.Md5Hash32.register(docs.sparkSession)
     val wordCounts = docs
       .select(explode(graft.text.Tokenize.rawTokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
@@ -415,8 +409,6 @@ object Sketch {
     * fraction of the merged k-minimum present in both sketches (the
     * standard KMV coincidence estimator). */
   def kmvSetOps(docs: DataFrame, k: Int = K): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.Md5Hash32.register(spark)
     // distinct (source, token-hash): the one corpus-scale aggregate
     val h = docs
       .select(col("source"),

@@ -75,14 +75,12 @@ object Similarity {
 
   /** Per-vector squared norm (kept for callers/tests). */
   def norms(emb: DataFrame): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     emb.select(col("vec_id"), norm2Col(col("embedding")).as("norm2"))
   }
 
   /** Brute-force cosine top-k for one query vector: broadcast the single
     * query row, per-row dot+norm, TakeOrdered — zero wide shuffles. */
   def knnBrute(emb: DataFrame, queryId: Long, k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"), norm2Col(col("embedding")).as("qnorm2"))
     emb.filter(col("vec_id") =!= queryId)
@@ -168,7 +166,6 @@ object Similarity {
     * side only. */
   def sq8Recall(emb: DataFrame, queryIds: Seq[Long] = Seq(0L, 1L, 2L),
                 k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val m = aggregate(col("embedding"), lit(0.0d),
       (acc, x) => greatest(acc, abs(x.cast("double"))))
     val qvExpr = transform(col("embedding"), x =>
@@ -289,7 +286,6 @@ object Similarity {
     * 0 through the same guard as s24. */
   def mrlRecall(emb: DataFrame, queryIds: Seq[Long] = Seq(0L, 1L, 2L),
                 dims: Seq[Int] = Seq(8, 16, 32), k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val base = spread(emb).select(col("vec_id"), col("embedding"))
       .loopCheckpoint(true)
     val probes = base.filter(col("vec_id").isin(queryIds: _*))
@@ -365,7 +361,6 @@ object Similarity {
   def mmrRerank(emb: DataFrame, queryId: Long, n: Int = 20, k: Int = 5,
                 lam: Double = 0.7): DataFrame = {
     val spark = emb.sparkSession
-    VectorDotExact.register(spark)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"), norm2Col(col("embedding")).as("qnorm2"))
     val cands = emb.filter(col("vec_id") =!= queryId)
@@ -483,7 +478,6 @@ object Similarity {
     * augmented space, so [[annLsh]]/[[annIvf]] serve as the candidate
     * generators with this exact scorer as the re-rank. */
   def mipsBrute(emb: DataFrame, queryId: Long, k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
     emb.filter(col("vec_id") =!= queryId)
@@ -517,7 +511,6 @@ object Similarity {
     * [[knnBrute]]. */
   def filteredKnn(emb: DataFrame, queryId: Long, labelEq: Int,
                   k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"), norm2Col(col("embedding")).as("qnorm2"))
     emb.filter(col("vec_id") =!= queryId && col("label") === labelEq)
@@ -567,7 +560,6 @@ object Similarity {
     * one expression instead of l·p 64-double literals (which cost
     * s2_ann_lsh ~3.9 s of one-time codegen/JIT; NOTES.md backlog #3). */
   def buckets(emb: DataFrame, l: Int = 4, p: Int = 6): DataFrame = {
-    graft.functions.LshBucketsExact.register(emb.sparkSession)
     // l·p·dims decimal products per row (~1.5k at the defaults) — the
     // spread() regime (see its scaladoc)
     spread(emb).select(col("vec_id"),
@@ -596,7 +588,6 @@ object Similarity {
     * of the L tables; exact per-row cosine re-rank on candidates only. */
   def annLsh(emb: DataFrame, queryId: Long, k: Int = 10,
              l: Int = 4, p: Int = 6): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val b = buckets(emb, l, p)
     val qb = b.filter(col("vec_id") === queryId)
       .select(col("t").as("qt"), col("bucket").as("qbucket"))
@@ -641,7 +632,6 @@ object Similarity {
     * bucket-mates only, never the n² cross join; the per-pair work is
     * exactly one codegen'd dot-product fold. */
   def scoredPairs(emb: DataFrame, p: Int = 6): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     // materialize once — both sides of the pair self-join reuse it
     val b = buckets(emb, l = 1, p = p).select("vec_id", "bucket").loopCheckpoint(true)
     val pairs = b.as("a").join(b.as("b"),
@@ -953,7 +943,6 @@ object Similarity {
   private def ivfFit(emb: DataFrame, queryId: Long, nCentroids: Int,
                      nprobe: Int, fitSampleMod: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    VectorDotExact.register(emb.sparkSession)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val vecs = emb.select(col("vec_id"), col("embedding"),
@@ -1011,7 +1000,6 @@ object Similarity {
                              fitSampleMod: Int): (DataFrame, DataFrame) = {
     val norm = Tables.norm(dir)
     lazy val fitted: (DataFrame, DataFrame) = {
-      VectorDotExact.register(s)
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val emb = Tables.embeddings(s, dir)
@@ -1510,7 +1498,6 @@ object Similarity {
     * O(k)-state no-sort alternative; the window form is the
     * oracle-checkable baseline.) */
   def knnBatch(emb: DataFrame, queryIds: Seq[Long], k: Int = 5): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         norm2Col(col("embedding")).as("qnorm2"))
@@ -1570,7 +1557,6 @@ object Similarity {
     * existing join) and the mined pairs stream straight into a
     * contrastive batch builder. */
   def hardNegatives(emb: DataFrame, queryIds: Seq[Long], k: Int = 5): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qe"), norm2Col(col("embedding")).as("qnorm2"))
@@ -1645,7 +1631,6 @@ object Similarity {
     * Queries whose label has no other member (IDCG=0) guard to 0 with
     * the CASE inside the decimal cast. */
   def ndcgAtK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val zero = java.math.BigDecimal.ZERO.setScale(6)
     val gainArr = array(ndcgGains(k).map(lit): _*)
     val cumArr = array(ndcgCumGains(k).map(lit): _*)
@@ -1755,8 +1740,6 @@ object Similarity {
     * decimal needed in the hot ranking loop, which is exactly the
     * operational win quantization buys. */
   def annInt8(emb: DataFrame, queryId: Long, k: Int = 10): DataFrame = {
-    graft.functions.QuantizeInt8.register(emb.sparkSession)
-    graft.functions.VectorDotLong.register(emb.sparkSession)
     // quantization and ranking both run through codegen'd kernels
     // (Int8Kernels.scala): the previous lambda formulation
     // `transform(e, x => round(x/nrm*127, 0))` was a 64× blowup —
@@ -1818,7 +1801,6 @@ object Similarity {
     * through the engine's exact decimal dot kernel, so the doubles
     * being compared are bit-identical to the oracle's. */
   def centroidAssign(emb: DataFrame): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val cents = labelCentroids(emb)
       .groupBy(col("label").as("clabel"))
       .agg(transform(array_sort(collect_list(struct(col("d"), col("centroid")))),
@@ -1891,7 +1873,6 @@ object Similarity {
     * standard cache posture for iterative ML — same as the Graph loops).
     */
   def kmeans(emb: DataFrame, k: Int = 4, iters: Int = 2): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     // no spread() here: measured SLOWER at the registered k=4 (1.2 →
     // 1.6 s medians — per-row work is k·dims dots, too small to
     // amortize 32-way task overhead at gate scale). s20Index, whose k
@@ -2008,7 +1989,6 @@ object Similarity {
     * assignment is a bounded (vec_id, cluster) frame, well inside the
     * Materialized small-frame policy). */
   def silhouetteFrom(emb: DataFrame, assign: DataFrame): DataFrame = {
-    VectorDotExact.register(emb.sparkSession)
     val base = emb
       .select(col("vec_id"), col("embedding"), norm2Col(col("embedding")).as("norm2"))
       .join(assign, "vec_id")
@@ -2122,7 +2102,6 @@ object Similarity {
     * persisted state end to end. */
   def incrementalAssign(s: SparkSession, dir: String, k: Int = -1,
                         iters: Int = 2, tau: Double = 0.4): DataFrame = {
-    VectorDotExact.register(s)
     // k ≤ 0 → corpus-derived ⌈√n⌉ cells (VERDICT r10: a fixed k=4 makes
     // the "cell-bounded" probe ~n/4 of the corpus per delta row at scale)
     val cells = if (k > 0) k else autoCellsForDir(s, dir)
@@ -2164,8 +2143,6 @@ object Similarity {
   private[graft] def assignDelta(cents: DataFrame, index: DataFrame,
                                  delta: DataFrame, tau: Double,
                                  band: Double = 1e-3): DataFrame = {
-    VectorDotExact.register(delta.sparkSession)
-    graft.functions.VectorDotRaw.register(delta.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(asc("dist2"), asc("cid"))
     val assigned = delta.crossJoin(broadcast(cents))
@@ -2214,7 +2191,6 @@ object Similarity {
     val centsPath = graft.sources.Artifacts.path(s"s20_cents_k${k}_${Tables.norm(dir)}")
     val indexPath = graft.sources.Artifacts.path(s"s20_index_k${k}_${Tables.norm(dir)}")
     graft.plans.Materialized(s, s"s20_artifact:k$k:${Tables.norm(dir)}") {
-      VectorDotExact.register(s)
       // repartition for the same reason as the delta side: the Lloyd
       // assignment is n·k exact-decimal dots and the corpus arrives as
       // 1-2 file partitions — localCheckpoint pins whatever layout it
@@ -2389,7 +2365,6 @@ object Similarity {
     * end. */
   def cellOccupancy(s: SparkSession, dir: String, k: Int = -1,
                     iters: Int = 2): DataFrame = {
-    VectorDotExact.register(s)
     val cells = if (k > 0) k else autoCellsForDir(s, dir)
     val (_, index) = s20Index(s, dir, cells, iters)
     index.groupBy("cid").agg(count(lit(1)).as("n_vectors"))
@@ -2417,7 +2392,6 @@ object Similarity {
     * both generations from the raw table. */
   def ingestMerge(s: SparkSession, dir: String, k: Int = -1,
                   iters: Int = 2, tau: Double = 0.4): DataFrame = {
-    VectorDotExact.register(s)
     val cells = if (k > 0) k else autoCellsForDir(s, dir)
     val (_, index) = s20Index(s, dir, cells, iters)
     val admitted = incrementalAssign(s, dir, k, iters, tau)
@@ -2501,7 +2475,6 @@ object Similarity {
     * subvector frame, final centroids, per-vector codes). */
   private def pqFit(emb: DataFrame, m: Int, kc: Int, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    VectorDotExact.register(emb.sparkSession)
     val sw = Dims / m
     val subs = (0 until m).map(j =>
       struct(lit(j.toLong).as("sub"), slice(col("embedding"), j * sw + 1, sw).as("sv")))
@@ -2603,7 +2576,6 @@ object Similarity {
   /** s15 serving path over the memoized fit. Same output as [[annPq]]. */
   def annPqServed(s: SparkSession, dir: String, queryId: Long, k: Int = 10,
                   m: Int = 8, kc: Int = 8, iters: Int = 2): DataFrame = {
-    VectorDotExact.register(s)
     val (cents, codes) = cachedPqFit(s, dir, m, kc, iters)
     val lut = pqLutFromCents(cents,
       querySubVectors(Tables.embeddings(s, dir), queryId, m))
@@ -2758,7 +2730,6 @@ object Similarity {
                         k: Int = 10, shortlist: Int = 50, m: Int = 8,
                         kc: Int = 8, iters: Int = 2, nCentroids: Int = 16,
                         nprobe: Int = 4): DataFrame = {
-    VectorDotExact.register(s)
     val emb = Tables.embeddings(s, dir)
     val (assignedIds, centDf) = cachedIvfParts(s, dir, nCentroids, 4)
     val qrow = emb.filter(col("vec_id") === queryId)
@@ -2779,7 +2750,6 @@ object Similarity {
     * because raw floats are only read for `shortlist` rows/query). */
   def warmTwoStageIndex(s: SparkSession, dir: String, m: Int = 8, kc: Int = 8,
                         iters: Int = 2, nCentroids: Int = 16): Unit = {
-    VectorDotExact.register(s)
     val (assignedIds, _) = cachedIvfParts(s, dir, nCentroids, 4)
     assignedIds.write.mode("overwrite").parquet(s"$ivf2sBase/assign")
     cachedPqFit(s, dir, m, kc, iters) // warm the codebook/codes memo
@@ -2798,7 +2768,6 @@ object Similarity {
                            k: Int = 10, shortlist: Int = 50, m: Int = 8,
                            kc: Int = 8, iters: Int = 2, nCentroids: Int = 16,
                            nprobe: Int = 4): DataFrame = {
-    VectorDotExact.register(s)
     val emb = Tables.embeddings(s, dir)
     val (_, centDf) = cachedIvfParts(s, dir, nCentroids, 4)
     val qrow = emb.filter(col("vec_id") === queryId)

@@ -31,7 +31,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("registered SQL function graft_vector_dot_exact is callable from spark.sql") {
-    graft.functions.VectorDotExact.register(spark)
     import spark.implicits._
     Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
       .createOrReplaceTempView("vecs_v")

@@ -209,9 +209,6 @@ class Exact16Spec extends SparkSpec {
   // ---- named errors through SQL ----
 
   test("a NaN or infinite element product fails with an error naming the function and element") {
-    VectorDotExact.register(spark)
-    LshBucketsExact.register(spark)
-    QuantizeInt8.register(spark)
     val schema = StructType(Seq(
       StructField("a", ArrayType(DoubleType)), StructField("f", ArrayType(FloatType))))
     // an RDD source, so the projection runs as generated code in a task

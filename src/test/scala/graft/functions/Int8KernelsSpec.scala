@@ -8,8 +8,6 @@ class Int8KernelsSpec extends SparkSpec {
   import spark.implicits._
 
   test("QuantizeInt8 matches the explicit norm+round formulation") {
-    QuantizeInt8.register(spark)
-    VectorDotExact.register(spark)
     val df = Seq(
       (1L, Array(3.0f, 4.0f)),             // norm 5 → (76.2, 101.6) → (76, 102)
       (2L, Array(-1.0f, 1.0f)),            // ±127/√2 = ±89.80 → (-90, 90)
@@ -31,7 +29,6 @@ class Int8KernelsSpec extends SparkSpec {
   }
 
   test("QuantizeInt8: all-zero vector quantizes to the zero code vector") {
-    QuantizeInt8.register(spark)
     // norm 0 → x/nrm is NaN; the kernel must emit zeros, not throw
     // (ADVICE r5: BigDecimal.valueOf(NaN) crashed the whole s8 query)
     val got = Seq((1L, Array(0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
@@ -41,7 +38,6 @@ class Int8KernelsSpec extends SparkSpec {
   }
 
   test("VectorDotLong: plain integer multiply-accumulate") {
-    VectorDotLong.register(spark)
     val d = Seq((Array(1L, -2L, 3L), Array(4L, 5L, -6L)))
       .toDF("a", "b")
       .select(VectorDotLong(col("a"), col("b")))
@@ -50,8 +46,6 @@ class Int8KernelsSpec extends SparkSpec {
   }
 
   test("int8 kernels participate in whole-stage codegen") {
-    QuantizeInt8.register(spark)
-    VectorDotLong.register(spark)
     // range source (not a foldable local relation) so the projection
     // actually plans inside a WholeStageCodegen stage
     val df = spark.range(4)

@@ -9,8 +9,6 @@ class LshBucketsSpec extends SparkSpec {
   import spark.implicits._
 
   test("LshBucketsExact reproduces the literal-plane formulation exactly") {
-    LshBucketsExact.register(spark)
-    VectorDotExact.register(spark)
     val l = 4
     val p = 6
     val dims = 64

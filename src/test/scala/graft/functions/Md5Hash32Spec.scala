@@ -8,7 +8,6 @@ class Md5Hash32Spec extends SparkSpec {
   import spark.implicits._
 
   test("Md5Hash32 equals the first-8-hex-digits-of-md5 Column formulation") {
-    Md5Hash32.register(spark)
     val keys = (Seq("", "a", "hello world", "0", "-17", "3:token",
       "élève unicode 中文") ++
       (0 until 200).map(i => s"key_$i")).toDF("k")
@@ -29,7 +28,6 @@ class Md5Hash32Spec extends SparkSpec {
   }
 
   test("Md5NibbleMsbs equals the 32 per-hex-digit substring probes") {
-    Md5NibbleMsbs.register(spark)
     val keys = (Seq("", "a", "the", "zebra", "中文 token") ++
       (0 until 200).map(i => s"term_$i")).toDF("k")
     val hex = md5(col("k").cast("binary"))
@@ -45,7 +43,6 @@ class Md5Hash32Spec extends SparkSpec {
   }
 
   test("Md5Hash32 hashes non-string keys through their string form") {
-    Md5Hash32.register(spark)
     val viaLong = Seq(12345L).toDF("k")
       .select(graft.operators.Sketch.hash32(col("k"))).head().getLong(0)
     val viaString = Seq("12345").toDF("k")

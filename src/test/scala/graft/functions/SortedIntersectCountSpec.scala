@@ -10,7 +10,6 @@ class SortedIntersectCountSpec extends SparkSpec {
 
   test("counts match size(array_intersect) on sorted arrays") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
     val rows = Seq(
       (Seq(1L, 2L, 3L), Seq(2L, 3L, 4L)),          // overlap
       (Seq(1L, 2L), Seq(3L, 4L)),                  // disjoint
@@ -29,7 +28,6 @@ class SortedIntersectCountSpec extends SparkSpec {
 
   test("kernel agrees with array_intersect over the real shingle build") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
     // sorted 64-bit hash sets the way dedupShared builds them
     val docs = Seq((1L, "a b c d e f"), (2L, "c d e f g h"), (3L, "x y z w q r"))
       .toDF("doc_id", "text")

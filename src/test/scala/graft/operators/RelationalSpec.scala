@@ -453,9 +453,8 @@ class RelationalSpec extends SparkSpec {
   test("GraftExtensions injects vector_dot_exact via SparkSessionExtensions") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.GraftExtensions().apply(ext)
-    // builder wired: construct the expression through a real session that
-    // has the function registered via the library seam and evaluate it
-    graft.functions.VectorDotExact.register(spark)
+    // builder wired: the Column entry point builds its expression with the
+    // same builder the extension injects; evaluate it
     import spark.implicits._
     val d = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
       .select(graft.functions.VectorDotExact(org.apache.spark.sql.functions.col("a"),

@@ -33,7 +33,6 @@ class IncrementalAssignSpec extends SparkSpec {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("assignDelta literal fixture: fates, asc(cid) tie-break, cell-bounded probe") {
-    VectorDotExact.register(spark)
     // two unit centroids; ALL corpus mass deliberately binned in cell 10,
     // so cell 0 is empty — a delta row assigned there must come out
     // admitted even when a cosine-identical corpus vector exists in the
@@ -126,7 +125,6 @@ class IncrementalAssignSpec extends SparkSpec {
   }
 
   test("band-gated near-dup equals the all-exact path at and around the band edges") {
-    VectorDotExact.register(spark)
     // one unit centroid / one corpus vector on the x-axis: a delta
     // vector's cosine against the corpus is its x-component over its
     // norm, so fixture cosines land where we put them. tau = 0.5,

@@ -239,7 +239,6 @@ class SimilaritySpec extends SparkSpec {
   test("VectorDotExact equals the oracle's exact decimal SUM bit-for-bit") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.VectorDotExact.register(spark)
     // reference: explode + decimal SUM aggregate — Spark's sum over
     // DECIMAL(32,16) keeps scale 16 exactly, matching the DuckDB oracles
     // (unlike a per-row fold, whose Add chain drops to scale 15)
